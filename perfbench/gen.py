@@ -9,7 +9,11 @@ defects injected into it, and from that list the expected output:
   foreign-key orphans, ``NA`` missing values). Expected: the report's
   (table, code, field, count) set and each table's row count.
 - ``release_increment``: a lineitem-shaped frame in three splits.
-  Expected: each split's row count, quantity sum and key checksum.
+  Expected: each split's row count, quantity sum and key checksum. Also
+  a document corpus for the near-dedup layers that this workload's
+  traced run measures: random word documents plus seeded clusters of
+  near-copies (one word replaced). Expected: the ids near-dedup keeps
+  (the lowest id of each cluster and every singleton).
 
 The expected outputs are derived from the generator's own bookkeeping,
 never from the program under test.
@@ -32,9 +36,16 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 # input sizes: the CSV package's orders (lineitem has 1-7 lines per
-# order, 4 on average) and the release frame's rows
-N_ORDERS = 8_000
-N_RELEASE_ROWS = 200_000
+# order, 4 on average; smaller than sf0.1 so that a run fits enough
+# warm-up ops, see WARMUP.md); the release frame's rows, as many as
+# sf0.1 lineitem; and the near-dedup corpus (smaller than the 5,000
+# sf0.1 documents so that a traced run ends in time)
+N_ORDERS = 20_000
+N_RELEASE_ROWS = 600_000
+N_DOCS = 1_000
+DOC_FILES = 8
+DOC_WORDS = 60
+SHINGLE_K = 3  # near_dedup's default shingle length, in words
 
 STATUS = np.array(["F", "O", "P"])
 PRIORITY = np.array(
@@ -316,6 +327,76 @@ def release(out: str, seed: int, n_rows: int) -> dict:
     }
 
 
+def shingle_set(text: str, k: int = SHINGLE_K) -> set[str]:
+    """k-word shingles of a lower-case, single-spaced text."""
+    toks = text.split()
+    return {" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
+
+
+def jaccard(a: str, b: str) -> float:
+    sa, sb = shingle_set(a), shingle_set(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+def documents(out: str, seed: int, n_docs: int) -> dict:
+    """Random 60-word documents over a 4,000-word vocabulary, about 5% of
+    them in clusters of 2-4 near-copies of one base document (one word
+    replaced per copy: Jaccard about 0.9 to the base, 0.8 between two
+    copies, far above 0.5). Two unrelated documents share almost no
+    3-word shingle, so the kept set is exact: the lowest id of each
+    cluster and every singleton."""
+    rng = np.random.default_rng([seed, 5])
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+    vocab = sorted({"".join(rng.choice(letters, int(rng.integers(3, 9))))
+                    for _ in range(4_000)})
+    vocab = np.array(vocab)
+    sizes = []
+    while sum(sizes) < n_docs // 20:
+        sizes.append(int(rng.integers(2, 5)))
+    n_single = n_docs - sum(sizes)
+    words = []
+    clusters = []
+    for size in sizes:
+        base = vocab[rng.integers(0, len(vocab), DOC_WORDS)]
+        members = [len(words)]
+        words.append(base)
+        for _ in range(size - 1):
+            copy = base.copy()
+            at = int(rng.integers(0, DOC_WORDS))
+            while copy[at] == base[at]:
+                copy[at] = vocab[rng.integers(0, len(vocab))]
+            members.append(len(words))
+            words.append(copy)
+        clusters.append(members)
+    for _ in range(n_single):
+        words.append(vocab[rng.integers(0, len(vocab), DOC_WORDS)])
+    ids = rng.permutation(n_docs).astype(np.int64) + 1  # doc k gets ids[k]
+    text = [" ".join(w) for w in words]
+    order = np.argsort(ids)
+    table = pa.table({"doc_id": ids[order],
+                      "text": pa.array([text[k] for k in order])})
+    # a sharded corpus: each file is its own scan split, so the scan
+    # spreads over the cores (one small file would be one task)
+    os.makedirs(os.path.join(out, "documents"))
+    step = -(-n_docs // DOC_FILES)
+    for k in range(DOC_FILES):
+        pq.write_table(table.slice(k * step, step),
+                       os.path.join(out, "documents", f"part-{k}.parquet"))
+    dropped = []  # [dropped id, id of the cluster's kept document]
+    for members in clusters:
+        keep = min(members, key=lambda k: ids[k])
+        dropped += [[int(ids[k]), int(ids[keep])] for k in members
+                    if k != keep]
+    gone = {d for d, _ in dropped}
+    return {
+        "documents": "documents",
+        "docs": n_docs,
+        "clusters": len(clusters),
+        "kept": sorted(int(i) for i in ids if int(i) not in gone),
+        "dropped": sorted(dropped),
+    }
+
+
 def generate(workload: str, seed: int, out: str) -> dict:
     """Write ``workload``'s inputs under ``out``; return the inputs record
     (also written to ``out/inputs.json``)."""
@@ -324,6 +405,7 @@ def generate(workload: str, seed: int, out: str) -> dict:
         rec = validation_csv(out, seed, N_ORDERS)
     elif workload == "release_increment":
         rec = release(out, seed, N_RELEASE_ROWS)
+        rec["dedup"] = documents(out, seed, N_DOCS)
     else:
         raise ValueError(f"unknown workload {workload!r}")
     rec = {"workload": workload, "seed": seed, **rec}

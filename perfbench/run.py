@@ -13,29 +13,42 @@ as a failed op and never stops the run.
 
 ``--trace 0`` measures the end-to-end metrics with tracing off:
 
-- ``setup_s``: median of three fresh session starts (``gt.get_spark``,
-  which launches the JVM each time) plus the workload's program-side
-  set-up, run once, on the last session.
-- ``op_p50_s``: median wall seconds of the ops timed for ``--seconds``
-  (at least ``MIN_TIMED_OPS`` of them) after a fixed number of untimed
-  warm-up ops (see ``WARMUP.md``).
+- ``setup_s``: median of ``SETUPS`` fresh session starts
+  (``gt.get_spark``, which launches the JVM each time) plus the
+  workload's program-side set-up, run once, on the last session.
+- ``op_cpu_s``: median CPU seconds (the JVM plus its Python workers,
+  from ``/proc``) of a fixed range of ops: after the first op, the
+  workload's ``warmup_ops`` untimed ops, then its ``timed_ops`` timed
+  ones (see ``WARMUP.md``), so every run and every commit is measured at
+  the same point of the warm-up curve. If those ops end before
+  ``--seconds`` have passed, more ops run until then; they are checked
+  but feed no metric.
 
-Four more are printed but carry no bound, because on a shared 4-core host
-their spread over ten seeded runs reached a quarter of their median or
-more (``--trace 1`` reports them as ``untraced.*``): ``first_op_s``, the
-first op on the cold JVM of the last session; ``rows_per_s``, input rows
-times timed ops over their total wall time; ``op_cpu_s``, the median CPU
-seconds of the timed ops (JVM plus its Python workers, from ``/proc``);
-``peak_rss_mb``, peak resident memory of the JVM plus this process.
+Four more are printed but carry no bound (``--trace 1`` reports them as
+``untraced.*``): ``op_p50_s``, the median wall seconds of the same timed
+ops; ``first_op_s``, the first op on the cold JVM of the last session;
+``rows_per_s``, input rows times timed ops over their total wall time;
+``peak_rss_mb``, peak resident memory of the JVM plus this process. On a
+4-core host shared with other guests, wall times follow how much CPU the
+other guests take: over ten seeded runs the spread of ``op_p50_s`` on
+``release_increment`` reached a third of its median, while that of
+``op_cpu_s`` stayed within an eighth and its median moved 1% between two
+sets of runs.
 
-``--trace 1`` repeats that untraced measurement with one session, then
-starts a session with Spark's event log on, times the same ops again
-(each session's timed window is half of ``--seconds``), calls each
-layer's public functions one after another (``workloads.*.phases``), and
-prints the per-layer metrics
-``<layer>.<phase>.<quantity>`` plus ``trace.overhead_s``,
-``trace.coverage`` and the ``untraced.*`` numbers of its untraced
-session.
+``--trace 1`` runs one untraced session, then one with Spark's event
+log on, both on a shorter schedule (``TRACE_WARMUP_OPS`` untimed and
+``TRACE_TIMED_OPS`` timed ops after the first) so that the run fits in
+the time one run may take; then it calls each layer's public functions
+one after another (``workloads.*.phases``) ``PHASE_PASSES`` times, and
+prints the per-layer metrics ``<layer>.<phase>.<quantity>`` plus
+``trace.overhead_s`` (traced minus untraced median op wall over that
+schedule), ``trace.coverage`` (the walls of a pass's phases over the
+wall of one whole op run at the end of the same pass, median over the
+passes) and the ``untraced.*`` numbers of its untraced session. The
+phase passes call serially what ``validate_package`` overlaps on thread
+pools (tables, key and foreign-key checks), so a phase's ``wall_s`` is
+its cost when it runs alone, not its share of the op, and
+``trace.coverage`` can exceed 1.
 
 The launcher pins the session: ``SPARK_GRAFT_CPUS`` to the cores this
 process may use, ``SPARK_GRAFT_DRIVER_MEM`` to a heap that fits the
@@ -69,15 +82,18 @@ import procstat  # noqa: E402
 import spantrace  # noqa: E402
 from workloads import WORKLOADS  # noqa: E402
 
-SETUPS = 3  # session starts per run; setup_s is their median
-MIN_TIMED_OPS = 4
-PHASE_PASSES = 3  # traced layer-by-layer passes; per-layer values are medians
+SETUPS = 2  # session starts per run; setup_s is their median
+# the shorter schedule of both sessions of a --trace 1 run, which must
+# also fit in the time a run may take
+TRACE_WARMUP_OPS = 1
+TRACE_TIMED_OPS = 2
+PHASE_PASSES = 2  # traced layer-by-layer passes; per-layer values are medians
 
-END_TO_END = {"setup_s": "s", "op_p50_s": "s"}
+END_TO_END = {"setup_s": "s", "op_cpu_s": "s"}
 # measured and printed by every run, but too spread from run to run on a
 # shared host to carry a bound; --trace 1 reports the untraced session's
 # values as untraced.<name>
-UNBOUNDED = {"first_op_s": "s", "rows_per_s": "1/s", "op_cpu_s": "s",
+UNBOUNDED = {"op_p50_s": "s", "first_op_s": "s", "rows_per_s": "1/s",
              "peak_rss_mb": "MB"}
 
 # per-layer metrics: phase -> quantities beyond QUANTITY_UNITS
@@ -85,6 +101,8 @@ PHASES = {
     "schema.load": {},
     "sources.scan": {"input_mb": "MB", "rows": "count"},
     "parsers.parse": {},
+    # sample_jobs: jobs of a CollectLimit execution (a violated check's
+    # value sample) in the span, from the event log
     "validate.table": {"checks_violated": "count", "sample_jobs": "count"},
     "checks.keys.pk": {},
     "checks.keys.fk": {"orphan_keys": "count"},
@@ -92,6 +110,11 @@ PHASES = {
     "pipeline.publish": {"output_mb": "MB", "parts_rewritten": "count",
                          "parts_reused": "count"},
     "pipeline.readback": {"input_mb": "MB"},
+    "dedup.signatures": {},
+    "dedup.candidates": {"pairs": "count"},
+    "dedup.verify": {"pairs": "count", "yield": "ratio"},
+    "dedup.antijoin": {"rows_out": "count"},
+    "cacheutil.release": {"frames": "count"},
 }
 QUANTITY_UNITS = {"wall_s": "s", "cpu_s": "s", "jobs": "count",
                   "tasks": "count", "shuffle_write_mb": "MB",
@@ -196,6 +219,7 @@ class Measurement:
         self.program_setup = 0.0  # the workload's set-up on the last one
         self.ops: list[Op] = []
         self.first: Op | None = None
+        self.warmup = 0  # untimed ops between the first and the timed ones
         self.timed: list[Op] = []
         self.timed_wall = 0.0
         self.rss_mb = 0.0
@@ -226,10 +250,12 @@ def start_session(wl, m: Measurement, submit_args: str | None = None,
 
 
 def measure(wl, seconds: float, sess: Session, m: Measurement,
-            wrap=None) -> None:
-    """First op, untimed warm-up ops, then ops for ``seconds``.
+            warmup: int, timed: int, wrap=None) -> None:
+    """First op, ``warmup`` untimed ops, ``timed`` timed ones, then more
+    ops, untimed, until ``seconds`` have passed since the first timed op.
     ``wrap(i)`` gives a context manager put around each timed op."""
     i = 0
+    m.warmup = warmup
 
     def one(timed: bool) -> Op:
         nonlocal i
@@ -245,14 +271,15 @@ def measure(wl, seconds: float, sess: Session, m: Measurement,
         return op
 
     m.first = one(False)
-    for _ in range(wl.warmup_ops):
+    for _ in range(warmup):
         one(False)
     start = time.perf_counter()
-    while (time.perf_counter() - start < seconds
-           or len(m.timed) < MIN_TIMED_OPS):
+    for _ in range(timed):
         m.timed.append(one(True))
     m.timed_wall = sum(o.wall for o in m.timed)
     m.rss_mb = procstat.peak_rss_mb(sess.pid) + procstat.peak_rss_mb()
+    while time.perf_counter() - start < seconds:
+        one(False)
 
 
 def session_facts(spark) -> dict:
@@ -271,7 +298,9 @@ def session_facts(spark) -> dict:
 
 def end_to_end(wl, m: Measurement) -> dict:
     p50 = statistics.median(o.wall for o in m.timed)
-    log(f"timed ops: {len(m.timed)} (op_p50_s is their median)")
+    log(f"timed ops: {len(m.timed)}, ops {m.warmup + 1}.."
+        f"{m.warmup + len(m.timed)} (op_cpu_s and op_p50_s are their "
+        "medians)")
     return {
         "setup_s": statistics.median(m.sessions) + m.program_setup,
         "first_op_s": m.first.wall,
@@ -282,7 +311,13 @@ def end_to_end(wl, m: Measurement) -> dict:
     }
 
 
-def run_untraced(wl, seconds: float, setups: int) -> tuple[Measurement, dict]:
+def run_untraced(wl, seconds: float, setups: int = SETUPS,
+                 warmup: int | None = None,
+                 timed: int | None = None) -> tuple[Measurement, dict]:
+    """``setups`` session starts, then the workload's op schedule (or
+    ``warmup`` and ``timed``) on the last session."""
+    warmup = wl.warmup_ops if warmup is None else warmup
+    timed = wl.timed_ops if timed is None else timed
     m = Measurement()
     for _ in range(setups - 1):
         start_session(wl, m, program_setup=False).stop()
@@ -290,30 +325,35 @@ def run_untraced(wl, seconds: float, setups: int) -> tuple[Measurement, dict]:
     try:
         facts = session_facts(wl.spark)
         log("session: " + json.dumps(facts, sort_keys=True))
-        measure(wl, seconds, sess, m)
+        measure(wl, seconds, sess, m, warmup, timed)
     finally:
         sess.stop()
     return m, end_to_end(wl, m)
 
 
 def run_traced(wl, seconds: float, work: str) -> tuple[Measurement, dict]:
-    """Untraced timing, then the traced session: the same timed ops inside
-    ``op`` spans, then ``PHASE_PASSES`` layer-by-layer passes. The two
-    sessions split ``seconds`` between their timed windows."""
-    seconds /= 2
-    m0, untraced = run_untraced(wl, seconds, setups=1)
+    """An untraced session, then the traced one: the same op schedule
+    (``TRACE_WARMUP_OPS``, ``TRACE_TIMED_OPS``), its timed ops inside
+    ``op`` spans, then ``PHASE_PASSES`` layer-by-layer passes."""
+    m0, untraced = run_untraced(wl, seconds, 1, TRACE_WARMUP_OPS,
+                                TRACE_TIMED_OPS)
     log_dir = os.path.join(work, "eventlog")
     os.makedirs(log_dir)
     tracer = spantrace.Tracer()
     m = Measurement()
     sess = start_session(wl, m, spantrace.event_log_submit_args(log_dir))
     try:
-        measure(wl, seconds, sess, m, wrap=lambda i: tracer.span("op"))
+        measure(wl, seconds, sess, m, TRACE_WARMUP_OPS, TRACE_TIMED_OPS,
+                wrap=lambda i: tracer.span("op"))
         for k in range(PHASE_PASSES):
             t0 = time.perf_counter()
             try:
                 with tracer.span("pass"):
                     problems = wl.phases(tracer)
+                    # the whole op at the same point of the warm-up curve,
+                    # the reference of trace.coverage
+                    with tracer.span("pass.op"):
+                        problems += run_op(wl, k, sess.pid).problems
             except Exception as exc:  # counted like a failed op
                 traceback.print_exc(file=sys.stderr)
                 problems = [f"raised {type(exc).__name__}: {exc}"]
@@ -351,16 +391,24 @@ def per_layer(wl, tracer: spantrace.Tracer, jobs: list,
         if name in TRACE_METRICS:
             continue
         phase, q = name.rsplit(".", 1)
-        key = {"rows": "input_rows"}.get(q, q)
+        key = {"rows": "input_rows",
+               "sample_jobs": "collect_limit_jobs"}.get(q, q)
         vals = [bp[phase].get(key, 0) for bp in by_pass if phase in bp]
         out[name] = statistics.median(vals) if vals else 0
     covered = [
-        sum(bp[ph]["wall_s"] for ph in bp if ph not in wl.probes)
+        sum(bp[ph]["wall_s"] for ph in bp
+            if ph not in wl.probes and ph not in wl.side)
         for bp in by_pass
     ]
+    whole = [s.end - s.start for s in tracer.spans if s.name == "pass.op"]
     out["trace.overhead_s"] = traced_p50 - untraced_p50
-    out["trace.coverage"] = statistics.median(covered) / traced_p50
+    out["trace.coverage"] = statistics.median(
+        c / w for c, w in zip(covered, whole))
     log(f"traced op p50 {traced_p50:.3f} s, untraced {untraced_p50:.3f} s")
+    if out["trace.coverage"] > 1:
+        log(f"trace.coverage {out['trace.coverage']:.3f} > 1: the phase "
+            "passes run serially what the op overlaps, so phase walls are "
+            "costs alone, not shares of the op")
     return out
 
 
@@ -429,7 +477,7 @@ def main() -> int:
             m, metrics = run_traced(wl, args.seconds, work)
             units = per_layer_units()
         else:
-            m, metrics = run_untraced(wl, args.seconds, SETUPS)
+            m, metrics = run_untraced(wl, args.seconds)
             units = END_TO_END
     log(f"loadavg end: {os.getloadavg()}")
     log(f"host CPU steal during the run: {procstat.cpu_steal(steal0):.1%}")

@@ -11,6 +11,11 @@ actions record ``count at NativeMethodAccessorImpl.java:0``.
 The event log is switched on from outside the program, through
 ``PYSPARK_SUBMIT_ARGS`` (:func:`event_log_submit_args`), uncompressed
 and non-rolling, so the UI can stay off.
+
+Each job also carries the root operator of the SQL execution that
+submitted it (``CollectLimit`` for a ``df.limit(n).collect()``), read
+from the execution's physical plan in the same log, so a phase can count
+the jobs of one kind it submitted.
 """
 
 from __future__ import annotations
@@ -18,11 +23,24 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 MB = 1024.0 * 1024.0
+SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
+# first operator of a physical plan, past the AdaptiveSparkPlan wrapper
+_ROOT_OP = re.compile(r"^(?:\+- )?(?:\*(?:\(\d+\))? )?(\w+)", re.M)
+
+
+def plan_root(plan: str) -> str:
+    """Name of the root operator of a physical plan description."""
+    for m in _ROOT_OP.finditer(plan):
+        if m.group(1) != "AdaptiveSparkPlan":
+            return m.group(1)
+    return ""
+
 
 def event_log_submit_args(log_dir: str) -> str:
     """``PYSPARK_SUBMIT_ARGS`` that turn on a plain event log in ``log_dir``."""
@@ -72,6 +90,7 @@ class Job:
     input_mb: float = 0.0
     input_rows: int = 0
     output_mb: float = 0.0
+    root_op: str = ""  # root operator of the job's SQL execution
 
 
 def read_event_log(log_dir: str) -> list[Job]:
@@ -83,12 +102,19 @@ def read_event_log(log_dir: str) -> list[Job]:
         raise RuntimeError(f"expected one finished event log, found {paths}")
     jobs: dict[int, Job] = {}
     stage_job: dict[int, Job] = {}
+    roots: dict[str, str] = {}  # SQL execution id -> root operator
     with open(paths[0]) as fh:
         for line in fh:
             ev = json.loads(line)
             kind = ev["Event"]
-            if kind == "SparkListenerJobStart":
-                job = Job(ev["Submission Time"] / 1000.0)
+            if kind == SQL_START:
+                roots[str(ev["executionId"])] = plan_root(
+                    ev.get("physicalPlanDescription", ""))
+            elif kind == "SparkListenerJobStart":
+                exec_id = (ev.get("Properties") or {}).get(
+                    "spark.sql.execution.id")
+                job = Job(ev["Submission Time"] / 1000.0,
+                          root_op=roots.get(str(exec_id), ""))
                 jobs[ev["Job ID"]] = job
                 for sid in ev["Stage IDs"]:
                     stage_job.setdefault(sid, job)
@@ -126,4 +152,6 @@ def span_metrics(span: Span, jobs: list[Job]) -> dict:
         "input_mb": sum(j.input_mb for j in mine),
         "input_rows": sum(j.input_rows for j in mine),
         "output_mb": sum(j.output_mb for j in mine),
+        "collect_limit_jobs": sum(1 for j in mine
+                                  if j.root_op == "CollectLimit"),
     }

@@ -24,8 +24,13 @@ import spantrace  # noqa: E402
 from workloads import WORKLOADS  # noqa: E402
 
 
-def _files(d: str) -> list[str]:
-    return sorted(f for f in os.listdir(d) if not f.startswith("."))
+def _files(d) -> list[str]:
+    """Every file under ``d``, as a path relative to it."""
+    return sorted(
+        os.path.relpath(os.path.join(root, f), d)
+        for root, _, names in os.walk(d) for f in names
+        if not f.startswith(".")
+    )
 
 
 @pytest.mark.parametrize("workload", sorted(WORKLOADS))
@@ -131,10 +136,52 @@ def test_release_check_accepts_expected_and_flags_corruption(tmp_path):
     assert wl.check((rev, bad, got))
 
 
+def test_dedup_check_accepts_expected_and_flags_corruption(tmp_path):
+    rec = gen.generate("release_increment", 4, str(tmp_path))
+    wl = WORKLOADS["release_increment"](rec, str(tmp_path))
+    exp = rec["dedup"]
+    assert len(exp["kept"]) + len(exp["dropped"]) == exp["docs"]
+    assert exp["clusters"] > 0
+    assert wl.check_dedup(list(reversed(exp["kept"]))) == []
+    assert wl.check_dedup(exp["kept"][1:])
+    assert wl.check_dedup(exp["kept"] + [exp["dropped"][0][0]])
+
+
+def test_dropped_documents_are_near_copies_and_singletons_are_not(tmp_path):
+    import pyarrow.parquet as pq
+
+    rec = gen.generate("release_increment", 5, str(tmp_path))
+    exp = rec["dedup"]
+    t = pq.read_table(str(tmp_path / exp["documents"])).to_pydict()
+    text = dict(zip(t["doc_id"], t["text"]))
+    assert sorted(text) == list(range(1, exp["docs"] + 1))
+    for gone, rep in exp["dropped"]:
+        assert rep < gone and gen.jaccard(text[gone], text[rep]) >= 0.8
+    kept = exp["kept"][:200]
+    assert max(gen.jaccard(text[a], text[b])
+               for a, b in zip(kept, kept[1:])) < 0.1
+
+
+def test_plan_root_skips_the_adaptive_wrapper():
+    plan = ("== Physical Plan ==\nAdaptiveSparkPlan isFinalPlan=false\n"
+            "+- CollectLimit 20\n   +- Filter (x#1 > 0)\n")
+    assert spantrace.plan_root(plan) == "CollectLimit"
+    assert spantrace.plan_root(
+        "== Physical Plan ==\n*(1) HashAggregate(keys=[])\n") == (
+        "HashAggregate")
+    assert spantrace.plan_root(
+        "== Physical Plan ==\n* Project (2)\n+- CollectLimit (1)\n") == (
+        "Project")
+
+
 def test_event_log_jobs_fall_into_spans(tmp_path):
     events = [
+        {"Event": spantrace.SQL_START, "executionId": 3,
+         "physicalPlanDescription":
+             "== Physical Plan ==\nCollectLimit 20\n+- Scan\n"},
         {"Event": "SparkListenerJobStart", "Job ID": 0,
-         "Submission Time": 1_000_500, "Stage IDs": [0, 1]},
+         "Submission Time": 1_000_500, "Stage IDs": [0, 1],
+         "Properties": {"spark.sql.execution.id": "3"}},
         {"Event": "SparkListenerJobStart", "Job ID": 1,
          "Submission Time": 1_002_500, "Stage IDs": [2]},
     ]
@@ -159,8 +206,11 @@ def test_event_log_jobs_fall_into_spans(tmp_path):
     assert got["cpu_s"] == pytest.approx(3.0)
     assert got["shuffle_write_mb"] == pytest.approx(2.0)
     assert got["input_rows"] == 20
+    assert got["collect_limit_jobs"] == 1
     second = spantrace.Span("b", 1002.0, 1003.0)
-    assert spantrace.span_metrics(second, jobs)["cpu_s"] == pytest.approx(0.5)
+    got = spantrace.span_metrics(second, jobs)
+    assert got["cpu_s"] == pytest.approx(0.5)
+    assert got["collect_limit_jobs"] == 0
 
 
 def test_benchmark_json_matches_the_runner():

@@ -45,7 +45,9 @@ def main() -> int:
             sess.stop()
     with open(out, "w") as fh:
         json.dump({"workload": args.workload, "seed": args.seed,
-                   "warmup_ops": wl.warmup_ops, "session_start_s": m.sessions[0],
+                   "warmup_ops": wl.warmup_ops,
+                   "timed_ops": wl.timed_ops,
+                   "session_start_s": m.sessions[0],
                    "program_setup_s": m.program_setup,
                    "ops": ops}, fh, indent=1)
         fh.write("\n")
