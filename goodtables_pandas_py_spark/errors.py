@@ -107,8 +107,9 @@ def errors_to_spark_df(spark, errors: list[Error]):
             e.resource,
             e.field,
             None if e.constraint is None else str(e.constraint),
-            # None placeholders (sample_from='none') must not become
-            # the literal string 'None' in the audit table
+            # None placeholders (a required check samples no values)
+            # must not become the literal string 'None' in the audit
+            # table
             [str(_jsonable(v)) for v in e.values if v is not None],
             e.count,
             list(e.row_ids) if e.row_ids else None,

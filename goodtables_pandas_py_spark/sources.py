@@ -792,18 +792,12 @@ def _lex(v) -> str | None:
     return str(v)
 
 
-def read_resource(spark: SparkSession, resource: Resource) -> DataFrame:
-    if resource.data is not None:
-        return read_inline(spark, resource)
-    if resource.path is None:
-        raise ValueError(f"resource {resource.name!r} has no path")
-    path = resource.path
+def _readable_path(spark: SparkSession, path: str, fmt: str) -> str:
     if _is_url(path):
         # local-or-URL path semantics (reference parity): http(s)/ftp
         # localize once via addFile, file:// unwraps, hadoop schemes
         # pass through
         path = localize_url(spark, path)
-    fmt = (resource.format or "csv").lower()
     if path.lower().rstrip("*").endswith((".zst", ".zstd")) and fmt in (
         "csv", "ndjson", "jsonl", "json", "xml",
     ):
@@ -811,6 +805,71 @@ def read_resource(spark: SparkSession, resource: Resource) -> DataFrame:
         # readers; .zst needs native libhadoop, absent on most images —
         # stage through zstd-jni instead (see stage_zstd docstring)
         path = stage_zstd(spark, path)
+    return path
+
+
+def _read_csv_resource(
+    spark: SparkSession, path: str, resource: Resource
+) -> tuple[DataFrame, list[str] | None]:
+    """A CSV resource and its raw header row (None when headerless).
+
+    A HEADERLESS file has no names to observe — columns are positional
+    and take the schema's names (else Spark invents _c0.._cN and every
+    check dies on missing-header). With a header row, the names
+    :func:`sniff_csv_header` reads on the driver are pinned as the
+    all-string schema, so Spark runs no header-inference job — but only
+    where Spark would keep them unchanged: every name non-blank and the
+    names unique ignoring case (Spark renames blank names to _cN and
+    duplicates to a0, a1, and H1 compares the raw row against those
+    ``df.columns``), and no multiLine dialect (the sniff reads one
+    physical line). Otherwise Spark infers the header, and so it does
+    when the sniff fails (e.g. a first line that does not decode):
+    H1 then falls back to ``df.columns``."""
+    d = resource.dialect or Dialect()
+    header = None
+    names = None
+    if not d.header:
+        if resource.schema is not None:
+            names = resource.schema.field_names
+    else:
+        try:
+            header = sniff_csv_header(spark, path, d, resource.encoding)
+        except Exception:
+            header = None
+        if (
+            header
+            and not d.multiline
+            and all(c.strip() for c in header)
+            and len({c.lower() for c in header}) == len(header)
+        ):
+            names = header
+    df = read_csv_stringly(
+        spark, path, resource.dialect, resource.encoding, column_names=names
+    )
+    return df, header
+
+
+def read_resource_with_header(
+    spark: SparkSession, resource: Resource
+) -> tuple[DataFrame, list[str] | None]:
+    """:func:`read_resource` plus the raw header row H1 compares
+    against: the first line of a path-backed CSV with a header row
+    (Spark mangles duplicate and blank names before ``df.columns``
+    exists), None for every other source."""
+    fmt = (resource.format or "csv").lower()
+    if resource.data is None and resource.path is not None and fmt == "csv":
+        path = _readable_path(spark, resource.path, fmt)
+        return _read_csv_resource(spark, path, resource)
+    return read_resource(spark, resource), None
+
+
+def read_resource(spark: SparkSession, resource: Resource) -> DataFrame:
+    if resource.data is not None:
+        return read_inline(spark, resource)
+    if resource.path is None:
+        raise ValueError(f"resource {resource.name!r} has no path")
+    fmt = (resource.format or "csv").lower()
+    path = _readable_path(spark, resource.path, fmt)
     if fmt == "parquet":
         return read_parquet(spark, path)
     if fmt == "orc":
@@ -818,20 +877,7 @@ def read_resource(spark: SparkSession, resource: Resource) -> DataFrame:
     if fmt == "avro":
         return read_avro(spark, path)
     if fmt == "csv":
-        # With a header row, do NOT pin schema field names: header
-        # mismatches must be observed by H1, so the file's own header
-        # drives the columns. A HEADERLESS file has no names to
-        # observe — columns are positional and take the schema's
-        # names (else Spark invents _c0.._cN and every check
-        # dies on missing-header).
-        d = resource.dialect or Dialect()
-        names = None
-        if not d.header and resource.schema is not None:
-            names = resource.schema.field_names
-        return read_csv_stringly(
-            spark, path, resource.dialect, resource.encoding,
-            column_names=names,
-        )
+        return _read_csv_resource(spark, path, resource)[0]
     if fmt in ("ndjson", "jsonl"):
         field_order = (
             resource.schema.field_names if resource.schema else None

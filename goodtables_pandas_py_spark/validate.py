@@ -7,7 +7,17 @@ re-architected for Catalyst):
       (parsing P1-P21 fused with constraints C1-C6 — single scan,
       SURVEY.md §4.3.1);
   (b) ONE wide aggregate over all masks (A1: counts);
-  (c) bounded per-violation sample jobs (A2, only for failed checks);
+  (c) ONE sample query per table (A2, only when a check failed): the
+      pass that counts the violations also emits, per row, the
+      offending (check, value[, row id]) entries, and one windowed
+      top-k over them draws every violated check's values — the
+      VALUE_SAMPLE_CAP smallest distinct values, or with row ids the
+      rows with the lowest ids, so samples are deterministic. With a
+      key cache the entries are cached beside the keys: worst case, a
+      wholly invalid column, the cache holds each bad cell's string
+      once (MEMORY_AND_DISK); sampling per check instead costs one
+      full source re-scan and one distinct per violated check. Without
+      a key cache the query re-scans the source once for all checks;
   (d) per-key groupBy jobs (K1/K2) and per-FK anti-joins (K3) over the
       persisted parsed DataFrame (SURVEY.md §4.3.2).
 
@@ -20,15 +30,22 @@ import json
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from .checks.constraints import ConstraintCheck, compile_constraints
-from .checks.keys import check_foreign_key, check_primary_key, check_unique_key
+from .checks.constraints import compile_constraints
+from .checks.keys import (
+    _free_name,
+    check_foreign_key,
+    check_primary_key,
+    check_unique_key,
+)
 from .errors import VALUE_SAMPLE_CAP, Error
 from .parsers import (
     apply_missing_values,
@@ -40,9 +57,8 @@ from .profile import check_descriptor, descriptor_error_report
 from .schema import Package, SchemaError, TableSchema, load_descriptor
 from .sources import (
     ensure_parallelism,
-    read_resource,
+    read_resource_with_header,
     render_lexical,
-    sniff_csv_header,
 )
 
 
@@ -184,13 +200,11 @@ class _CompiledCheck:
     constraint: object
     mask_col: str  # name of the boolean mask column in the wide DF
     report_col: str  # column to sample offending values from
-    cname: str | None = None  # constraint name ('minimum', 'enum', …)
-    #: sample source for the violation values:
-    #:   'none'   — values are definitionally null (required): no job
-    #:   'cached' — mask/report rebuild from the cached TYPED columns
-    #:              (cheap: no re-parse)
-    #:   'raw'    — needs the lexical column: re-read + re-parse source
-    sample_from: str = "raw"
+    #: whether the check's offending values go into the table's one
+    #: sample query (False for ``required``: its values are null by
+    #: definition and report as ``[None]``, unless row ids are asked
+    #: for)
+    samples: bool = True
 
 
 @dataclass
@@ -375,16 +389,6 @@ def _compile_table(
             select_cols.append(cc.mask.alias(mask_name))
             rep_name = f"__rep__{fld.name}__{cc.constraint}"
             select_cols.append(cc.report_col.alias(rep_name))
-            if cc.constraint == "required":
-                sample_from = "none"  # violating values are null
-            elif cc.constraint in (
-                "minLength", "maxLength", "minimum", "maximum", "enum",
-            ):
-                # mask depends only on the parsed value → rebuild from
-                # the cached typed column (no source re-parse)
-                sample_from = "cached"
-            else:  # pattern (lexical) — needs the raw column
-                sample_from = "raw"
             checks.append(
                 _CompiledCheck(
                     kind="constraint",
@@ -393,8 +397,7 @@ def _compile_table(
                     constraint=cc.constraint_value,
                     mask_col=mask_name,
                     report_col=rep_name,
-                    cname=cc.constraint,
-                    sample_from=sample_from,
+                    samples=cc.constraint != "required",
                 )
             )
 
@@ -417,11 +420,62 @@ def _compile_table(
                 constraint="custom",
                 mask_col=mask_name,
                 report_col=rep_name,
-                sample_from="raw",
             )
         )
 
     return df.select(*select_cols), checks, typed_names
+
+
+def _observable(df: DataFrame, metric: Column) -> bool:
+    """Whether ``observe`` accepts ``metric``: it rejects DISTINCT
+    aggregates (a countDistinct dataset metric). Analysis only, no
+    job (``.schema`` forces it on a lazily analyzing Connect client)."""
+    try:
+        df.observe("__probe", metric).schema
+    except AnalysisException as exc:
+        if "DISTINCT" not in (exc.getCondition() or ""):
+            raise
+        return False
+    return True
+
+
+def _sample_entries(
+    checks: list[_CompiledCheck], sampled: list[int], row_ids: bool
+) -> Column:
+    """Per row of the wide projection: the ``(c, v[, r])`` entries of
+    the sampled checks it violates (check index, offending value as a
+    string, row id), null on clean rows — only dirty rows build the
+    array."""
+    entries = [
+        F.when(
+            F.col(checks[i].mask_col),
+            F.struct(
+                F.lit(i).alias("c"),
+                F.col(checks[i].report_col).cast(T.StringType()).alias("v"),
+                *([F.col("__row_id").alias("r")] if row_ids else []),
+            ),
+        )
+        for i in sampled
+    ]
+    dirty = reduce(Column.__or__, [F.col(checks[i].mask_col) for i in sampled])
+    return F.when(dirty, F.array_compact(F.array(*entries)))
+
+
+def _sample_query(src: DataFrame, col: str, row_ids: bool) -> DataFrame:
+    """The table's one sample query over the entry column ``col``: per
+    check, the VALUE_SAMPLE_CAP smallest distinct values (``n`` ranks
+    them), or with ``row_ids`` the entries with the lowest row ids. The
+    top-k is a row_number window, so Spark keeps at most the cap per
+    check in each task (partial WindowGroupLimit) before the window's
+    exchange: what a task ships there is bounded by the cap, not by the
+    bad cells (the distinct's own exchange ships each task's distinct
+    bad values once)."""
+    e = src.select(F.inline(col))
+    if not row_ids:
+        e = e.distinct()
+    order = F.col("r" if row_ids else "v")
+    n = F.row_number().over(Window.partitionBy("c").orderBy(order))
+    return e.withColumn("n", n).where(F.col("n") <= VALUE_SAMPLE_CAP)
 
 
 def validate_table(
@@ -472,7 +526,8 @@ def validate_table(
     DataFrame (sources.sniff_csv_header recovers the raw row).
 
     ``row_ids=True`` attaches row positions to cell-level error samples
-    (SURVEY.md D6/§4.3.4). Positions come from
+    (SURVEY.md D6/§4.3.4): each violated check then samples its
+    offending rows with the lowest positions. Positions come from
     ``monotonically_increasing_id`` computed at ingest — stable for a
     fixed source layout; for parquet audit trails requiring exactness
     across re-reads, pre-attach ``__row_id`` from
@@ -514,17 +569,23 @@ def validate_table(
     for i, ck in enumerate(checks):
         aggs.append(F.count_if(F.col(ck.mask_col)).alias(f"__c{i}"))
 
-    # dataset-level metrics (DatasetCheck) ride the SAME observe pass:
-    # one more aggregate expression each, zero extra jobs. A metric
+    # dataset-level metrics (DatasetCheck) ride the SAME pass: one
+    # more aggregate expression each, zero extra jobs — except that
+    # observe rejects DISTINCT aggregates, so next to a key cache
+    # those run in one plain aggregate after the pass. A metric
     # builder that fails to compile (bad column name) reports instead
     # of raising, like every other descriptor-shaped problem.
     ds_checks = list(dataset_checks or [])
     ds_live: list[tuple[int, DatasetCheck]] = []
+    unobservable: list[Column] = []
     if ds_checks:
         tcols = {n: F.col(n) for n in typed_names}
         for i, dck in enumerate(ds_checks):
             try:
-                aggs.append(dck.metric(tcols).alias(f"__ds{i}"))
+                metric = dck.metric(tcols).alias(f"__ds{i}")
+                (aggs if _observable(wide, metric) else unobservable).append(
+                    metric
+                )
                 ds_live.append((i, dck))
             except Exception as exc:
                 errors.append(
@@ -546,21 +607,35 @@ def validate_table(
         for c in (typed_names if cache_cols is None else cache_cols)
         if c in typed_names
     ]
+    # the sampled checks' offending values leave the pass as one
+    # nullable entry column: cached next to the keys when there is a
+    # key cache, else recomputed once by the sample query (step (c))
+    sampled = [i for i, ck in enumerate(checks) if row_ids or ck.samples]
+    entries_col = _free_name("__samples", typed_names)
+    entries = (
+        [_sample_entries(checks, sampled, row_ids).alias(entries_col)]
+        if sampled
+        else []
+    )
     if persist and cache_sel:
         from pyspark.sql import Observation
 
         obs = Observation()
         wide_cached = (
             wide.observe(obs, *aggs)
-            .select(*cache_sel)
+            .select(*cache_sel, *entries)
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         n_rows = wide_cached.count()  # materializes cache + metrics
         row = obs.get
+        if unobservable:  # one plain aggregate after the pass
+            row.update(wide.agg(*unobservable).first().asDict())
+        sample_src = wide_cached
     else:
-        row = wide.agg(*aggs).first().asDict()
+        row = wide.agg(*aggs, *unobservable).first().asDict()
         n_rows = int(row["__rows"])
         wide_cached = None
+        sample_src = wide.select(*entries)
 
     # dataset-level verdicts: driver-side on the observed metric values
     for idx, dck in ds_live:
@@ -589,88 +664,22 @@ def validate_table(
                 )
             )
 
-    # --- (c) bounded samples for violated checks only ----------------
-    # cheapest source that can produce the offending values:
-    #   required     → no job (violating values are null by definition)
-    #   typed-only   → rebuild mask on the CACHED typed columns
-    #   lexical/type → recompute from the source with column pruning
-    #                  (only the one field's parse survives pruning)
-    # each violated check samples via its own CollectLimit action
-    # (early-exit: the scan stops as soon as the cap is reached —
-    # folding the branches into one union job demotes CollectLimit to
-    # GlobalLimit and re-scans everything, measured ~12% slower on the
-    # bench package), but the actions are SUBMITTED concurrently so k
-    # violated checks overlap their driver round trips instead of
-    # serializing them
-    fields_by_name = {f.name: f for f in schema.fields}
-
-    def _sample_one(i: int, ck: _CompiledCheck) -> list[tuple[str, int | None]]:
-        if row_ids:
-            # row addressing: sample (value, position) pairs from the
-            # wide projection (it carries __row_id)
-            return [
-                (r["v"], int(r["__row_id"]))
-                for r in wide.where(F.col(ck.mask_col))
-                .select(
-                    F.col(ck.report_col).cast(T.StringType()).alias("v"),
-                    F.col("__row_id"),
-                )
-                .limit(VALUE_SAMPLE_CAP)
-                .collect()
-            ]
-        if (
-            ck.sample_from == "cached"
-            and wide_cached is not None
-            and ck.field in wide_cached.columns
-        ):
-            fld = fields_by_name[ck.field]
-            cc = next(
-                c
-                for c in compile_constraints(fld, F.col(ck.field), None)
-                if c.constraint == ck.cname
-            )
-            src, mask, rep = wide_cached, cc.mask, cc.report_col
-        else:
-            src = wide
-            mask = F.col(ck.mask_col)
-            rep = F.col(ck.report_col)
-        return [
-            (r["v"], None)
-            for r in src.where(mask)
-            .select(rep.cast(T.StringType()).alias("v"))
-            .distinct()
-            .limit(VALUE_SAMPLE_CAP)
-            .collect()
-        ]
-
-    to_sample = [
-        (i, ck)
-        for i, ck in enumerate(checks)
-        if int(row[f"__c{i}"]) and (row_ids or ck.sample_from != "none")
-    ]
-    samples_by_check: dict[int, list] = {}
-    if to_sample:
-        with ThreadPoolExecutor(max_workers=min(8, len(to_sample))) as pool:
-            futs = {
-                i: pool.submit(_sample_one, i, ck) for i, ck in to_sample
-            }
-            for i, fut in futs.items():
-                samples_by_check[i] = fut.result()
+    # --- (c) one sample query for all violated checks ----------------
+    samples: dict[int, list] = {i: [] for i in sampled}
+    if any(int(row[f"__c{i}"]) for i in sampled):
+        got = _sample_query(sample_src, entries_col, row_ids).collect()
+        for r in sorted(got, key=lambda r: r["n"]):
+            samples[r["c"]].append(r)
 
     for i, ck in enumerate(checks):
         n = int(row[f"__c{i}"])
         if not n:
             continue
-        ids: list[int] = []
-        if i in samples_by_check:
-            seen: dict = {}
-            for v, rid in samples_by_check[i]:
-                seen.setdefault(v, None)
-                if rid is not None:
-                    ids.append(int(rid))
-            values: list = list(seen)
-        else:  # sample_from == 'none' without row addressing
-            values = [None]
+        if i in samples:
+            values: list = list(dict.fromkeys(r["v"] for r in samples[i]))
+            ids = [int(r["r"]) for r in samples[i]] if row_ids else []
+        else:  # required without row addressing: values are null
+            values, ids = [None], []
         errors.append(
             Error(
                 code=ck.code,
@@ -685,7 +694,7 @@ def validate_table(
         )
 
     if wide_cached is not None and set(typed_names) <= set(wide_cached.columns):
-        parsed = wide_cached
+        parsed = wide_cached.select(*typed_names)
     else:
         parsed = wide.select(*typed_names)
 
@@ -882,7 +891,10 @@ def validate_package(
             df = dataframes[res.name]
         else:
             try:
-                df = read_resource(spark, res)
+                # H1 needs the RAW header row of a CSV: Spark mangles
+                # duplicate and blank header names before df.columns
+                # exists
+                df, header = read_resource_with_header(spark, res)
             except Exception as exc:
                 # an unreadable/malformed SOURCE (ragged inline rows,
                 # empty inline list, unreachable path) is report
@@ -916,12 +928,6 @@ def validate_package(
             # extra-header; validate_table attaches row ids AFTER the
             # header check and before ITS ensure_parallelism, which
             # preserves source order the same way
-            if (res.format or "csv") == "csv" and res.path and res.data is None:
-                # H1 needs the RAW header row: Spark mangles duplicate
-                # and blank header names before df.columns exists
-                header = sniff_csv_header(
-                    spark, res.path, res.dialect, res.encoding
-                )
         pending.append((res.name, df, res.schema, header))
 
     # independent resources validate concurrently: each thread only

@@ -152,6 +152,52 @@ def test_package_cache_holds_only_key_columns(spark):
     assert captured["lineitem"] == ["l_orderkey"]
 
 
+def test_sample_query_reads_cache_with_partial_top_k(spark, tmp_path):
+    """A table with a key cache draws every violated check's values
+    from the cache in one query — no FileScan re-read of the source —
+    and keeps at most the cap per check in each task before the
+    exchange (partial WindowGroupLimit), so what a task ships stays
+    bounded at scale."""
+    from goodtables_pandas_py_spark.schema import Resource, TableSchema
+    from goodtables_pandas_py_spark.sources import read_resource
+    from goodtables_pandas_py_spark.validate import (
+        _sample_query,
+        validate_table,
+    )
+
+    csv = tmp_path / "t.csv"
+    csv.write_text("id,q,s\n" + "".join(
+        f"{i},{'x' if i % 2 else i},{'Z' if i % 3 else 'A'}\n"
+        for i in range(60)
+    ))
+    schema = TableSchema.from_descriptor({
+        "fields": [{"name": "id", "type": "integer"},
+                   {"name": "q", "type": "integer"},
+                   {"name": "s", "type": "string",
+                    "constraints": {"enum": ["A"]}}],
+        "primaryKey": ["id"],
+    })
+    df = read_resource(spark, Resource(name="t", path=str(csv)))
+    v = validate_table(df, schema, "t", cache_cols=["id"])
+    try:
+        assert len(v.errors) == 2
+        assert v.parsed.columns == ["id", "q", "s"]
+        plan = _initial_plan(_sample_query(v.cached, "__samples", False))
+    finally:
+        v.unpersist()
+    # the query itself, without the cached plan InMemoryRelation prints
+    query = plan.split("InMemoryRelation")[0]
+    lines = query.splitlines()
+    assert "InMemoryTableScan" in query and "FileScan" not in query, plan
+    partial = [
+        i for i, line in enumerate(lines)
+        if "WindowGroupLimit" in line and "Partial" in line
+    ]
+    assert partial, plan
+    # plan text lists parents first: an exchange above the partial limit
+    assert any("Exchange" in line for line in lines[:partial[0]]), plan
+
+
 def test_topk_uses_take_ordered_not_full_sort(spark):
     """orderBy().limit(k) must plan as TakeOrderedAndProject (bounded
     driver traffic), never a global sort."""

@@ -1844,3 +1844,251 @@ def test_key_field_named_like_internal_alias(spark):
     uk = check_unique_key(df, ["__n"])
     assert uk.count == 1
     assert duplicate_keys_df(df, ["__n", "__isnull"]).count() == 0
+
+
+def _last_job(spark) -> int:
+    """Id of the newest Spark job: ids only grow and the newest stay
+    retained, so differences count submitted jobs, with the UI off too."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    return max(ids, default=-1)
+
+
+def test_count_distinct_dataset_check_next_to_key_cache(spark, tmp_path):
+    """A DISTINCT dataset metric on a table with a key cache: observe
+    rejects DISTINCT aggregates, so validate used to raise
+    AnalysisException instead of returning a report. Both the
+    descriptor spec and a user DatasetCheck with F.count_distinct."""
+    import json
+
+    import pyspark.sql.functions as F
+
+    from goodtables_pandas_py_spark.validate import DatasetCheck
+
+    csv = tmp_path / "t.csv"
+    csv.write_text("id,amt\n1,5\n2,6\n3,5\n")
+    desc = {"resources": [{
+        "name": "t", "path": str(csv),
+        "schema": {"fields": [{"name": "id", "type": "integer"},
+                              {"name": "amt", "type": "integer"}],
+                   "primaryKey": ["id"]},
+        "datasetChecks": [
+            {"metric": "countDistinct", "field": "id", "min": 3},
+            {"metric": "countDistinct", "field": "amt", "min": 3},
+            {"metric": "max", "field": "amt", "max": 100},
+        ],
+    }]}
+    dp = tmp_path / "datapackage.json"
+    dp.write_text(json.dumps(desc))
+    user = DatasetCheck(
+        name="distinct-amt",
+        metric=lambda c: F.count_distinct(c["amt"]),
+        ok=lambda v: v == 2,
+    )
+    rep = gt.validate(spark, str(dp), dataset_checks={"t": [user]})
+    errs = rep["tables"][0]["errors"]
+    assert [(e["code"], e["constraint"], e["values"]) for e in errs] == [
+        ("dataset-constraint", "countDistinct(amt)", ["2"]),
+    ], errs
+    assert rep["tables"][0]["row-count"] == 3
+
+
+def test_sample_jobs_do_not_grow_with_violated_checks(spark, tmp_path):
+    """One sample query per table: the same table with 1 or with 4
+    violated (non-required) checks submits the same number of jobs."""
+    csv = tmp_path / "t.csv"
+    csv.write_text(
+        "id,n,s,c\n" + "".join(
+            f"{i},{'x' if i % 4 == 0 else i},{'Z' if i % 5 == 0 else 'A'},"
+            f"{'bad' if i % 3 == 0 else 'ok'}\n"
+            for i in range(40)
+        )
+    )
+    fields = [{"name": "id", "type": "integer"},
+              {"name": "n", "type": "integer"},
+              {"name": "s", "type": "string"},
+              {"name": "c", "type": "string"}]
+    one = [dict(f) for f in fields]
+    four = [dict(f) for f in fields]
+    one[2]["constraints"] = {"enum": ["A", "Z"]}  # holds
+    four[0]["constraints"] = {"minimum": 5}
+    four[2]["constraints"] = {"enum": ["A"]}
+    four[3]["constraints"] = {"pattern": "ok"}
+    jobs, violated = [], []
+    for schema_fields in (one, four):
+        desc = {"resources": [{"name": "t", "path": str(csv), "schema": {
+            "fields": schema_fields, "primaryKey": ["id"]}}]}
+        gt.validate(spark, desc)  # warm: plans and file listing
+        last = _last_job(spark)
+        rep = gt.validate(spark, desc)
+        jobs.append(_last_job(spark) - last)
+        violated.append(len(rep["tables"][0]["errors"]))
+        assert all(e["values"] for e in rep["tables"][0]["errors"])
+    assert violated == [1, 4]
+    assert jobs[0] == jobs[1], jobs
+
+
+def test_sample_values_are_smallest_distinct(spark):
+    """A column with 50 distinct bad values reports exactly the 20
+    smallest, in string order, on every run and on every path: the key
+    cache, a table with no key columns (wide re-scan) and parse_table."""
+    import random
+
+    from goodtables_pandas_py_spark.errors import VALUE_SAMPLE_CAP
+    from goodtables_pandas_py_spark.schema import TableSchema
+    from goodtables_pandas_py_spark.validate import validate_table
+
+    bad = [f"b{k:02d}" for k in range(50)]
+    rows = [(str(i), bad[i // 2 % 50] if i % 2 else str(i)) for i in range(300)]
+    random.Random(7).shuffle(rows)
+    df = spark.createDataFrame(rows, "id string, q string").repartition(4)
+    schema = TableSchema.from_descriptor({
+        "fields": [{"name": "id", "type": "integer"},
+                   {"name": "q", "type": "integer"}],
+        "primaryKey": ["id"],
+    })
+    want = sorted(bad)[:VALUE_SAMPLE_CAP]
+
+    def values(v):
+        v.resolve_keys()
+        v.unpersist()
+        (err,) = v.errors
+        assert err.count == 150
+        return err.values
+
+    cached = [
+        values(validate_table(df, schema, "t", cache_cols=["id"]))
+        for _ in range(2)
+    ]
+    assert cached == [want, want]
+    assert values(validate_table(df, schema, "t", cache_cols=[])) == want
+    assert gt.parse_table(df, schema)[1][0].values == want
+
+
+def test_sample_row_ids_are_the_lowest(spark):
+    """With row_ids=True the samples are the offending rows with the
+    lowest row ids, in row order, drawn from the full-width cache."""
+    from goodtables_pandas_py_spark.errors import VALUE_SAMPLE_CAP
+    from goodtables_pandas_py_spark.schema import TableSchema
+    from goodtables_pandas_py_spark.validate import validate_table
+
+    rows = [(str(i), "x" if i % 3 else "1") for i in range(100)]
+    df = spark.createDataFrame(rows, "id string, q string").coalesce(1)
+    schema = TableSchema.from_descriptor({
+        "fields": [{"name": "id", "type": "integer"},
+                   {"name": "q", "type": "integer",
+                    "constraints": {"required": True}}],
+        "primaryKey": ["id"],
+    })
+    v = validate_table(df, schema, "t", row_ids=True)
+    # the cache also holds the sample entries; parsed shows typed columns
+    assert v.parsed.columns == ["id", "q"]
+    assert v.parsed.count() == 100
+    v.unpersist()
+    (err,) = v.errors
+    want = [i for i in range(100) if i % 3][:VALUE_SAMPLE_CAP]
+    assert err.row_ids == want
+    assert err.values == ["x"]
+
+
+def test_custom_check_report_column_is_sampled(spark):
+    """A CustomCheck with ``report=`` samples its report column, not
+    the labelled field, through the same one sample query."""
+    import pyspark.sql.functions as F
+
+    from goodtables_pandas_py_spark.schema import TableSchema
+    from goodtables_pandas_py_spark.validate import CustomCheck, validate_table
+
+    df = spark.createDataFrame(
+        [("1", "10"), ("5", "3"), ("2", "2"), ("7", "1")],
+        "lo string, hi string",
+    )
+    schema = TableSchema.from_descriptor({
+        "fields": [{"name": "lo", "type": "integer"},
+                   {"name": "hi", "type": "integer"}],
+    })
+    cc = CustomCheck(
+        name="lo-gt-hi",
+        mask=lambda c: c["lo"] > c["hi"],
+        field="lo",
+        report=lambda c: F.concat_ws(">", c["lo"], c["hi"]),
+    )
+    for v in (validate_table(df, schema, "t", custom_checks=[cc]),
+              validate_table(df, schema, "t", custom_checks=[cc],
+                             persist=False)):
+        v.unpersist()
+        (err,) = v.errors
+        assert err.values == ["5>3", "7>1"]
+
+
+def test_pinned_csv_header_matches_inferred(spark, tmp_path):
+    """read_resource pins the sniffed header as the CSV schema only
+    where Spark would keep the names unchanged; columns and report
+    equal the header-inferring read's, and only the pinned headers
+    skip Spark's header-inference job."""
+    import json
+
+    from goodtables_pandas_py_spark.schema import Package
+    from goodtables_pandas_py_spark.sources import (
+        read_csv_stringly,
+        read_resource,
+        sniff_csv_header,
+    )
+    from goodtables_pandas_py_spark.validate import validate_table
+
+    body = "1,x\n2,3\n"
+    cases = {  # name: (file text, schema field names, dialect, pinned)
+        "plain": ("id,v\n" + body, ["id", "v"], None, True),
+        "duplicate": ("a,a\n" + body, ["a", "b"], None, False),
+        "blank": ("id,\n" + body, ["id", "v"], None, False),
+        "case": ("A,a\n" + body, ["A", "a"], None, False),
+        "bom": ("\ufeffid,v\n" + body, ["id", "v"], None, True),
+        "quoted": ('"i,d",v\n' + body, ["i,d", "v"], None, True),
+        "headerless": (body, ["id", "v"], {"header": False}, True),
+    }
+    for name, (text, names, dialect, pinned) in cases.items():
+        path = tmp_path / f"{name}.csv"
+        path.write_text(text, encoding="utf-8")
+        res_desc = {"name": name, "path": str(path), "schema": {"fields": [
+            {"name": n, "type": "integer"} for n in names]}}
+        if dialect:
+            res_desc["dialect"] = dialect
+        desc = {"resources": [res_desc]}
+        (res,) = Package.from_descriptor(json.loads(json.dumps(desc))).resources
+
+        # the header-inferring read: no schema unless headerless
+        inferred = read_csv_stringly(
+            spark, str(path), res.dialect, res.encoding,
+            column_names=None if res.dialect.header else names,
+        )
+        header = sniff_csv_header(spark, str(path), res.dialect, res.encoding)
+        want = validate_table(inferred, res.schema, name, header=header,
+                              cache_cols=[])
+
+        last = _last_job(spark)
+        df = read_resource(spark, res)
+        assert (_last_job(spark) - last == 0) == pinned, name
+        assert df.columns == inferred.columns, name
+        assert df.collect() == inferred.collect(), name
+        rep = gt.validate(spark, desc)["tables"][0]
+        assert rep["errors"] == [e.to_dict() for e in want.errors], name
+        assert rep["row-count"] == want.row_count == 2, name
+
+
+def test_undecodable_csv_header_falls_back_to_spark_columns(spark, tmp_path):
+    """A header row that does not decode in the declared encoding: the
+    driver-side sniff fails, Spark infers the header (with replacement
+    characters) and H1 reports against those columns — validate returns
+    a report instead of raising UnicodeDecodeError."""
+    from goodtables_pandas_py_spark.schema import Resource
+    from goodtables_pandas_py_spark.sources import read_resource
+
+    path = tmp_path / "t.csv"
+    path.write_bytes(b"id,n\xe9e\n1,2\n")
+    fields = [{"name": "id", "type": "integer"},
+              {"name": "née", "type": "integer"}]
+    df = read_resource(spark, Resource(name="t", path=str(path)))
+    assert df.columns == ["id", "n\ufffde"]
+    rep = gt.validate(spark, {"resources": [
+        {"name": "t", "path": str(path), "schema": {"fields": fields}}]})
+    codes = [e["code"] for e in rep["tables"][0]["errors"]]
+    assert codes == ["missing-header", "extra-header"], codes
