@@ -3,7 +3,9 @@
 Each check runs on the *parsed* DataFrame (callers should persist it —
 SURVEY.md §4.3.2) and returns bounded results: an exact violation count
 plus a capped sample of offending key tuples (never an unbounded
-collect — 100 TB posture, SURVEY.md §4.4).
+collect — 100 TB posture, SURVEY.md §4.4). All three share one kernel,
+:func:`_count_and_sample`; the sample is the VALUE_SAMPLE_CAP (20)
+smallest violating tuples, so it does not depend on partitioning.
 
 Null semantics (SURVEY.md §2.5 decisions, documented deviations none):
 - K1 primary key: any-null component is a violation; duplicate tuples
@@ -17,9 +19,11 @@ Null semantics (SURVEY.md §2.5 decisions, documented deviations none):
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import VALUE_SAMPLE_CAP, Error
@@ -48,10 +52,6 @@ class KeyCheckResult:
         )
 
 
-def _tuple_col(df: DataFrame, key: list[str]):
-    return [F.col(c) for c in key]
-
-
 def _free_name(base: str, taken) -> str:
     """Internal alias guaranteed not to collide with a user field: a
     fixed '__' prefix defends against a field named 'n' but not one
@@ -63,6 +63,52 @@ def _free_name(base: str, taken) -> str:
     return name
 
 
+def _any(cols: list[str], test: Callable[[Column], Column]) -> Column:
+    """``test`` of any key column: the null masks of K1 and K3."""
+    return reduce(Column.__or__, [test(F.col(c)) for c in cols])
+
+
+def _check_key_widths(
+    child_fields: list[str], parent_fields: list[str], name: str = ""
+) -> None:
+    """Both FK kernels zip child with parent columns: a width mismatch
+    would silently compare the wrong columns, so it raises."""
+    if len(parent_fields) != len(child_fields):
+        raise ValueError(
+            f"foreign key {name or parent_fields!r}: parent key width "
+            f"{len(parent_fields)} != child key width "
+            f"{len(child_fields)} — a mismatched zip would silently "
+            "compare the wrong columns"
+        )
+
+
+def _count_and_sample(
+    code: str, viol: DataFrame, key: list[str], weight: Column
+) -> KeyCheckResult:
+    """Shared kernel of K1-K3: exact count plus bounded sample from the
+    violating rows ``viol`` (usually tiny — violations only). ``viol``
+    is persisted, so the count (the sum of ``weight`` over ``viol``, in
+    one aggregate) pays the groupBy/anti-join shuffle once and the
+    sample is a cache read, never a second shuffle or an unbounded
+    collect (SURVEY.md §4.4). The sample is the VALUE_SAMPLE_CAP
+    smallest key tuples — a per-task top-k over the cache, no exchange
+    — so it does not depend on how the violations are partitioned.
+    Worst case (everything violates) the persist spills to disk rather
+    than recomputing."""
+    viol = viol.persist()
+    try:
+        count = int(viol.agg(F.coalesce(F.sum(weight), F.lit(0))).first()[0])
+        sample: list = []
+        if count:
+            sample = [
+                tuple(r[c] for c in key)
+                for r in viol.orderBy(*key).limit(VALUE_SAMPLE_CAP).collect()
+            ]
+        return KeyCheckResult(code=code, count=count, values=sample)
+    finally:
+        viol.unpersist()
+
+
 def duplicate_keys_df(df: DataFrame, key: list[str]) -> DataFrame:
     """Shared kernel of K1/K2/C2: key tuples appearing more than once,
     with multiplicities (count column: ``_free_name('__n', key)``).
@@ -70,100 +116,46 @@ def duplicate_keys_df(df: DataFrame, key: list[str]) -> DataFrame:
     aggregation is automatic (SURVEY.md §4.2)."""
     n = _free_name("__n", key)
     return (
-        df.groupBy(*_tuple_col(df, key))
+        df.groupBy(*key)
         .agg(F.count(F.lit(1)).alias(n))
         .where(F.col(n) > 1)
     )
 
 
-def _dup_count_and_sample(dups: DataFrame, key: list[str]) -> tuple[int, list]:
-    """Exact extra-row count + bounded sample from ONE shuffle: the
-    violating groups (usually tiny — violations only) are persisted, so
-    the count aggregate pays the groupBy shuffle once and the sample is
-    a cache read, never a second shuffle or an unbounded collect
-    (SURVEY.md §4.4). Worst case (everything duplicated) the persist
-    spills to disk rather than recomputing."""
-    n = _free_name("__n", key)
-    dups = dups.persist()
-    try:
-        extra = dups.select(
-            F.coalesce(F.sum(F.col(n) - 1), F.lit(0)).alias("extra")
-        ).first()["extra"]
-        sample: list = []
-        if extra:
-            sample = [
-                tuple(r[c] for c in key)
-                for r in dups.limit(VALUE_SAMPLE_CAP).collect()
-            ]
-        return int(extra), sample
-    finally:
-        dups.unpersist()
-
-
 def check_primary_key(df: DataFrame, key: list[str]) -> KeyCheckResult:
     """K1 ([R check.py::check_primary_key]): components non-null AND
-    tuple unique. Returns combined violation count (null rows + extra
-    duplicate rows).
+    tuple unique. Counts null rows plus extra duplicate rows.
 
-    One action, one shuffle: group on the key tuple and fold null-row
-    and duplicate counts out of the grouped result in the same job (vs
-    the naive two passes — a scan-count for nulls plus a groupBy for
-    dups). The any-null flag is DERIVED from the key columns after the
-    aggregate (r12): it is constant within a key group, so grouping on
-    it was redundant — and keying the groupBy on the bare tuple lets a
-    frame already hash-partitioned by the PK (validate_table's cache)
-    satisfy the distribution with no exchange at all (guide §2.4)."""
-    null_mask = None
-    for c in key:
-        m = F.col(c).isNull()
-        null_mask = m if null_mask is None else (null_mask | m)
-
+    One shuffle: group on the key tuple and keep the all-row weight of
+    null groups and the extra rows of duplicate groups (vs the naive
+    two passes — a scan-count for nulls plus a groupBy for dups). The
+    any-null flag is DERIVED from the key columns after the aggregate
+    (r12): it is constant within a key group, so grouping on it was
+    redundant — and keying the groupBy on the bare tuple lets a frame
+    already hash-partitioned by the PK (validate_table's cache) satisfy
+    the distribution with no exchange at all (guide §2.4)."""
     n = _free_name("__n", key)
     isnull = _free_name("__isnull", key)
     viol = (
-        df.groupBy(*_tuple_col(df, key))
+        df.groupBy(*key)
         .agg(F.count(F.lit(1)).alias(n))
-        .select(null_mask.alias(isnull), "*")
+        .select(_any(key, Column.isNull).alias(isnull), "*")
         .where(F.col(isnull) | (F.col(n) > 1))
-        .persist()  # violations only — tiny; sample is then a cache read
     )
-    try:
-        row = viol.agg(
-            F.coalesce(
-                F.sum(F.when(F.col(isnull), F.col(n)).otherwise(F.lit(0))),
-                F.lit(0),
-            ).alias("nulls"),
-            F.coalesce(
-                F.sum(
-                    F.when(~F.col(isnull), F.greatest(F.col(n) - 1, F.lit(0)))
-                ),
-                F.lit(0),
-            ).alias("extra"),
-        ).first()
-        nulls, extra = int(row["nulls"]), int(row["extra"])
-
-        sample: list = []
-        if nulls + extra:
-            # violating groups: viol already IS the filtered frame —
-            # sample straight from the cache (the old re-filter
-            # repeated viol's own predicate; r10 review cleanup)
-            sample = [
-                tuple(r[c] for c in key)
-                for r in viol.limit(VALUE_SAMPLE_CAP).collect()
-            ]
-        return KeyCheckResult(
-            code="primary-key-constraint", count=nulls + extra, values=sample
-        )
-    finally:
-        viol.unpersist()
+    # the filter keeps only null or n > 1 groups: a null group counts
+    # all its rows, a duplicate group its extra ones
+    weight = F.when(F.col(isnull), F.col(n)).otherwise(F.col(n) - 1)
+    return _count_and_sample("primary-key-constraint", viol, key, weight)
 
 
 def check_unique_key(df: DataFrame, key: list[str]) -> KeyCheckResult:
     """K2 ([R check.py::check_unique_keys]): tuple uniqueness only
     (null components allowed; null tuples can duplicate, matching
     pandas — Spark groupBy groups nulls identically)."""
-    extra, sample = _dup_count_and_sample(duplicate_keys_df(df, key), key)
-    return KeyCheckResult(code="unique-key-constraint", count=extra, values=sample)
+    weight = F.col(_free_name("__n", key)) - 1
+    return _count_and_sample(
+        "unique-key-constraint", duplicate_keys_df(df, key), key, weight
+    )
 
 
 def foreign_key_violations_df(
@@ -188,11 +180,12 @@ def foreign_key_violations_df(
     with a null-safe equality join (``<=>`` — still a hash-joinable
     equi-key) and skip only FULLY-null tuples (no information to
     check, matching the reference's NA-row drop)."""
-    some_notnull = None
-    for c in child_fields:
-        m = F.col(c).isNotNull()
-        some_notnull = m if some_notnull is None else (some_notnull | m)
-    left = child.where(some_notnull).select(*child_fields).distinct()
+    _check_key_widths(child_fields, parent_fields)
+    left = (
+        child.where(_any(child_fields, Column.isNotNull))
+        .select(*child_fields)
+        .distinct()
+    )
     right = parent.select(
         *[F.col(p).alias(f"__ref_{i}") for i, p in enumerate(parent_fields)]
     ).distinct()
@@ -232,18 +225,12 @@ def foreign_key_violations_multi(
     fully-null child tuples are skipped, partial nulls join null-safe
     (``<=>``)."""
     for name, (_, parent_fields) in parents.items():
-        if len(parent_fields) != len(child_fields):
-            raise ValueError(
-                f"foreign key {name!r}: parent key width "
-                f"{len(parent_fields)} != child key width "
-                f"{len(child_fields)} — a mismatched zip would silently "
-                "compare the wrong columns"
-            )
-    some_notnull = None
-    for c in child_fields:
-        m = F.col(c).isNotNull()
-        some_notnull = m if some_notnull is None else (some_notnull | m)
-    keys = child.where(some_notnull).select(*child_fields).distinct()
+        _check_key_widths(child_fields, parent_fields, name)
+    keys = (
+        child.where(_any(child_fields, Column.isNotNull))
+        .select(*child_fields)
+        .distinct()
+    )
     markers = []
     joined = keys
     for idx, (name, (parent, parent_fields)) in enumerate(parents.items()):
@@ -284,15 +271,5 @@ def check_foreign_key(
 ) -> KeyCheckResult:
     viol = foreign_key_violations_df(
         child, child_fields, parent, parent_fields, broadcast_parent
-    ).persist()  # violating tuples only; sample reads the cache
-    try:
-        n = viol.count()
-        sample: list = []
-        if n:
-            sample = [
-                tuple(r[c] for c in child_fields)
-                for r in viol.limit(VALUE_SAMPLE_CAP).collect()
-            ]
-        return KeyCheckResult(code="foreign-key-error", count=int(n), values=sample)
-    finally:
-        viol.unpersist()
+    )
+    return _count_and_sample("foreign-key-error", viol, child_fields, F.lit(1))

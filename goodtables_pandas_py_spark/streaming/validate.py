@@ -9,7 +9,10 @@ Design:
 
 - **Expression reuse**: a compiled mask Column is engine-agnostic —
   the identical Catalyst expression tree runs in both batch and
-  micro-batch plans, so batch goldens certify streaming semantics.
+  micro-batch plans, so batch goldens certify streaming semantics. The
+  reuse is one shared function: ``validate_stream`` and the batch
+  ``_compile_table`` both build each field's parse, type-error mask
+  and constraint masks with ``validate._compile_field``.
 - **Watermarks** bound state for windowed aggregation; late rows
   beyond the watermark are dropped and accounted by the watermark
   policy, never buffered unboundedly.
@@ -30,17 +33,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql import types as T
-
-from ..checks.constraints import compile_constraints
-from ..parsers import (
-    apply_missing_values,
-    missing_token_producible,
-    parse_field,
-    typed_fast_path,
-)
 from ..schema import TableSchema
-from ..sources import render_lexical
+from ..validate import _compile_field
 
 
 def validate_stream(
@@ -69,42 +63,13 @@ def validate_stream(
     for fld in schema.fields:
         if fld.name not in stream.columns:
             continue
-        if assume_typed:
-            parsed = F.col(fld.name)
-            raw = None
-        else:
-            # same per-column contract as the batch engine (r6): a
-            # string column parses lexically; a TYPED column takes
-            # the provable-identity fast path (no re-parse in the
-            # hot per-micro-batch projection) or renders inline
-            src_t = stream.schema[fld.name].dataType
-            if isinstance(src_t, T.StringType):
-                raw_col = F.col(fld.name)
-                fast = None
-            else:
-                raw_col = render_lexical(F.col(fld.name), src_t)
-                fast = typed_fast_path(fld, src_t)
-            raw = apply_missing_values(raw_col, schema.missing_values)
-            if fast is not None:
-                collidable = [
-                    tok
-                    for tok in schema.missing_values
-                    if missing_token_producible(src_t, tok)
-                ]
-                parsed = (
-                    F.when(raw_col.isin(*collidable), F.lit(None))
-                    .otherwise(fast)
-                    if collidable
-                    else fast
-                )
-                cols.append(F.lit(False).alias(f"__bad__{fld.name}"))
-            else:
-                pf = parse_field(raw_col, fld, schema.missing_values)
-                parsed = pf.parsed
-                cols.append(pf.bad.alias(f"__bad__{fld.name}"))
-        # (compile_constraints never emits 'unique' — C2 routes
-        # through the key machinery, not the mask path)
-        for ck in compile_constraints(fld, parsed, raw):
+        _, _, bad, constraints = _compile_field(
+            fld, stream.schema[fld.name].dataType, schema.missing_values,
+            assume_typed,
+        )
+        if bad is not None:
+            cols.append(bad.alias(f"__bad__{fld.name}"))
+        for ck in constraints:
             cols.append(ck.mask.alias(f"__viol__{fld.name}__{ck.constraint}"))
     return stream.select(*cols)
 

@@ -19,7 +19,14 @@ re-architected for Catalyst):
       full source re-scan and one distinct per violated check. Without
       a key cache the query re-scans the source once for all checks;
   (d) per-key groupBy jobs (K1/K2) and per-FK anti-joins (K3) over the
-      persisted parsed DataFrame (SURVEY.md §4.3.2).
+      persisted parsed DataFrame (SURVEY.md §4.3.2), each one task on
+      one thread pool: validate_table's own, or in validate_package
+      the one pool that also runs the tables and the anti-joins.
+
+Each decision is made in one place: :func:`_compile_field` compiles a
+field for batch and streaming alike, every key check goes through
+``TableValidation.pending_keys``/``resolve_keys``, and the K1-K3 count
+and sample share ``checks.keys._count_and_sample``.
 
 The IR *is* the Catalyst logical plan; no custom IR (SURVEY.md §3).
 """
@@ -54,7 +61,13 @@ from .parsers import (
     typed_fast_path,
 )
 from .profile import check_descriptor, descriptor_error_report
-from .schema import Package, SchemaError, TableSchema, load_descriptor
+from .schema import (
+    Field,
+    Package,
+    SchemaError,
+    TableSchema,
+    load_descriptor,
+)
 from .sources import (
     ensure_parallelism,
     read_resource_with_header,
@@ -218,9 +231,9 @@ class TableValidation:
     row_count: int = 0
     errors: list[Error] = dc_field(default_factory=list)
     cached: DataFrame | None = None  # the persisted wide projection
-    # deferred key checks (r11): (cols, kind, code, Future) submitted
-    # on a caller-owned executor so package-level FK anti-joins can
-    # OVERLAP the PK/unique groupBys instead of serializing after them
+    # key checks in flight (r11): (cols, kind, code, Future). Left
+    # pending only on a caller-owned executor, so package-level FK
+    # anti-joins can OVERLAP the PK/unique groupBys
     pending_keys: list = dc_field(default_factory=list)
 
     @property
@@ -300,6 +313,57 @@ def check_header(
     return errors
 
 
+def _compile_field(
+    fld: Field,
+    src_t: T.DataType,
+    missing_values: list[str],
+    assume_typed: bool,
+) -> tuple[Column, Column | None, Column | None, list]:
+    """One field's check expressions — the single definition batch
+    (:func:`_compile_table`) and streaming (``validate_stream``) both
+    run. Returns the parsed expression, the raw lexical column, the
+    type-error mask and the compiled constraints; raw and mask are
+    None under ``assume_typed`` (the column is trusted as typed).
+
+    A string source column parses lexically. A TYPED source column
+    (parquet/ORC, a user DataFrame) renders lexically for the raw and
+    pattern surfaces, and when the render→parse roundtrip is a provable
+    identity the parse itself is skipped (typed_fast_path, r6 — the
+    rendition+parse used to be the bulk of the validation scan on wide
+    columnar tables)."""
+    if assume_typed:
+        parsed = F.col(fld.name)
+        return parsed, None, None, compile_constraints(fld, parsed, None)
+    if isinstance(src_t, T.StringType):
+        raw, fast = F.col(fld.name), None
+    else:
+        raw = render_lexical(F.col(fld.name), src_t)
+        fast = typed_fast_path(fld, src_t)
+    raw_missing = apply_missing_values(raw, missing_values)
+    if fast is None:
+        pf = parse_field(raw, fld, missing_values)
+        parsed, bad = pf.parsed, pf.bad
+    else:
+        # a declared missing sentinel CAN equal a rendition (e.g. "NaN"
+        # on a double column) — the lexical path nulls those values,
+        # so must we
+        collidable = [
+            tok for tok in missing_values if missing_token_producible(src_t, tok)
+        ]
+        parsed = (
+            F.when(raw.isin(*collidable), F.lit(None)).otherwise(fast)
+            if collidable
+            else fast
+        )
+        bad = F.lit(False)  # a typed value cannot mis-parse
+    # constraints compose over the parsed EXPRESSION (not an alias
+    # reference — aliases in the same select are not resolvable);
+    # Catalyst's subexpression elimination dedups the shared parse.
+    # (compile_constraints never emits 'unique' — C2 routes through the
+    # key machinery, not the mask path)
+    return parsed, raw, bad, compile_constraints(fld, parsed, raw_missing)
+
+
 def _compile_table(
     df: DataFrame,
     schema: TableSchema,
@@ -320,47 +384,14 @@ def _compile_table(
         if fld.name not in present:
             continue  # reported by header check
         typed_names.append(fld.name)
-        if assume_typed:
-            parsed_expr = F.col(fld.name)
-            raw_expr = None
+        parsed_expr, raw_col, bad, constraints = _compile_field(
+            fld, df.schema[fld.name].dataType, schema.missing_values,
+            assume_typed,
+        )
+        parsed_exprs[fld.name] = parsed_expr
+        if bad is None:
             select_cols.append(parsed_expr)
         else:
-            src_t = df.schema[fld.name].dataType
-            if isinstance(src_t, T.StringType):
-                # the classic all-string path (CSV/NDJSON/inline)
-                raw_col = F.col(fld.name)
-                fast = None
-            else:
-                # TYPED source column (parquet/ORC resource or a user
-                # DataFrame): its lexical rendition feeds the raw/
-                # pattern surfaces lazily, and when the render→parse
-                # roundtrip is a provable identity the parse itself is
-                # skipped (typed_fast_path, r6 — the rendition+parse
-                # used to be the bulk of the validation scan on wide
-                # columnar tables)
-                raw_col = render_lexical(F.col(fld.name), src_t)
-                fast = typed_fast_path(fld, src_t)
-            raw_expr = apply_missing_values(raw_col, schema.missing_values)
-            if fast is not None:
-                collidable = [
-                    tok
-                    for tok in schema.missing_values
-                    if missing_token_producible(src_t, tok)
-                ]
-                if collidable:
-                    # a declared missing sentinel CAN equal a
-                    # rendition (e.g. "NaN" on a double column) — the
-                    # lexical path nulls those values, so must we
-                    parsed_expr = F.when(
-                        raw_col.isin(*collidable), F.lit(None)
-                    ).otherwise(fast)
-                else:
-                    parsed_expr = fast
-                bad = F.lit(False)  # a typed value cannot mis-parse
-            else:
-                pf = parse_field(raw_col, fld, schema.missing_values)
-                parsed_expr = pf.parsed
-                bad = pf.bad
             select_cols.append(parsed_expr.alias(fld.name))
             bad_name = f"__bad__{fld.name}"
             select_cols.append(bad.alias(bad_name))
@@ -376,15 +407,7 @@ def _compile_table(
                     report_col=raw_name,
                 )
             )
-
-        parsed_exprs[fld.name] = parsed_expr
-
-        # constraints compose over the parsed EXPRESSION (not an alias
-        # reference — aliases in the same select are not resolvable);
-        # Catalyst's subexpression elimination dedups the shared parse.
-        # (compile_constraints never emits 'unique' — C2 routes
-        # through the key machinery below, not the mask path)
-        for cc in compile_constraints(fld, parsed_expr, raw_expr):
+        for cc in constraints:
             mask_name = f"__viol__{fld.name}__{cc.constraint}"
             select_cols.append(cc.mask.alias(mask_name))
             rep_name = f"__rep__{fld.name}__{cc.constraint}"
@@ -495,12 +518,14 @@ def validate_table(
     keys). FK checks live at package level (they need sibling tables).
 
     ``key_executor`` (r11, package-internal): a caller-owned
-    ThreadPoolExecutor. When given, PK/unique checks are SUBMITTED on
-    it and returned unresolved in ``TableValidation.pending_keys``
-    instead of being awaited here — ``validate_package`` then starts
-    the FK anti-joins immediately (they only need the key cache, which
-    is already filled) so FK jobs overlap the key groupBys.
-    ``resolve_keys()`` must be called before reading ``errors``.
+    ThreadPoolExecutor. PK/unique checks are always SUBMITTED to a
+    pool; when one is given they are returned unresolved in
+    ``TableValidation.pending_keys`` instead of being awaited here —
+    ``validate_package`` then starts the FK anti-joins immediately
+    (they only need the key cache, which is already filled) so FK jobs
+    overlap the key groupBys, and must call ``resolve_keys()`` before
+    reading ``errors``. Without one, a pool owned here runs them and
+    is drained before returning.
 
     ``custom_checks`` (X6 plugin surface): extra :class:`CustomCheck`
     masks fused into the same single-scan pass as C1-C6.
@@ -698,12 +723,13 @@ def validate_table(
     else:
         parsed = wide.select(*typed_names)
 
-    def key_view(cols: list[str]) -> DataFrame:
-        """Cheapest DataFrame containing ``cols``: the (narrow) cache
-        when it covers them, else the recomputing projection."""
-        if wide_cached is not None and set(cols) <= set(wide_cached.columns):
-            return wide_cached
-        return parsed
+    tv = TableValidation(
+        resource=resource,
+        parsed=parsed,
+        row_count=int(n_rows),
+        errors=errors,
+        cached=wide_cached,
+    )
 
     # --- (d) key checks over the persisted key projection ------------
     def _key_cols_present(key_fields: list[str], kind: str) -> bool:
@@ -727,11 +753,6 @@ def validate_table(
             return False
         return True
 
-    # independent key checks submit concurrently (same rationale as the
-    # per-table pool in validate_package: threads only SUBMIT jobs, so
-    # the PK groupBy overlaps the unique-key groupBys instead of
-    # serializing driver round trips); errors append in declaration
-    # order so reports stay deterministic
     key_tasks: list[tuple[list[str], str, str | None]] = []
     for fld in schema.fields:
         if fld.constraints.get("unique") and fld.name in typed_names:
@@ -741,62 +762,31 @@ def validate_table(
     for key in schema.unique_keys:
         if _key_cols_present(key, "uniqueKeys"):
             key_tasks.append((key, "uniqueKeys", None))
-    pending_keys: list = []
-    if key_tasks:
-        if key_executor is not None:
-            # deferred mode: submit and return; validate_package drains
-            # via resolve_keys() AFTER launching the FK anti-joins so
-            # both job families share the cluster instead of queueing
-            pending_keys = [
-                (
-                    cols,
-                    kind,
-                    code,
-                    key_executor.submit(
-                        check_primary_key
-                        if kind == "primaryKey"
-                        else check_unique_key,
-                        key_view(cols),
-                        cols,
-                    ),
-                )
-                for cols, kind, code in key_tasks
-            ]
-        else:
-            with ThreadPoolExecutor(
-                max_workers=min(4, len(key_tasks))
-            ) as pool:
-                futs = [
-                    (
-                        cols,
-                        kind,
-                        code,
-                        pool.submit(
-                            check_primary_key
-                            if kind == "primaryKey"
-                            else check_unique_key,
-                            key_view(cols),
-                            cols,
-                        ),
-                    )
-                    for cols, kind, code in key_tasks
-                ]
-                for cols, kind, code, fut in futs:
-                    res = fut.result()
-                    if not res.ok:
-                        err = res.to_error(resource, cols, kind)
-                        if code:
-                            err.code = code  # field-level C2 code
-                        errors.append(err)
-
-    return TableValidation(
-        resource=resource,
-        parsed=parsed,
-        row_count=int(n_rows),
-        errors=errors,
-        cached=wide_cached,
-        pending_keys=pending_keys,
-    )
+    # independent key checks run concurrently (threads only SUBMIT
+    # jobs, so the PK groupBy overlaps the unique-key groupBys). On a
+    # caller's executor they stay pending: validate_package launches
+    # the FK anti-joins before draining them, so both job families
+    # share the cluster. Without one, a pool owned here is drained
+    # before returning. resolve_keys() appends errors in declaration
+    # order either way, so reports stay deterministic.
+    pool = key_executor or ThreadPoolExecutor(max_workers=4)
+    tv.pending_keys = [
+        (
+            cols,
+            kind,
+            code,
+            pool.submit(
+                check_primary_key if kind == "primaryKey" else check_unique_key,
+                tv.key_view(cols),
+                cols,
+            ),
+        )
+        for cols, kind, code in key_tasks
+    ]
+    if key_executor is None:
+        with pool:
+            tv.resolve_keys()
+    return tv
 
 
 def validate_package(
@@ -930,49 +920,44 @@ def validate_package(
             # preserves source order the same way
         pending.append((res.name, df, res.schema, header))
 
-    # independent resources validate concurrently: each thread only
-    # *submits* Spark jobs (job scheduling is thread-safe), so table
-    # B's scan overlaps table A's aggregate instead of idling the
-    # executors between sequential driver round-trips. Key checks are
-    # DEFERRED onto key_pool (r11): validate_table returns as soon as
-    # its cache is filled and samples are drawn, with the PK/unique
-    # groupBys still in flight — the FK anti-joins below only need the
-    # key cache, so they launch immediately and overlap the key jobs
-    # (previously FK waited for every key check: strict serialization
-    # of the two independent job families on the critical path).
-    key_pool = ThreadPoolExecutor(max_workers=8)
-    fk_pool = None
-    try:
-        with ThreadPoolExecutor(
-            max_workers=max(1, min(8, len(pending)))
-        ) as pool:
-            futs = {
-                name: pool.submit(
-                    validate_table,
-                    df,
-                    schema,
-                    resource=name,
-                    assume_typed=assume_typed,
-                    cache_cols=sorted(cache_need.get(name, set())),
-                    header=header,
-                    row_ids=row_ids,
-                    custom_checks=(custom_checks or {}).get(name),
-                    dataset_checks=desc_ds.get(name, [])
-                    + list((dataset_checks or {}).get(name) or []),
-                    key_executor=key_pool,
-                )
-                for name, df, schema, header in pending
-            }
-            for name, fut in futs.items():
-                validations[name] = fut.result()
+    # ONE pool runs every task of the package: table validations, their
+    # key checks and the FK anti-joins. Each thread only *submits*
+    # Spark jobs (job scheduling is thread-safe), so table B's scan
+    # overlaps table A's aggregate, and the FK anti-joins — which only
+    # need the key caches — overlap the PK/unique groupBys instead of
+    # waiting for them (r11). One pool cannot deadlock: no task waits on
+    # another task's future. A table task only submits its key checks
+    # (validate_table(key_executor=pool) returns them pending) and this
+    # thread drains them with resolve_keys(). The with block shuts the
+    # pool down on any exit.
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        futs = {
+            name: pool.submit(
+                validate_table,
+                df,
+                schema,
+                resource=name,
+                assume_typed=assume_typed,
+                cache_cols=sorted(cache_need.get(name, set())),
+                header=header,
+                row_ids=row_ids,
+                custom_checks=(custom_checks or {}).get(name),
+                dataset_checks=desc_ds.get(name, [])
+                + list((dataset_checks or {}).get(name) or []),
+                key_executor=pool,
+            )
+            for name, df, schema, header in pending
+        }
+        for name, fut in futs.items():
+            validations[name] = fut.result()
 
         # --- K3: foreign keys (cross-resource + self-referencing) ----
-        # independent anti-joins: submitted concurrently AND before the
-        # deferred key checks are drained, so FK jobs overlap the
-        # PK/unique groupBys. Degraded (non-job) FK errors are queued
-        # and appended only after resolve_keys() so the report keeps
-        # its historical order: header/parse → keys → FK.
-        fk_tasks = []
+        # submitted before the deferred key checks are drained, so FK
+        # jobs overlap the PK/unique groupBys. Degraded (non-job) FK
+        # errors are queued and appended only after resolve_keys() so
+        # the report keeps its historical order: header/parse → keys →
+        # FK.
+        fk_futs = []
         fk_degraded: list[tuple[TableValidation, Error]] = []
         for res in package.resources:
             if res.schema is None:
@@ -1025,46 +1010,31 @@ def validate_package(
                         ),
                     ))
                     continue
-                fk_tasks.append((res.name, child_v, fk, parent_name, parent_v))
-        futs = []
-        if fk_tasks:
-            fk_pool = ThreadPoolExecutor(
-                max_workers=max(1, min(8, len(fk_tasks)))
-            )
-            futs = [
-                (
-                    name,
+                fk_futs.append((
+                    res.name,
                     child_v,
                     fk,
                     parent_name,
-                    fk_pool.submit(
+                    pool.submit(
                         check_foreign_key,
                         child_v.key_view(fk.fields),
                         fk.fields,
                         parent_v.key_view(fk.reference_fields),
                         fk.reference_fields,
                     ),
-                )
-                for name, child_v, fk, parent_name, parent_v in fk_tasks
-            ]
+                ))
         # drain the deferred PK/unique checks while the FK anti-joins
         # run; key errors land before FK errors, as they always did
         for v in validations.values():
             v.resolve_keys()
         for child_v, err in fk_degraded:
             child_v.errors.append(err)
-        for name, child_v, fk, parent_name, fut in futs:
+        for name, child_v, fk, parent_name, fut in fk_futs:
             result = fut.result()
             if not result.ok:
                 err = result.to_error(name, fk.fields, "foreignKey")
                 err.message += f" (reference: {parent_name})"
                 child_v.errors.append(err)
-    finally:
-        # both pools shut down on ANY exit (ADVICE r11: an exception
-        # in resolve_keys()/an FK future used to leak fk_pool threads)
-        if fk_pool is not None:
-            fk_pool.shutdown(wait=True)
-        key_pool.shutdown(wait=True)
 
     report = assemble_report(validations)
     for v in validations.values():
@@ -1120,17 +1090,16 @@ def partition_valid(
     wide, checks, typed_names = _compile_table(
         df, schema, assume_typed, custom_checks
     )
+    raw_cols = [
+        F.col(f"__raw__{c}").alias(c) if f"__raw__{c}" in wide.columns else F.col(c)
+        for c in typed_names
+    ]
     if not checks:
         # keep the invalid branch's schema IDENTICAL to the checked
         # path (raw columns + __failed_checks) so dead-letter sinks
         # can append either outcome without a schema mismatch
-        raw_cols0 = [
-            F.col(f"__raw__{c}").alias(c)
-            if f"__raw__{c}" in wide.columns else F.col(c)
-            for c in typed_names
-        ]
         empty_invalid = wide.select(
-            *raw_cols0,
+            *raw_cols,
             F.array().cast("array<string>").alias("__failed_checks"),
         ).limit(0)
         return wide.select(*typed_names), empty_invalid
@@ -1146,9 +1115,5 @@ def partition_valid(
     marked = wide.withColumn("__failed_checks", labels)
     any_bad = F.size(F.col("__failed_checks")) > 0
     valid = marked.where(~any_bad).select(*typed_names)
-    raw_cols = [
-        F.col(f"__raw__{c}").alias(c) if f"__raw__{c}" in wide.columns else F.col(c)
-        for c in typed_names
-    ]
     invalid = marked.where(any_bad).select(*raw_cols, F.col("__failed_checks"))
     return valid, invalid

@@ -3,6 +3,7 @@ DataFrames plus the clean testdata (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from goodtables_pandas_py_spark.checks.constraints import compile_constraints
@@ -196,21 +197,77 @@ def test_fk_broadcast_plan(spark, sf_dir):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_foreign_key_multi_rejects_width_mismatch(spark):
-    """A parent key narrower/wider than the child key must raise, not
-    silently zip-compare the wrong columns."""
-    import pytest
-
+def _fk_multi(child, child_fields, parent, parent_fields):
     from goodtables_pandas_py_spark.checks.keys import (
         foreign_key_violations_multi,
     )
 
+    return foreign_key_violations_multi(
+        child, child_fields, {"bad": (parent, parent_fields)}
+    )
+
+
+def _fk_foreach_batch(child, child_fields, parent, parent_fields):
+    from goodtables_pandas_py_spark.streaming.validate import (
+        fk_check_foreach_batch,
+    )
+
+    handle = fk_check_foreach_batch(
+        parent, child_fields, parent_fields, lambda viol, _: viol.count()
+    )
+    handle(child, 0)
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [_fk_multi, check_foreign_key, _fk_foreach_batch],
+    ids=["multi", "check_foreign_key", "foreach_batch"],
+)
+def test_foreign_key_multi_rejects_width_mismatch(spark, kernel):
+    """A parent key narrower/wider than the child key must raise, not
+    silently zip-compare the wrong columns — in both FK kernels: the
+    multi-FK pass, and the anti-join behind check_foreign_key and the
+    streaming foreachBatch check. Child (1,) against parent rows
+    (1, 9), (2, 9) used to pass with count 0: only x was compared."""
     child = spark.createDataFrame([(1, 1)], "a long, b long")
-    parent = spark.createDataFrame([(1,)], "x long")
+    parent = spark.createDataFrame([(1, 9), (2, 9)], "x long, y long")
     with pytest.raises(ValueError, match="key width"):
-        foreign_key_violations_multi(
-            child, ["a", "b"], {"bad": (parent, ["x"])}
-        )
+        kernel(child, ["a"], parent, ["x", "y"])
+    with pytest.raises(ValueError, match="key width"):
+        kernel(child, ["a", "b"], parent, ["x"])
+
+
+def test_key_samples_do_not_depend_on_shuffle_partitions(spark):
+    """PK, unique and FK samples are the 20 smallest violating tuples,
+    the same at 7 and at 200 shuffle partitions (a plain LIMIT on the
+    violations returned whichever tuples the first partitions held)."""
+    from goodtables_pandas_py_spark.errors import VALUE_SAMPLE_CAP
+
+    # 900 rows, keys 0..299 twice: 300 duplicated keys
+    df = spark.createDataFrame(
+        [(i % 600,) for i in range(900)], "k long"
+    ).repartition(3)
+    child = spark.range(900).select(F.col("id").alias("c"))
+    parent = spark.range(600).select(F.col("id").alias("p"))
+
+    def samples():
+        return [
+            check_primary_key(df, ["k"]).values,
+            check_unique_key(df, ["k"]).values,
+            check_foreign_key(child, ["c"], parent, ["p"]).values,
+        ]
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    got = []
+    try:
+        for n in (7, 200):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            got.append(samples())
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    smallest = [(k,) for k in range(VALUE_SAMPLE_CAP)]
+    orphans = [(600 + k,) for k in range(VALUE_SAMPLE_CAP)]
+    assert got[0] == got[1] == [smallest, smallest, orphans]
 
 
 # --------------------------------------------- review-finding regressions

@@ -771,20 +771,26 @@ def test_streaming_bigram_scores_match_batch(spark, tmp_path):
 def test_validate_stream_typed_fast_path_matches_batch(spark, tmp_path):
     """r6: a TYPED stream with assume_typed=False takes the same
     per-column fast path as the batch engine — no re-parse in the
-    micro-batch projection, and mask columns row-identical to the
-    batch validation of the same data."""
+    micro-batch projection — and every mask column is row-identical to
+    the batch engine's own (_compile_table) masks on the same data: a
+    typed fast path, a string column with parse errors, and a double
+    column holding NaN where "NaN" is a declared missing token (a
+    rendition the fast path must null like the lexical path)."""
     import datetime as dt
 
     from goodtables_pandas_py_spark.schema import Field, TableSchema
     from goodtables_pandas_py_spark.streaming.validate import validate_stream
+    from goodtables_pandas_py_spark.validate import _compile_table
 
     rows = [
-        (1, 10.0, dt.datetime(2024, 1, 1), "ok"),
-        (2, -5.0, dt.datetime(2024, 2, 2), "bad-enum"),
-        (3, None, None, "ok"),
+        (1, 10.0, dt.datetime(2024, 1, 1), "ok", "5", 1.5),
+        (2, -5.0, dt.datetime(2024, 2, 2), "bad-enum", "x", float("nan")),
+        (3, None, None, "ok", None, None),
     ]
     batch = spark.createDataFrame(
-        rows, "id long, amount double, at timestamp_ntz, status string"
+        rows,
+        "id long, amount double, at timestamp_ntz, status string, "
+        "qty string, ratio double",
     )
     staged = str(tmp_path / "typed_stream")
     batch.write.parquet(staged)
@@ -795,7 +801,10 @@ def test_validate_stream_typed_fast_path_matches_batch(spark, tmp_path):
             Field("at", type="datetime"),
             Field("status", type="string",
                   constraints={"enum": ["ok"]}),
+            Field("qty", type="integer", constraints={"minimum": 0}),
+            Field("ratio", type="number", constraints={"required": True}),
         ],
+        missing_values=["", "NaN"],
     )
     stream = spark.readStream.schema(batch.schema).parquet(staged)
     out = validate_stream(stream, schema, assume_typed=False)
@@ -814,14 +823,23 @@ def test_validate_stream_typed_fast_path_matches_batch(spark, tmp_path):
     # typed columns cannot mis-parse
     for r in got.values():
         assert r["__bad__id"] is False and r["__bad__amount"] is False
+        assert r["__bad__ratio"] is False
     assert got[2]["__viol__amount__minimum"] is True
     assert got[2]["__viol__status__enum"] is True
     assert got[1]["__viol__status__enum"] is False
     assert got[3]["__viol__id__required"] is False  # id present
-    # batch twin agreement on every mask column
-    batch_out = validate_stream(batch, schema, assume_typed=False)
-    bt = {r["id"]: r.asDict() for r in batch_out.collect()}
-    mask_cols = [c for c in bt[1] if c.startswith(("__viol__", "__bad__"))]
+    assert [got[i]["__bad__qty"] for i in (1, 2, 3)] == [False, True, False]
+    # NaN is the declared missing token: as missing as a null
+    assert [got[i]["__viol__ratio__required"] for i in (1, 2, 3)] == [
+        False, True, True,
+    ]
+    # the batch engine's twin: _compile_table's mask columns
+    wide, _, _ = _compile_table(batch, schema, assume_typed=False)
+    mask_cols = [c for c in wide.columns if c.startswith(("__viol__", "__bad__"))]
+    assert sorted(mask_cols) == sorted(
+        c for c in out.columns if c.startswith(("__viol__", "__bad__"))
+    )
+    bt = {r["id"]: r.asDict() for r in wide.select("id", *mask_cols).collect()}
     for i in (1, 2, 3):
         for c in mask_cols:
             assert got[i][c] == bt[i][c], (i, c)

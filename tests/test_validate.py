@@ -2092,3 +2092,118 @@ def test_undecodable_csv_header_falls_back_to_spark_columns(spark, tmp_path):
         {"name": "t", "path": str(path), "schema": {"fields": fields}}]})
     codes = [e["code"] for e in rep["tables"][0]["errors"]]
     assert codes == ["missing-header", "extra-header"], codes
+
+
+def test_key_checks_report_the_same_with_or_without_executor(spark):
+    """validate_table runs every key check through one path: without
+    an executor it drains a pool of its own before returning; with one
+    the checks stay pending until resolve_keys(). A table violating a
+    unique field, its primary key and a uniqueKeys entry reports the
+    same errors, in the same order, either way."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from goodtables_pandas_py_spark.schema import TableSchema
+    from goodtables_pandas_py_spark.validate import validate_table
+
+    df = spark.createDataFrame(
+        [("1", "x", "1", "1"), ("1", "y", "1", "2"), ("2", "x", "2", "2"),
+         ("3", "z", "2", "2"), (None, "w", "3", "3")],
+        "id string, email string, a string, b string",
+    )
+    schema = TableSchema.from_descriptor({
+        "fields": [
+            {"name": "id", "type": "integer"},
+            {"name": "email", "type": "string",
+             "constraints": {"unique": True}},
+            {"name": "a", "type": "integer"},
+            {"name": "b", "type": "integer"},
+        ],
+        "primaryKey": ["id"],
+        "uniqueKeys": [["a", "b"]],
+    })
+    own = validate_table(df, schema, "t")
+    assert not own.pending_keys
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        deferred = validate_table(df, schema, "t", key_executor=pool)
+        assert len(deferred.pending_keys) == 3
+        deferred.resolve_keys()
+    own.unpersist()
+    deferred.unpersist()
+    assert [e.to_dict() for e in own.errors] == [
+        e.to_dict() for e in deferred.errors
+    ]
+    assert [(e.code, e.count, e.values) for e in own.errors] == [
+        ("unique-constraint", 1, [("x",)]),
+        ("primary-key-constraint", 2, [(None,), (1,)]),
+        ("unique-key-constraint", 1, [(2, 2)]),
+    ]
+
+
+def test_package_with_more_tables_than_pool_workers(spark):
+    """validate_package runs tables, key checks and FK anti-joins on one
+    pool of 8 workers. Ten tables, each with a primary key and a
+    foreign key to t1, validate to completion, and each table's report
+    equals its result validated alone: validate_table, then its FK
+    checked against t1."""
+    import threading
+
+    from goodtables_pandas_py_spark.checks.keys import check_foreign_key
+    from goodtables_pandas_py_spark.schema import TableSchema
+    from goodtables_pandas_py_spark.validate import validate_table
+
+    names = [f"t{k}" for k in range(1, 11)]
+    schema = {
+        "fields": [{"name": "id", "type": "integer"},
+                   {"name": "ref", "type": "integer"}],
+        "primaryKey": ["id"],
+        "foreignKeys": [{"fields": ["ref"], "reference": {
+            "resource": "t1", "fields": ["id"]}}],
+    }
+    # t{k}: ids 0..4 plus a duplicate of k % 5; refs 0..4 plus k + 3,
+    # an orphan of t1 from k = 2 on
+    dfs = {
+        f"t{k}": spark.createDataFrame(
+            [(str(i), str((i + k) % 5)) for i in range(5)]
+            + [(str(k % 5), str(k + 3))],
+            "id string, ref string",
+        )
+        for k in range(1, 11)
+    }
+    desc = {"name": "p", "resources": [
+        {"name": n, "schema": schema} for n in names
+    ]}
+    # a deadlocked pool would hang: bound the wait instead
+    out: dict = {}
+    worker = threading.Thread(
+        target=lambda: out.update(
+            report=gt.validate(spark, desc, dataframes=dfs)
+        ),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "validate_package did not finish"
+    report = out["report"]
+    assert [t["source"] for t in report["tables"]] == names
+
+    sch = TableSchema.from_descriptor(schema)
+    alone = {n: validate_table(dfs[n], sch, n) for n in names}
+    try:
+        for n in names:
+            fk = check_foreign_key(alone[n].parsed, ["ref"],
+                                   alone["t1"].parsed, ["id"])
+            errors = [e.to_dict() for e in alone[n].errors]
+            if not fk.ok:
+                err = fk.to_error(n, ["ref"], "foreignKey")
+                err.message += " (reference: t1)"
+                errors.append(err.to_dict())
+            (table,) = [t for t in report["tables"] if t["source"] == n]
+            assert table["errors"] == errors, n
+            assert table["row-count"] == alone[n].row_count == 6
+            assert [e["code"] for e in errors] == (
+                ["primary-key-constraint"] if n == "t1"
+                else ["primary-key-constraint", "foreign-key-error"]
+            )
+    finally:
+        for v in alone.values():
+            v.unpersist()
