@@ -682,13 +682,27 @@ def _session_shuffle_partitions(spark) -> int:
             return 200
 
 
-def _canonical_group_key(value) -> str:
-    """Canonical string rendering of a group/bin value — the
-    ``_part_key`` convention the release machinery pins (bool renders
-    'true'/'false' like Spark's cast and hive dirs, NEVER Python's
-    'True'). Kept in sync via the shared import below."""
-    from .pipeline import _part_key
+def _part_key(value) -> str:
+    """Canonical string key for a collected group VALUE: booleans
+    render 'true'/'false' like Spark's ``cast(col as string)``, never
+    Python's 'True'; null is the '__null__' sentinel; everything else
+    is ``str()``. It matches Spark's rendering for strings, integers,
+    booleans and dates, NOT for every type (doubles: '1e-05' vs
+    Spark's '1.0E-5') — release manifests therefore take their keys
+    from Spark itself (``pipeline._by_key``), never from here."""
+    if value is None:
+        return "__null__"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    return str(value)
 
+
+def _canonical_group_key(value) -> str:
+    """Canonical string rendering of a group/bin value (:func:`_part_key`):
+    what ``select_token_budget_by`` accepts as a budgets key and what
+    ``write_curriculum`` records in its manifest — the same 'true' /
+    'false' / '__null__' forms release manifest keys use for boolean
+    and null splits."""
     return _part_key(value)
 
 
@@ -884,8 +898,8 @@ def select_token_budget_by(
     def _budget_for(gval):
         if isinstance(budgets, dict):
             # look up the RAW typed value first, then its canonical
-            # string rendering (the _part_key convention the release
-            # machinery uses — 'true' for True, str() for the rest):
+            # string rendering (_part_key: 'true' for True, str() for
+            # the rest):
             # the docstring promises the canonical form works, and a
             # near-miss key must not silently drop a group (ADVICE r8)
             if gval in budgets:

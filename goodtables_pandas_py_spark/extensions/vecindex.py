@@ -1259,21 +1259,13 @@ def delete_from_ivf_index_version(
     ``n_deleted: 0`` attached) without claiming or publishing — a
     replayed takedown is a true no-op, not a version that duplicates
     its base."""
-    from .pipeline import (
-        _apply_retention,
-        _claim_version,
-        _next_version_name,
-        _pointer_paths,
-        _read_text,
-        _swap_or_abandon,
-    )
+    from .pipeline import _current, _publish
 
-    cur = _read_text(spark, _pointer_paths(root)[0])
+    cur = _current(spark, root)
     if cur is None:
         raise FileNotFoundError(
             f"no CURRENT pointer under {root} — nothing to delete from"
         )
-    cur = cur.strip()
     cur_dir = os.path.join(root, "versions", cur)
     idx = read_ivf_index(spark, cur_dir)
     # persist the snapshot HERE: the noop-vs-publish decision and the
@@ -1307,26 +1299,17 @@ def delete_from_ivf_index_version(
                 "noop_replay": True,
             }
             return manifest
-        vname = _next_version_name(spark, root)
-        _claim_version(spark, root, vname)
-        manifest = delete_from_ivf_index(
-            spark,
-            cur_dir,
-            os.path.join(root, "versions", vname),
-            del_df,
-            broadcast_cap=broadcast_cap,
-        )
+
+        def write(vname: str, vdir: str) -> dict:
+            manifest = delete_from_ivf_index(
+                spark, cur_dir, vdir, del_df, broadcast_cap=broadcast_cap
+            )
+            manifest["deleted"]["base_version"] = cur
+            return _stamp_version(vdir, vname, manifest)
+
+        return _publish(spark, root, cur, write, keep_versions)
     finally:
         del_df.unpersist()
-    manifest["version"] = vname
-    manifest["deleted"]["base_version"] = cur
-    with open(
-        os.path.join(root, "versions", vname, "manifest.json"), "w"
-    ) as fh:
-        json.dump(manifest, fh, indent=2, sort_keys=True)
-    _swap_or_abandon(spark, root, vname, cur)
-    _apply_retention(spark, spark, root, keep_versions, vname)
-    return manifest
 
 
 def _upsert_changed_rows(
@@ -1663,21 +1646,13 @@ def upsert_into_ivf_index_version(
     batch is persisted around both so probe and rewrite see the same
     rows even from a nondeterministic caller frame (the delete-path
     lesson)."""
-    from .pipeline import (
-        _apply_retention,
-        _claim_version,
-        _next_version_name,
-        _pointer_paths,
-        _read_text,
-        _swap_or_abandon,
-    )
+    from .pipeline import _current, _publish
 
-    cur = _read_text(spark, _pointer_paths(root)[0])
+    cur = _current(spark, root)
     if cur is None:
         raise FileNotFoundError(
             f"no CURRENT pointer under {root} — nothing to upsert into"
         )
-    cur = cur.strip()
     cur_dir = os.path.join(root, "versions", cur)
     idx = read_ivf_index(spark, cur_dir)
     snap = df.persist()
@@ -1711,33 +1686,28 @@ def upsert_into_ivf_index_version(
                 "noop_replay": True,
             }
             return manifest
-        vname = _next_version_name(spark, root)
-        _claim_version(spark, root, vname)
-        manifest = upsert_into_ivf_index(
-            spark,
-            cur_dir,
-            os.path.join(root, "versions", vname),
-            snap,
-            id_col=id_col,
-            vec_col=vec_col,
-            broadcast_cap=broadcast_cap,
-            _prepared=(probe_assigned, changed, payload_col),
-        )
+
+        def write(vname: str, vdir: str) -> dict:
+            manifest = upsert_into_ivf_index(
+                spark,
+                cur_dir,
+                vdir,
+                snap,
+                id_col=id_col,
+                vec_col=vec_col,
+                broadcast_cap=broadcast_cap,
+                _prepared=(probe_assigned, changed, payload_col),
+            )
+            manifest["upserted"]["base_version"] = cur
+            return _stamp_version(vdir, vname, manifest)
+
+        return _publish(spark, root, cur, write, keep_versions)
     finally:
         if probe_assigned is not None:
             probe_assigned.unpersist()
         if changed is not None:
             changed.unpersist()
         snap.unpersist()
-    manifest["version"] = vname
-    manifest["upserted"]["base_version"] = cur
-    with open(
-        os.path.join(root, "versions", vname, "manifest.json"), "w"
-    ) as fh:
-        json.dump(manifest, fh, indent=2, sort_keys=True)
-    _swap_or_abandon(spark, root, vname, cur)
-    _apply_retention(spark, spark, root, keep_versions, vname)
-    return manifest
 
 
 def merge_ivf_cold_lists(
@@ -2125,8 +2095,17 @@ def ivf_maintenance_plan(
 
 
 # ---------------------------------------------------------------------------
-# versioned index roots: atomic publish via the release-sink pointer
-# machinery (r10) — serving never sees a half-built index
+# versioned index roots: atomic publish via the release-sink protocol
+# (pipeline._publish, r10) — serving never sees a half-built index
+
+
+def _stamp_version(vdir: str, vname: str, manifest: dict) -> dict:
+    """Record ``vname`` (and any audit block the caller added) in the
+    manifest the index writer already wrote into ``vdir``."""
+    manifest["version"] = vname
+    with open(os.path.join(vdir, "manifest.json"), "w") as fh:
+        json.dump(manifest, fh, indent=2, sort_keys=True)
+    return manifest
 
 
 def write_ivf_index_version(
@@ -2146,31 +2125,18 @@ def write_ivf_index_version(
     (the r10 conflict hygiene), exactly like a data release.
     ``keep_versions`` prunes old published indexes after the swap —
     size it past the longest-running query's lifetime."""
-    from .pipeline import (
-        _apply_retention,
-        _claim_version,
-        _next_version_name,
-        _pointer_paths,
-        _read_text,
-        _swap_or_abandon,
-    )
+    from .pipeline import _current, _publish
 
     spark = df.sparkSession
-    base = _read_text(spark, _pointer_paths(root)[0])
-    base = base.strip() if base is not None else None
-    vname = _next_version_name(spark, root)
-    _claim_version(spark, root, vname)
-    manifest = write_ivf_index(
-        df, os.path.join(root, "versions", vname), **build_kwargs
+
+    def write(vname: str, vdir: str) -> dict:
+        return _stamp_version(
+            vdir, vname, write_ivf_index(df, vdir, **build_kwargs)
+        )
+
+    return _publish(
+        spark, root, _current(spark, root), write, keep_versions
     )
-    manifest["version"] = vname
-    with open(
-        os.path.join(root, "versions", vname, "manifest.json"), "w"
-    ) as fh:
-        json.dump(manifest, fh, indent=2, sort_keys=True)
-    _swap_or_abandon(spark, root, vname, base)
-    _apply_retention(spark, spark, root, keep_versions, vname)
-    return manifest
 
 
 def read_ivf_index_current(spark: SparkSession, root: str) -> IvfIndex:
@@ -2178,17 +2144,15 @@ def read_ivf_index_current(spark: SparkSession, root: str) -> IvfIndex:
     returned handle keeps reading its immutable version dir even if a
     recluster publishes a newer one mid-query (snapshot isolation by
     layout, same as :func:`~.pipeline.read_release`)."""
-    from .pipeline import _pointer_paths, _read_text
+    from .pipeline import _current
 
-    cur = _read_text(spark, _pointer_paths(root)[0])
+    cur = _current(spark, root)
     if cur is None:
         raise FileNotFoundError(
             f"no CURRENT pointer under {root} — publish with "
             "write_ivf_index_version first"
         )
-    return read_ivf_index(
-        spark, os.path.join(root, "versions", cur.strip())
-    )
+    return read_ivf_index(spark, os.path.join(root, "versions", cur))
 
 
 def recluster_ivf_index_version(
@@ -2208,41 +2172,27 @@ def recluster_ivf_index_version(
     number BEFORE the corpus-proportional rewrite starts, so two
     overlapping reclusters cannot both pay the rebuild and then race
     the pointer."""
-    from .pipeline import (
-        _apply_retention,
-        _claim_version,
-        _next_version_name,
-        _pointer_paths,
-        _read_text,
-        _swap_or_abandon,
-    )
+    from .pipeline import _current, _publish
 
-    cur = _read_text(spark, _pointer_paths(root)[0])
+    cur = _current(spark, root)
     if cur is None:
         raise FileNotFoundError(
             f"no CURRENT pointer under {root} — nothing to recluster"
         )
-    cur = cur.strip()
-    vname = _next_version_name(spark, root)
-    _claim_version(spark, root, vname)
-    manifest = recluster_ivf_index(
-        spark,
-        os.path.join(root, "versions", cur),
-        os.path.join(root, "versions", vname),
-        nlist=nlist,
-        refine=refine,
-        train_cap=train_cap,
-    )
-    manifest["version"] = vname
-    manifest["reclustered"]["base_version"] = cur
-    # the audit block lives in the written manifest too
-    with open(
-        os.path.join(root, "versions", vname, "manifest.json"), "w"
-    ) as fh:
-        json.dump(manifest, fh, indent=2, sort_keys=True)
-    _swap_or_abandon(spark, root, vname, cur)
-    _apply_retention(spark, spark, root, keep_versions, vname)
-    return manifest
+
+    def write(vname: str, vdir: str) -> dict:
+        manifest = recluster_ivf_index(
+            spark,
+            os.path.join(root, "versions", cur),
+            vdir,
+            nlist=nlist,
+            refine=refine,
+            train_cap=train_cap,
+        )
+        manifest["reclustered"]["base_version"] = cur
+        return _stamp_version(vdir, vname, manifest)
+
+    return _publish(spark, root, cur, write, keep_versions)
 
 
 def ivf_append_foreach_batch(

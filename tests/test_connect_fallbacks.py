@@ -103,3 +103,25 @@ def test_write_release_manifest_without_gateway(spark, tmp_path):
 
     with open(os.path.join(out, "manifest.json")) as fh:
         assert json.load(fh)["n_rows"] == 5
+
+
+def test_versioned_release_retention_without_gateway(spark, tmp_path):
+    """The whole publish protocol (version listing, claim, manifest,
+    swap, retention) runs on the ``spark_for_fs`` session: with no
+    JVM gateway there, the second publish still prunes v1."""
+    import os
+
+    from goodtables_pandas_py_spark.extensions import pipeline as xpipe
+
+    df = spark.range(5).withColumnRenamed("id", "doc_id")
+    root = str(tmp_path / "rel")
+    for _ in range(2):
+        man = xpipe.write_release_version(
+            df, root, spark_for_fs=_NoGateway(), keep_versions=1
+        )
+    assert man["version"] == "v00000002"
+    assert sorted(os.listdir(os.path.join(root, "versions"))) == [
+        "v00000002"
+    ]
+    with open(os.path.join(root, "CURRENT")) as fh:
+        assert fh.read().strip() == "v00000002"

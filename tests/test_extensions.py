@@ -2769,16 +2769,13 @@ def test_release_append_refuses_schema_drift(spark, tmp_path):
 
 
 def test_part_key_matches_spark_string_cast(spark):
-    """_part_key must agree with Spark's cast-to-string for every
-    split-column type the release machinery meets: the reuse compare
-    uses manifest keys (_part_key) against cast(col as string)
-    partition predicates, and hive dir names follow the same
-    rendering."""
+    """_part_key (the group-key rendering of splits.py) agrees with
+    Spark's cast-to-string for strings, integers, booleans, a short
+    double and dates — the forms a budgets dict or curriculum manifest
+    key takes. Release manifests take their keys from Spark itself."""
     import datetime as dt
 
-    from goodtables_pandas_py_spark.extensions.pipeline import (
-        _part_key,
-    )
+    from goodtables_pandas_py_spark.extensions.splits import _part_key
 
     cases = [
         ("train", "string"),
@@ -3593,6 +3590,237 @@ def test_release_merge_and_append_work_on_emptied_release(
     assert m4["n_rows"] == 2
 
 
+def _rewrite_manifest(path: str, man: dict) -> None:
+    """Overwrite a library-written manifest.json and drop the .crc
+    sidecar Hadoop's checksummed local FS left next to it."""
+    import json
+    import os
+
+    with open(path, "w") as fh:
+        fh.write(json.dumps(man))
+    crc = os.path.join(os.path.dirname(path), ".manifest.json.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+_DIVERGING_SPLITS = [
+    # (split type, value Python's str() renders unlike Spark, other)
+    ("double", 1e-05, 2.5),
+    ("double", 1e20, 2.5),
+    ("float", 0.1, 2.5),
+    ("timestamp", "2024-01-01 00:00:00.5", "2024-01-02 00:00:00"),
+]
+
+
+@pytest.mark.parametrize(
+    "typ,val,other", _DIVERGING_SPLITS,
+    ids=["double-1e-05", "double-1e20", "float-0.1", "timestamp-frac"],
+)
+def test_release_keys_follow_spark_rendering(
+    spark, tmp_path, typ, val, other
+):
+    """A split value whose Python str() differs from Spark's string
+    cast ('1e-05' vs '1.0E-5'): an unchanged increment must reuse
+    every partition (it raised 'directory is missing'), and appending
+    one row must keep every earlier row (the prune predicate missed
+    the partition, so the rewrite silently dropped its rows)."""
+    from goodtables_pandas_py_spark.extensions.pipeline import (
+        read_release,
+        write_release_append,
+        write_release_increment,
+        write_release_version,
+    )
+
+    root = str(tmp_path / "rel")
+    schema = "doc_id long, text string, split_raw string"
+    rows = [(i, f"t{i}", str(val if i % 2 else other)) for i in range(20)]
+
+    def frame(data):
+        return spark.createDataFrame(data, schema).select(
+            "doc_id", "text", F.col("split_raw").cast(typ).alias("split")
+        )
+
+    df = frame(rows)
+    m1 = write_release_version(df, root)
+    assert m1["n_rows"] == 20 and len(m1["row_counts"]) == 2
+    m2 = write_release_increment(df, root)
+    assert m2["incremental"]["rewritten"] == []
+    assert m2["incremental"]["reused"] == sorted(m1["row_counts"])
+    m3 = write_release_append(frame([(99, "new", str(val))]), root)
+    assert m3["n_rows"] == 21
+    got, _ = read_release(spark, root)
+    assert got.count() == 21
+    assert sorted(m3["row_counts"].values()) == [10, 11]
+
+
+def test_release_stale_manifest_keys_rewrite_or_fail_loudly(
+    spark, tmp_path
+):
+    """A release published before manifest keys followed Spark's
+    rendering carries a key ('1e-05') that names no directory
+    ('split=1.0E-5'). An increment rewrites that partition; an append
+    refuses loudly — neither drops a row."""
+    import os
+
+    from goodtables_pandas_py_spark.extensions.pipeline import (
+        read_release,
+        write_release_append,
+        write_release_increment,
+        write_release_version,
+    )
+
+    root = str(tmp_path / "rel")
+    rows = [(i, 1e-05 if i % 2 else 2.5) for i in range(20)]
+    df = spark.createDataFrame(rows, "doc_id long, split double")
+    m1 = write_release_version(df, root)
+    path = os.path.join(root, "versions", m1["version"], "manifest.json")
+    stale = {"1.0E-5": "1e-05", "2.5": "2.5"}
+    for field in ("row_counts", "partition_fingerprints"):
+        m1[field] = {stale[k]: v for k, v in m1[field].items()}
+    _rewrite_manifest(path, m1)
+
+    batch = spark.createDataFrame([(99, 2.5)], "doc_id long, split double")
+    with pytest.raises(OSError, match="1e-05"):
+        write_release_append(batch, root)
+    got, man = read_release(spark, root)
+    assert man["version"] == m1["version"] and got.count() == 20
+
+    m2 = write_release_increment(df, root)
+    assert m2["incremental"]["reused"] == ["2.5"]
+    assert m2["incremental"]["rewritten"] == ["1.0E-5"]
+    assert m2["incremental"]["removed"] == ["1e-05"]
+    assert read_release(spark, root)[0].count() == 20
+
+
+def test_compact_emptied_release_is_noop(spark, tmp_path):
+    """An emptied release (n_rows 0, {} fingerprints) is fingerprinted
+    for compaction too: nothing is fragmented, so compaction returns
+    the current manifest instead of refusing it."""
+    from goodtables_pandas_py_spark.extensions import pipeline as pl
+
+    root = str(tmp_path / "rel")
+    schema = "doc_id long, split string, text string"
+    pl.write_release_version(
+        spark.createDataFrame([(0, "a", "x"), (1, "b", "y")], schema), root
+    )
+    m2 = pl.write_release_merge(
+        spark.createDataFrame([], schema),
+        root,
+        deletes=spark.createDataFrame(
+            [(0, "a"), (1, "b")], "doc_id long, split string"
+        ),
+    )
+    assert m2["n_rows"] == 0 and m2["partition_fingerprints"] == {}
+    assert pl.compact_release_version(spark, root)["version"] == m2["version"]
+    assert pl.read_release(spark, root)[1]["version"] == m2["version"]
+
+
+def test_compact_release_equality_proof_aborts(
+    spark, tmp_path, monkeypatch
+):
+    """The compaction equality proof is falsifiable: a rewrite that
+    changes one compacted partition must raise before the swap, leave
+    CURRENT where it was, abandon the new version dir entirely (no
+    manifest, no directory), and let the next compaction publish."""
+    import os
+
+    import goodtables_pandas_py_spark.sources as _sources
+    from goodtables_pandas_py_spark.extensions import pipeline as pl
+
+    root = str(tmp_path / "rel")
+    schema = "doc_id long, text string, split string"
+    pl.write_release_version(
+        spark.createDataFrame([(1, "a", "train"), (2, "b", "val")], schema),
+        root,
+    )
+    for i in range(2):  # fragment 'train'
+        pl.write_release_append(
+            spark.createDataFrame([(10 + i, f"t{i}", "train")], schema),
+            root,
+        )
+    cur = pl.read_release(spark, root)[1]["version"]
+    real_write = _sources.write_partitioned
+
+    def corrupting_write(df, path, cols, *a, **k):
+        bad = df.withColumn("text", F.concat(F.col("text"), F.lit("!")))
+        return real_write(bad, path, cols, *a, **k)
+
+    monkeypatch.setattr(_sources, "write_partitioned", corrupting_write)
+    with pytest.raises(RuntimeError, match="changed its content fingerprint"):
+        pl.compact_release_version(spark, root)
+    monkeypatch.undo()
+
+    assert pl.read_release(spark, root)[1]["version"] == cur
+    assert pl.list_release_versions(spark, root)[-1] == cur
+    abandoned = f"v{int(cur[1:]) + 1:08d}"
+    assert not os.path.exists(os.path.join(root, "versions", abandoned))
+    hist = pl.release_history(spark, root).collect()
+    assert all(r["published"] for r in hist)
+    man = pl.compact_release_version(spark, root)
+    assert man["incremental"]["rewritten"] == ["train"]
+    assert pl.read_release(spark, root)[1]["version"] == man["version"]
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["version", "increment", "append", "merge", "compact", "migrate"],
+)
+def test_release_publishers_lose_moved_pointer_race(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Every release publisher loses a moved-pointer race the same
+    way: a winner publishes between the loser's manifest finalize and
+    its swap; the loser raises ReleaseConflictError ('moved'), the
+    winner stays CURRENT, and nothing is left for vacuum."""
+    from goodtables_pandas_py_spark.extensions import pipeline as pl
+
+    schema = "doc_id long, text string, split string"
+
+    def df(rows):
+        return spark.createDataFrame(rows, schema)
+
+    # each runs on a base whose 'train' partition holds two files
+    publish = {
+        "version": lambda r: pl.write_release_version(
+            df([(5, "e", "val")]), r),
+        "increment": lambda r: pl.write_release_increment(
+            df([(1, "a", "train"), (3, "c", "train"), (5, "e", "val")]), r),
+        "append": lambda r: pl.write_release_append(
+            df([(5, "e", "val")]), r),
+        "merge": lambda r: pl.write_release_merge(df([(2, "B", "val")]), r),
+        "compact": lambda r: pl.compact_release_version(spark, r),
+        "migrate": lambda r: pl.migrate_release_schema(
+            spark, r, drop=["text"]),
+    }[kind]
+    root = str(tmp_path / "rel")
+    pl.write_release_version(df([(1, "a", "train"), (2, "b", "val")]), root)
+    pl.write_release_append(df([(3, "c", "train")]), root)
+
+    orig_fin = pl._finalize_release_manifest
+    state = {"winner": None}
+
+    def fin_then_interleave(*a, **k):
+        man = orig_fin(*a, **k)
+        if state["winner"] is None:
+            state["winner"] = "pending"  # B's publish recurses here
+            state["winner"] = pl.write_release_version(
+                spark.createDataFrame([(9, "winner", "train")], schema),
+                root,
+            )["version"]
+        return man
+
+    monkeypatch.setattr(pl, "_finalize_release_manifest", fin_then_interleave)
+    with pytest.raises(pl.ReleaseConflictError, match="moved"):
+        publish(root)
+    monkeypatch.undo()
+
+    got, man = pl.read_release(spark, root)
+    assert man["version"] == state["winner"]
+    assert [r["doc_id"] for r in got.collect()] == [9]
+    assert all(r["published"] for r in pl.release_history(spark, root).collect())
+    assert pl.vacuum_release_orphans(spark, root, grace_seconds=0) == []
+
+
 def test_migrate_release_schema_round_trip(spark, tmp_path):
     """migrate_release_schema (r10, VERDICT r9 item 9): drop + rename
     + lossless retype in one publish of kind 'migrate'; content of
@@ -4056,10 +4284,10 @@ def test_fingerprint_scheme_versioning(spark, tmp_path):
 
     from goodtables_pandas_py_spark.extensions.pipeline import (
         _fingerprint_agg,
-        _part_key,
         write_release_increment,
         write_release_version,
     )
+    from goodtables_pandas_py_spark.extensions.splits import _part_key
 
     schema = "doc_id long, text string, split string"
     rows = [
