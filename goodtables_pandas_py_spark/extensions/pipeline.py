@@ -20,7 +20,9 @@ swap, retention), :func:`_current` / :func:`_manifest` are the only
 pointer and manifest reads, and a partition's manifest key is Spark's
 own string rendering of the split value (:func:`_by_key` computes it,
 :func:`_key_filter` prunes by it), so keys, hive directory names and
-prune predicates always agree.
+prune predicates always agree. Every driver-side file operation goes
+through :mod:`..storage`, whose backend the root's path picks: Python
+``os`` for local roots, Hadoop ``FileSystem`` for other schemes.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .. import storage
 from .decontam import contaminated_ids
 from .dedup import near_dedup
 from .splits import top_k_per_group
@@ -266,14 +269,14 @@ def write_release(
     READING BACK the written parquet — exact for what's on disk (the
     upstream plan is not re-executed, so a non-deterministic or
     since-changed source can't make the manifest lie) and far cheaper
-    than re-running the pipeline. The manifest writes through the
-    Hadoop FS API, so ``out_dir`` may be any scheme the cluster can
-    reach (s3a://, hdfs://, local); without a JVM gateway (Spark
-    Connect) local out_dirs fall back to a plain Python write.
-    ``spark_for_fs`` overrides the session used for the manifest's FS
-    access (tests / mixed classic-Connect deployments); default is
-    the frame's own session. Computed manifest keys WIN over
-    ``manifest_extra`` collisions — it is an audit artifact."""
+    than re-running the pipeline. The manifest writes through
+    :mod:`..storage`: plain Python on a local ``out_dir``, the Hadoop
+    FS API on any other scheme the cluster can reach (s3a://,
+    hdfs://). ``spark_for_fs`` overrides the session used for the
+    manifest's non-local FS access (mixed classic-Connect
+    deployments); default is the frame's own session. Computed
+    manifest keys WIN over ``manifest_extra`` collisions — it is an
+    audit artifact."""
     import json
 
     from ..sources import write_partitioned
@@ -463,11 +466,9 @@ def _finalize_release_manifest(
     WITH a manifest (an un-vacuumable phantom); instead the writer
     dies here with :class:`ReleaseConflictError`."""
     import json
-    import os
 
-    from ..sources import _jvm_fs, _local_fs_path
-
-    if require_claim and _read_text(fs_spark, f"{out_dir}/.CLAIM") is None:
+    claim = f"{out_dir}/.CLAIM"
+    if require_claim and storage.read_text(fs_spark, claim) is None:
         raise ReleaseConflictError(
             f"claim file vanished under {out_dir} before the manifest "
             "was finalized — the version dir was vacuumed or deleted "
@@ -551,32 +552,14 @@ def _finalize_release_manifest(
     # scale — a vacuum racing THROUGH that window would delete the
     # claimed dir and this write would re-create it manifest-complete
     # (the exact un-vacuumable phantom the guard exists to prevent)
-    if require_claim and _read_text(fs_spark, f"{out_dir}/.CLAIM") is None:
+    if require_claim and storage.read_text(fs_spark, claim) is None:
         raise ReleaseConflictError(
             f"claim file vanished under {out_dir} during the manifest "
             "read-back — the version dir was vacuumed or deleted "
             "while this publish was scanning; re-run against the "
             "current base"
         )
-    # Hadoop FS write covers every Spark-visible filesystem; without
-    # a JVM gateway (Spark Connect) fall back to a plain local write
-    # for local out_dirs (VERDICT r5 item 6)
-    try:
-        jvm, hconf = _jvm_fs(fs_spark)
-    except RuntimeError:
-        local = _local_fs_path(out_dir)
-        if local is None:
-            raise
-        with open(os.path.join(local, "manifest.json"), "w") as fh:
-            fh.write(payload)
-        return manifest
-    jpath = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/manifest.json")
-    fs = jpath.getFileSystem(hconf)
-    stream = fs.create(jpath, True)
-    try:
-        stream.write(bytearray(payload.encode("utf-8")))
-    finally:
-        stream.close()
+    storage.write_text(fs_spark, f"{out_dir}/manifest.json", payload)
     return manifest
 
 
@@ -603,13 +586,9 @@ class ReleaseConflictError(RuntimeError):
     :func:`vacuum_release_orphans` scope."""
 
 
-def _pointer_paths(root: str) -> tuple[str, str]:
-    return f"{root}/CURRENT", f"{root}/CURRENT.tmp"
-
-
 def _current(fs_spark, root: str) -> str | None:
     """The version CURRENT points at, None when nothing is published."""
-    text = _read_text(fs_spark, _pointer_paths(root)[0])
+    text = storage.read_text(fs_spark, f"{root}/CURRENT")
     return text.strip() if text is not None else None
 
 
@@ -618,7 +597,9 @@ def _manifest(fs_spark, root: str, version: str) -> dict | None:
     claimed or crashed dir), pruned, or never existed."""
     import json
 
-    text = _read_text(fs_spark, f"{root}/versions/{version}/manifest.json")
+    text = storage.read_text(
+        fs_spark, f"{root}/versions/{version}/manifest.json"
+    )
     return json.loads(text) if text is not None else None
 
 
@@ -646,49 +627,23 @@ def _abandon(fs_spark, root: str, vname: str) -> None:
     successful swap must never delete the version readers are on."""
     if _current(fs_spark, root) != vname:
         vdir = f"{root}/versions/{vname}"
-        _delete_file(fs_spark, f"{vdir}/manifest.json")
-        _delete_dir(fs_spark, vdir)
+        storage.delete(fs_spark, f"{vdir}/manifest.json")
+        storage.delete(fs_spark, vdir, recursive=True)
 
 
 def _claim_version(fs_spark, root: str, vname: str) -> None:
-    """Atomically claim ``vname`` by exclusive-creating its
-    ``.CLAIM`` file — the fencing step of the concurrent-writer
-    guard. Two publishers that both computed max(existing)+1 race
-    here BEFORE writing any data: exactly one create succeeds
-    (``O_EXCL`` locally, ``FileSystem.createNewFile`` — atomic on
-    HDFS — through the JVM), the other gets
-    :class:`ReleaseConflictError`. The claim file lives inside the
+    """Claim ``vname`` by exclusive-creating its ``.CLAIM`` file — the
+    fencing step of the concurrent-writer guard. Two publishers that
+    both computed max(existing)+1 race here BEFORE writing any data:
+    the loser gets :class:`ReleaseConflictError`. The claim is atomic
+    where the store's exclusive create is (:func:`storage.create_exclusive`):
+    ``O_EXCL`` on local roots, ``createNewFile`` on HDFS; object
+    stores need an external lock. The claim file lives inside the
     version dir, so retention's recursive delete collects it and
     ``list_release_versions`` semantics are unchanged."""
-    import os
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    vdir = f"{root}/versions/{vname}"
-    try:
-        jvm, hconf = _jvm_fs(fs_spark)
-    except RuntimeError:
-        local = _local_fs_path(vdir)
-        if local is None:
-            raise
-        os.makedirs(local, exist_ok=True)
-        try:
-            fd = os.open(
-                os.path.join(local, ".CLAIM"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-            os.close(fd)
-        except FileExistsError:
-            raise ReleaseConflictError(
-                f"version {vname} under {root} is already claimed by "
-                "another publisher — the release sink is single-writer;"
-                " re-read CURRENT and re-run against the new base"
-            ) from None
-        return
-    jclaim = jvm.org.apache.hadoop.fs.Path(f"{vdir}/.CLAIM")
-    fs = jclaim.getFileSystem(hconf)
-    fs.mkdirs(jclaim.getParent())
-    if not fs.createNewFile(jclaim):
+    if not storage.create_exclusive(
+        fs_spark, f"{root}/versions/{vname}/.CLAIM"
+    ):
         raise ReleaseConflictError(
             f"version {vname} under {root} is already claimed by "
             "another publisher — the release sink is single-writer; "
@@ -770,119 +725,19 @@ def _swap_or_abandon(fs_spark, root: str, vname: str, base: str | None):
         raise
 
 
-def _delete_file(spark, path: str) -> None:
-    import os
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    try:
-        jvm, hconf = _jvm_fs(spark)
-    except RuntimeError:
-        local = _local_fs_path(path)
-        if local is None:
-            raise
-        if os.path.exists(local):
-            os.remove(local)
-        return
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    if fs.exists(jpath):
-        fs.delete(jpath, False)
-
-
-def _mtime(spark, path: str) -> float | None:
-    """Modification time (epoch seconds) of ``path``, None when it
-    does not exist — the age signal for vacuum's grace period."""
-    import os
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    try:
-        jvm, hconf = _jvm_fs(spark)
-    except RuntimeError:
-        local = _local_fs_path(path)
-        if local is None:
-            raise
-        return os.path.getmtime(local) if os.path.exists(local) else None
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    if not fs.exists(jpath):
-        return None
-    return fs.getFileStatus(jpath).getModificationTime() / 1000.0
-
-
-def _read_text(spark, path: str) -> str | None:
-    """Tiny-file read through Hadoop FS, plain-Python fallback for
-    local paths without a JVM gateway (Spark Connect)."""
-    import os
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    try:
-        jvm, hconf = _jvm_fs(spark)
-    except RuntimeError:
-        local = _local_fs_path(path)
-        if local is None:
-            raise
-        if not os.path.exists(local):
-            return None
-        with open(local) as fh:
-            return fh.read()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    if not fs.exists(jpath):
-        return None
-    stream = fs.open(jpath)
-    # read JVM-side into a byte stream: a Python bytearray buffer
-    # would NOT round-trip through py4j (Java fills a copy)
-    baos = jvm.java.io.ByteArrayOutputStream()
-    jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, True)
-    return bytes(baos.toByteArray()).decode("utf-8")
-
-
 def _swap_pointer(spark, root: str, version: str) -> None:
-    """Publish ``version`` by atomically replacing the CURRENT
-    pointer file: write CURRENT.tmp fully, then rename over CURRENT.
-    Rename is atomic on POSIX (os.replace) and HDFS; plain object
+    """Publish ``version`` by replacing the CURRENT pointer file
+    (:func:`storage.replace_text`: the new content lands fully in
+    CURRENT.tmp, then takes CURRENT's place). On local roots that is
+    ``os.replace`` — atomic, CURRENT never absent. On Hadoop schemes
+    it is delete-then-rename — on HDFS a sub-ms window with no
+    CURRENT, in which a reader finds nothing published; plain object
     stores lack atomic rename — there, front this layout with a real
     table format (Delta/Iceberg) or a conditional-put pointer. This
     module is the documented offline stand-in (COVERAGE.md gap note):
     the LAYOUT (immutable version dirs + one tiny mutable pointer) is
     exactly the table-format idea, minus the jars."""
-    import os
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    cur, tmp = _pointer_paths(root)
-    try:
-        jvm, hconf = _jvm_fs(spark)
-    except RuntimeError:
-        local = _local_fs_path(root)
-        if local is None:
-            raise
-        ltmp = os.path.join(local, "CURRENT.tmp")
-        with open(ltmp, "w") as fh:
-            fh.write(version)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ltmp, os.path.join(local, "CURRENT"))
-        return
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    jcur = jvm.org.apache.hadoop.fs.Path(cur)
-    fs = jtmp.getFileSystem(hconf)
-    stream = fs.create(jtmp, True)
-    try:
-        stream.write(bytearray(version.encode("utf-8")))
-    finally:
-        stream.close()
-    # HDFS rename does not overwrite; delete-then-rename leaves a
-    # sub-ms window with no CURRENT — readers retry on miss (see
-    # read_release). POSIX-backed local FS via Hadoop honors the
-    # same sequence.
-    if fs.exists(jcur):
-        fs.delete(jcur, False)
-    if not fs.rename(jtmp, jcur):
-        raise IOError(f"pointer swap failed for {root}")
+    storage.replace_text(spark, f"{root}/CURRENT", version)
 
 
 def _next_version_name(fs_spark, root: str) -> str:
@@ -892,23 +747,32 @@ def _next_version_name(fs_spark, root: str) -> str:
     return f"v{(int(existing[-1][1:]) + 1) if existing else 1:08d}"
 
 
-def _copy_reused_partitions(
-    fs_spark, old_data: str, data_path: str, split_col: str,
-    reused: list,
-) -> None:
+def _reused_dirs(
+    fs_spark, old_data: str, split_col: str, reused: list
+) -> dict:
+    """Directory name under ``old_data`` of each ``reused`` manifest
+    key, from one listing. A key that names no directory raises here,
+    before the caller claims a version or writes a byte."""
     if not reused:
-        return
+        return {}
     old_dirs = _list_partition_dirs(fs_spark, old_data, split_col)
-    for k in reused:
-        if k not in old_dirs:
-            raise IOError(
-                f"partition {k!r} is in the base manifest but its "
-                f"directory is missing under {old_data}"
-            )
-        _copy_tree(
-            fs_spark,
-            f"{old_data}/{old_dirs[k]}",
-            f"{data_path}/{old_dirs[k]}",
+    missing = [k for k in reused if k not in old_dirs]
+    if missing:
+        raise IOError(
+            f"partitions {missing!r} are in the base manifest but "
+            f"their directories are missing under {old_data}"
+        )
+    return {k: old_dirs[k] for k in reused}
+
+
+def _copy_reused_partitions(
+    fs_spark, old_data: str, data_path: str, dirs: dict
+) -> None:
+    """Carry the base's partition ``dirs`` (:func:`_reused_dirs`)
+    forward into ``data_path`` file-identical."""
+    for name in dirs.values():
+        storage.copy_tree(
+            fs_spark, f"{old_data}/{name}", f"{data_path}/{name}"
         )
 
 
@@ -932,7 +796,7 @@ def _apply_retention(
     for old_v in _published_versions(fs_spark, root)[:-keep_versions]:
         if old_v == vname:
             continue
-        _delete_dir(fs_spark, f"{root}/versions/{old_v}")
+        storage.delete(fs_spark, f"{root}/versions/{old_v}", recursive=True)
 
 
 def write_release_version(
@@ -1027,20 +891,21 @@ def _delta_writer(
     partitions (r8: manifest cost ∝ changes, not corpus) — and
     ``extra`` plus the version name become the manifest's extra keys.
     Fingerprints use the base's scheme, so a chain never mixes
-    schemes."""
+    schemes. The reused dirs are listed here, once, so a base manifest
+    key that names no directory fails before the publish claims a
+    version."""
     from ..sources import write_partitioned
 
     inc = extra["incremental"]
     old_data = f"{root}/versions/{inc['base_version']}/data.parquet"
     known = {k: old["partition_fingerprints"][k] for k in inc["reused"]}
+    dirs = _reused_dirs(fs_spark, old_data, split_col, inc["reused"])
 
     def write(vname: str, vdir: str) -> dict:
         data_path = f"{vdir}/data.parquet"
         if frame is not None:
             write_partitioned(frame, data_path, [split_col])
-        _copy_reused_partitions(
-            fs_spark, old_data, data_path, split_col, inc["reused"]
-        )
+        _copy_reused_partitions(fs_spark, old_data, data_path, dirs)
         return _finalize_release_manifest(
             spark,
             fs_spark,
@@ -1060,74 +925,16 @@ def _list_partition_dirs(spark, data_path: str, split_col: str) -> dict:
     """Map hive partition VALUE (as the manifest's string key;
     ``__null__`` for the default partition) -> directory NAME under
     ``data_path``. Listing only — no data read."""
-    import os
     from urllib.parse import unquote
 
-    from ..sources import _jvm_fs, _local_fs_path
-
     prefix = f"{split_col}="
-    names = []
-    try:
-        jvm, hconf = _jvm_fs(spark)
-        jpath = jvm.org.apache.hadoop.fs.Path(data_path)
-        fs = jpath.getFileSystem(hconf)
-        if fs.exists(jpath):
-            names = [
-                st.getPath().getName()
-                for st in fs.listStatus(jpath)
-                if st.isDirectory()
-            ]
-    except RuntimeError:
-        local = _local_fs_path(data_path)
-        if local is None:
-            raise
-        if os.path.isdir(local):
-            names = [
-                d for d in os.listdir(local)
-                if os.path.isdir(os.path.join(local, d))
-            ]
     out = {}
-    for name in names:
-        if not name.startswith(prefix):
+    for name, is_dir in storage.list_dir(spark, data_path):
+        if not is_dir or not name.startswith(prefix):
             continue
         val = unquote(name[len(prefix):])
         out["__null__" if val == "__HIVE_DEFAULT_PARTITION__" else val] = name
     return out
-
-
-def _copy_tree(spark, src: str, dst: str) -> None:
-    """Clone one immutable partition directory into a new version dir.
-    Local filesystems HARDLINK each file (O(files) metadata ops, zero
-    bytes moved — old and new versions share the immutable parts, and
-    retention's recursive delete only drops link counts); non-local
-    Hadoop filesystems fall back to an FS-level copy, which still
-    skips the expensive part — no Spark job, no shuffle, no re-encode.
-    A real table format (Delta/Iceberg) makes this a manifest pointer;
-    this is the documented offline stand-in's equivalent move."""
-    import os
-    import shutil
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    lsrc, ldst = _local_fs_path(src), _local_fs_path(dst)
-    if lsrc is not None and ldst is not None:
-        os.makedirs(ldst, exist_ok=True)
-        for name in os.listdir(lsrc):
-            s, d = os.path.join(lsrc, name), os.path.join(ldst, name)
-            try:
-                os.link(s, d)
-            except OSError:  # cross-device / FS without hardlinks
-                shutil.copy2(s, d)
-        return
-    jvm, hconf = _jvm_fs(spark)
-    jsrc = jvm.org.apache.hadoop.fs.Path(src)
-    jdst = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = jsrc.getFileSystem(hconf)
-    fs.mkdirs(jdst.getParent())
-    if not jvm.org.apache.hadoop.fs.FileUtil.copy(
-        fs, jsrc, fs, jdst, False, True, hconf
-    ):
-        raise IOError(f"partition copy failed: {src} -> {dst}")
 
 
 def write_release_increment(
@@ -1710,55 +1517,15 @@ def release_publish_foreach_batch(
     return handle
 
 
-def _delete_dir(spark, path: str) -> None:
-    import shutil
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    try:
-        jvm, hconf = _jvm_fs(spark)
-    except RuntimeError:
-        local = _local_fs_path(path)
-        if local is None:
-            raise
-        shutil.rmtree(local, ignore_errors=True)
-        return
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    fs.delete(jpath, True)
-
-
 def list_release_versions(spark, root: str) -> list[str]:
     """Sorted version names under ``root/versions`` (fully-written or
     not — use the manifest's presence / CURRENT to judge
     publishability)."""
-    import os
-
-    from ..sources import _jvm_fs, _local_fs_path
-
-    base = f"{root}/versions"
-    try:
-        jvm, hconf = _jvm_fs(spark)
-    except RuntimeError:
-        local = _local_fs_path(base)
-        if local is None:
-            raise
-        if not os.path.isdir(local):
-            return []
-        return sorted(
-            d for d in os.listdir(local)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-    jpath = jvm.org.apache.hadoop.fs.Path(base)
-    fs = jpath.getFileSystem(hconf)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("v") and name[1:].isdigit():
-            out.append(name)
-    return sorted(out)
+    return sorted(
+        name
+        for name, _ in storage.list_dir(spark, f"{root}/versions")
+        if name.startswith("v") and name[1:].isdigit()
+    )
 
 
 def compact_release_version(
@@ -1786,11 +1553,7 @@ def compact_release_version(
     can never silently alter the corpus. No-op (nothing fragmented)
     publishes nothing and returns the current manifest. Single-writer
     with the same claim/base-check guard as every publish path."""
-    import os
-
     from pyspark.sql.types import StructType
-
-    from ..sources import _jvm_fs, _local_fs_path
 
     cur = _current(spark, root)
     if cur is None:
@@ -1809,30 +1572,16 @@ def compact_release_version(
     old_fps = old["partition_fingerprints"]
     old_data = f"{root}/versions/{cur}/data.parquet"
 
-    def _file_counts() -> dict:
-        dirs = _list_partition_dirs(spark, old_data, split_col)
-        counts = {}
-        try:
-            jvm, hconf = _jvm_fs(spark)
-            for key, name in dirs.items():
-                jp = jvm.org.apache.hadoop.fs.Path(f"{old_data}/{name}")
-                fs = jp.getFileSystem(hconf)
-                counts[key] = sum(
-                    1
-                    for st in fs.listStatus(jp)
-                    if st.getPath().getName().endswith(".parquet")
-                )
-        except RuntimeError:
-            local = _local_fs_path(old_data)
-            for key, name in dirs.items():
-                counts[key] = sum(
-                    1
-                    for f in os.listdir(os.path.join(local, name))
-                    if f.endswith(".parquet")
-                )
-        return counts
-
-    counts = _file_counts()
+    counts = {
+        key: sum(
+            1
+            for f, _ in storage.list_dir(spark, f"{old_data}/{name}")
+            if f.endswith(".parquet")
+        )
+        for key, name in _list_partition_dirs(
+            spark, old_data, split_col
+        ).items()
+    }
     fragmented = sorted(
         k for k, n in counts.items() if n > max_files_per_partition
     )
@@ -1920,14 +1669,14 @@ def vacuum_release_orphans(
         if grace_seconds > 0:
             # age by the claim file (the moment the writer fenced);
             # pre-claim-era or claim-less dirs age by the dir itself
-            age_base = _mtime(spark, f"{vdir}/.CLAIM")
+            age_base = storage.mtime(spark, f"{vdir}/.CLAIM")
             if age_base is None:
-                age_base = _mtime(spark, vdir)
+                age_base = storage.mtime(spark, vdir)
             if age_base is not None and (
                 time.time() - age_base
             ) < grace_seconds:
                 continue
-        _delete_dir(spark, vdir)
+        storage.delete(spark, vdir, recursive=True)
         deleted.append(v)
     return deleted
 

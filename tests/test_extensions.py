@@ -2364,9 +2364,6 @@ def test_release_increment_fallbacks_and_retention(spark, tmp_path):
     man = json.load(open(mpath))
     del man["partition_fingerprints"]
     json.dump(man, open(mpath, "w"))
-    crc = os.path.join(os.path.dirname(mpath), ".manifest.json.crc")
-    if os.path.exists(crc):  # hand-edit invalidates the Hadoop CRC
-        os.remove(crc)
     m2 = write_release_increment(df, root)
     assert m2["version"] == "v00000002" and "incremental" not in m2
 
@@ -2469,9 +2466,6 @@ def test_release_changes_falls_back_without_fingerprints(
     man = json.load(open(mpath))
     del man["partition_fingerprints"]
     json.dump(man, open(mpath, "w"))
-    crc = os.path.join(os.path.dirname(mpath), ".manifest.json.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
     got = sorted(
         (r["doc_id"], r["status"])
         for r in release_changes(spark, root).collect()
@@ -3179,6 +3173,7 @@ def test_release_finalize_requires_live_claim(spark, tmp_path):
     manifest (an un-vacuumable phantom)."""
     import pytest as _pytest
 
+    from goodtables_pandas_py_spark import storage
     from goodtables_pandas_py_spark.extensions import pipeline as pl
 
     root = str(tmp_path / "rel")
@@ -3186,7 +3181,7 @@ def test_release_finalize_requires_live_claim(spark, tmp_path):
     df = spark.createDataFrame([(1, "a", "train")], schema)
     vdir = f"{root}/versions/v00000001"
     pl._claim_version(spark, root, "v00000001")
-    pl._delete_file(spark, f"{vdir}/.CLAIM")  # the racing vacuum
+    storage.delete(spark, f"{vdir}/.CLAIM")  # the racing vacuum
     with _pytest.raises(pl.ReleaseConflictError, match="claim file"):
         pl.write_release(df, vdir, require_claim=True)
 
@@ -3591,16 +3586,11 @@ def test_release_merge_and_append_work_on_emptied_release(
 
 
 def _rewrite_manifest(path: str, man: dict) -> None:
-    """Overwrite a library-written manifest.json and drop the .crc
-    sidecar Hadoop's checksummed local FS left next to it."""
+    """Overwrite a library-written manifest.json."""
     import json
-    import os
 
     with open(path, "w") as fh:
         fh.write(json.dumps(man))
-    crc = os.path.join(os.path.dirname(path), ".manifest.json.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
 
 
 _DIVERGING_SPLITS = [
@@ -3663,6 +3653,7 @@ def test_release_stale_manifest_keys_rewrite_or_fail_loudly(
     import os
 
     from goodtables_pandas_py_spark.extensions.pipeline import (
+        list_release_versions,
         read_release,
         write_release_append,
         write_release_increment,
@@ -3682,6 +3673,8 @@ def test_release_stale_manifest_keys_rewrite_or_fail_loudly(
     batch = spark.createDataFrame([(99, 2.5)], "doc_id long, split double")
     with pytest.raises(OSError, match="1e-05"):
         write_release_append(batch, root)
+    # refused before the claim: no orphan version dir is left behind
+    assert list_release_versions(spark, root) == [m1["version"]]
     got, man = read_release(spark, root)
     assert man["version"] == m1["version"] and got.count() == 20
 
@@ -4037,8 +4030,7 @@ def test_migrate_release_schema_loses_race_cleanly(spark, tmp_path):
     finally:
         pl._finalize_release_manifest = orig
 
-    cur = pl._read_text(spark, f"{root}/CURRENT").strip()
-    assert cur == "v00000099"
+    assert pl._current(spark, root) == "v00000099"
     # no published phantom besides v1 and the interloper
     hist = pl.release_history(spark, root).collect()
     published = sorted(r["version"] for r in hist if r["published"])
@@ -4132,9 +4124,7 @@ def test_post_swap_pointer_loss_keeps_published_dir(
     monkeypatch.undo()
 
     # the loser's dir SURVIVES, manifest-complete (it was published)
-    assert pl._read_text(
-        spark, f"{root}/versions/v00000002/manifest.json"
-    ) is not None
+    assert pl._manifest(spark, root, "v00000002") is not None
     hist = {
         r["version"]: (r["published"], r["current"])
         for r in pl.release_history(spark, root).collect()
@@ -4321,11 +4311,6 @@ def test_fingerprint_scheme_versioning(spark, tmp_path):
         }
     man["partition_fingerprints"] = legacy
     open(man_path, "w").write(json.dumps(man))
-    # the library wrote manifest.json through Hadoop's checksummed
-    # local FS — drop the .crc sidecar our raw rewrite invalidated
-    crc = os.path.join(os.path.dirname(man_path), ".manifest.json.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
 
     # unchanged increment onto the legacy base must still reuse ALL
     # partitions (compare ran with scheme 1), and the chain stays

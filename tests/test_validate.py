@@ -578,6 +578,21 @@ def test_sniff_header_directory_deterministic(spark, tmp_path):
     assert got == ["id", "née"]
 
 
+def test_sniff_header_directory_first_name_with_uri_characters(
+    spark, tmp_path
+):
+    """The first file's name holds characters a URI parser splits on
+    ('#', '?'): the sniff still reads that file, not a truncated
+    path."""
+    d = tmp_path / "csvs"
+    d.mkdir()
+    (d / "a#1?.csv").write_text("id,id\n1,2\n")
+    (d / "b.csv").write_text("wrong,header\n9,9\n")
+    from goodtables_pandas_py_spark.sources import sniff_csv_header
+
+    assert sniff_csv_header(spark, str(d)) == ["id", "id"]
+
+
 def test_descriptor_errors_report_not_raise(spark):
     """Malformed descriptors yield a structured report with zero
     tables checked ([R validate.py::validate] profile validation) —

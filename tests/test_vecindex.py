@@ -1118,10 +1118,7 @@ def test_delete_versioned_swap_and_noop_replay(spark, tmp_path):
     """Versioned delete: a hit publishes a new version and swaps the
     pointer; a replay with zero hits returns the CURRENT manifest
     WITHOUT claiming or publishing (no version churn)."""
-    from goodtables_pandas_py_spark.extensions.pipeline import (
-        _pointer_paths,
-        _read_text,
-    )
+    from goodtables_pandas_py_spark.extensions.pipeline import _current
     from goodtables_pandas_py_spark.extensions.vecindex import (
         delete_from_ivf_index_version,
         read_ivf_index_current,
@@ -1131,13 +1128,13 @@ def test_delete_versioned_swap_and_noop_replay(spark, tmp_path):
     df = _skewed_vectors(spark)
     root = str(tmp_path / "root")
     write_ivf_index_version(df, root, nlist=4, refine=2)
-    assert _read_text(spark, _pointer_paths(root)[0]).strip() == "v00000001"
+    assert _current(spark, root) == "v00000001"
 
     man = delete_from_ivf_index_version(spark, root, [0, 1, 2])
     assert man["version"] == "v00000002"
     assert man["deleted"]["base_version"] == "v00000001"
     assert man["deleted"]["n_deleted"] == 3
-    assert _read_text(spark, _pointer_paths(root)[0]).strip() == "v00000002"
+    assert _current(spark, root) == "v00000002"
     idx = read_ivf_index_current(spark, root)
     assert not {0, 1, 2} & {r["id"] for r in idx.postings.select("id").collect()}
 
@@ -1146,11 +1143,36 @@ def test_delete_versioned_swap_and_noop_replay(spark, tmp_path):
     assert man2["deleted"]["n_deleted"] == 0
     assert man2["deleted"].get("noop_replay") is True
     assert man2["n_vectors"] == man["n_vectors"]
-    assert _read_text(spark, _pointer_paths(root)[0]).strip() == "v00000002"
+    assert _current(spark, root) == "v00000002"
     assert sorted(os.listdir(os.path.join(root, "versions"))) == [
         "v00000001",
         "v00000002",
     ]
+
+
+def test_versioned_index_root_as_file_uri_or_remote_scheme(
+    spark, tmp_path, monkeypatch
+):
+    """A ``file://`` root publishes and reads back like the plain path
+    (no stray relative ``file:`` tree in the cwd); a remote scheme is
+    refused with a ValueError naming it, before anything is claimed."""
+    from goodtables_pandas_py_spark.extensions.vecindex import (
+        read_ivf_index_current,
+        write_ivf_index_version,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    df = _skewed_vectors(spark)
+    root = f"file://{tmp_path}/ivf"
+    man = write_ivf_index_version(df, root, nlist=4)
+    assert man["version"] == "v00000001"
+    idx = read_ivf_index_current(spark, root)
+    assert idx.manifest["version"] == "v00000001"
+    assert idx.postings.count() == man["n_vectors"]
+    assert os.listdir(tmp_path / "ivf" / "versions") == ["v00000001"]
+    assert not (tmp_path / "file:").exists()
+    with pytest.raises(ValueError, match="s3a://"):
+        write_ivf_index_version(df, "s3a://bucket/ivf", nlist=4)
 
 
 def test_recluster_raises_on_row_loss(spark, tmp_path):
