@@ -29,7 +29,8 @@ the parquet layout is the contract, faiss is one consumer.
 Indexes are local-only: manifests and centroids go through ``open``
 and pyarrow, so every entry point resolves its directories with
 :func:`..storage.require_local` (``file://`` URIs unwrap to paths;
-any other scheme raises ValueError before anything is written).
+any other scheme, or a session whose plain paths name a non-local
+default filesystem, raises ValueError before anything is written).
 """
 
 from __future__ import annotations
@@ -122,7 +123,7 @@ def write_ivf_index(
     in the manifest come from an nlist-row aggregate. Pass
     ``centroids`` from a prior fit to skip training (the incremental
     / re-export path)."""
-    out_dir = require_local(out_dir, "write_ivf_index")
+    out_dir = require_local(df.sparkSession, out_dir, "write_ivf_index")
     if centroids is None:
         assigned, cents = ivf_assign(
             df, vec_col, nlist=nlist, refine=refine, train_cap=train_cap
@@ -203,7 +204,7 @@ def read_ivf_index(spark: SparkSession, index_dir: str) -> IvfIndex:
     partitioned scan — nothing is read until a query probes it);
     centroids (nlist × dim, bounded) load to the driver for probe
     selection."""
-    index_dir = require_local(index_dir, "read_ivf_index")
+    index_dir = require_local(spark, index_dir, "read_ivf_index")
     with open(os.path.join(index_dir, "manifest.json")) as fh:
         manifest = json.load(fh)
     if manifest.get("format_version") != FORMAT_VERSION:
@@ -650,7 +651,9 @@ def append_to_ivf_index(
     their centroids over time — re-fit (:func:`write_ivf_index` with
     ``centroids=None``) when recall sags; the open layout makes that
     a rebuild of directories, not a migration."""
-    index_dir = require_local(index_dir, "append_to_ivf_index")
+    index_dir = require_local(
+        df.sparkSession, index_dir, "append_to_ivf_index"
+    )
     spark = df.sparkSession
     idx = read_ivf_index(spark, index_dir)
     manifest = idx.manifest
@@ -740,8 +743,8 @@ def recluster_ivf_index(
     half-built index; use :func:`recluster_ivf_index_version` for the
     atomic pointer-swap workflow). Returns the new manifest with a
     ``reclustered`` audit block."""
-    index_dir = require_local(index_dir, "recluster_ivf_index")
-    out_dir = require_local(out_dir, "recluster_ivf_index")
+    index_dir = require_local(spark, index_dir, "recluster_ivf_index")
+    out_dir = require_local(spark, out_dir, "recluster_ivf_index")
     if os.path.normpath(out_dir) == os.path.normpath(index_dir):
         raise ValueError(
             "recluster_ivf_index: out_dir must differ from the live "
@@ -873,8 +876,8 @@ def split_ivf_hot_lists(
     (all-duplicate vectors) cannot be split and is carried unchanged,
     recorded in the audit block. Returns the new manifest with a
     ``split`` audit block mapping each split cid to its new cids."""
-    index_dir = require_local(index_dir, "split_ivf_hot_lists")
-    out_dir = require_local(out_dir, "split_ivf_hot_lists")
+    index_dir = require_local(spark, index_dir, "split_ivf_hot_lists")
+    out_dir = require_local(spark, out_dir, "split_ivf_hot_lists")
     import math as _math
 
     if os.path.normpath(out_dir) == os.path.normpath(index_dir):
@@ -1145,8 +1148,8 @@ def delete_from_ivf_index(
     conservation is asserted with an Observation riding the rewrite
     job: kept + deleted must equal the touched lists' manifest sizes,
     raising BEFORE the manifest write on any drift."""
-    index_dir = require_local(index_dir, "delete_from_ivf_index")
-    out_dir = require_local(out_dir, "delete_from_ivf_index")
+    index_dir = require_local(spark, index_dir, "delete_from_ivf_index")
+    out_dir = require_local(spark, out_dir, "delete_from_ivf_index")
     if os.path.normpath(out_dir) == os.path.normpath(index_dir):
         raise ValueError(
             "delete_from_ivf_index: out_dir must differ from the live "
@@ -1268,7 +1271,7 @@ def delete_from_ivf_index_version(
     ``n_deleted: 0`` attached) without claiming or publishing — a
     replayed takedown is a true no-op, not a version that duplicates
     its base."""
-    root = require_local(root, "delete_from_ivf_index_version")
+    root = require_local(spark, root, "delete_from_ivf_index_version")
     from .pipeline import _current, _publish
 
     cur = _current(spark, root)
@@ -1434,8 +1437,8 @@ def upsert_into_ivf_index(
     upsert must never act as a silent takedown) — and counted in the
     audit. Row conservation across the rewrite is asserted with an
     Observation before the manifest write."""
-    index_dir = require_local(index_dir, "upsert_into_ivf_index")
-    out_dir = require_local(out_dir, "upsert_into_ivf_index")
+    index_dir = require_local(spark, index_dir, "upsert_into_ivf_index")
+    out_dir = require_local(spark, out_dir, "upsert_into_ivf_index")
     if os.path.normpath(out_dir) == os.path.normpath(index_dir):
         raise ValueError(
             "upsert_into_ivf_index: out_dir must differ from the live "
@@ -1656,7 +1659,7 @@ def upsert_into_ivf_index_version(
     batch is persisted around both so probe and rewrite see the same
     rows even from a nondeterministic caller frame (the delete-path
     lesson)."""
-    root = require_local(root, "upsert_into_ivf_index_version")
+    root = require_local(spark, root, "upsert_into_ivf_index_version")
     from .pipeline import _current, _publish
 
     cur = _current(spark, root)
@@ -1761,8 +1764,8 @@ def merge_ivf_cold_lists(
     a surviving target — recluster instead). Returns the new manifest
     with a ``merged`` audit block mapping each cold cid to its target
     and each survivor to its new number."""
-    index_dir = require_local(index_dir, "merge_ivf_cold_lists")
-    out_dir = require_local(out_dir, "merge_ivf_cold_lists")
+    index_dir = require_local(spark, index_dir, "merge_ivf_cold_lists")
+    out_dir = require_local(spark, out_dir, "merge_ivf_cold_lists")
     if os.path.normpath(out_dir) == os.path.normpath(index_dir):
         raise ValueError(
             "merge_ivf_cold_lists: out_dir must differ from the live "
@@ -2033,7 +2036,7 @@ def ivf_maintenance_plan(
     so a scheduler can log WHY, not just WHAT
     (``examples/ann_index_lifecycle.py`` wires it as the monitor
     step)."""
-    index_dir = require_local(index_dir, "ivf_maintenance_plan")
+    index_dir = require_local(spark, index_dir, "ivf_maintenance_plan")
     flat_manifest = os.path.join(index_dir, "manifest.json")
     if os.path.exists(flat_manifest):
         idx = read_ivf_index(spark, index_dir)
@@ -2139,7 +2142,7 @@ def write_ivf_index_version(
     (the r10 conflict hygiene), exactly like a data release.
     ``keep_versions`` prunes old published indexes after the swap —
     size it past the longest-running query's lifetime."""
-    root = require_local(root, "write_ivf_index_version")
+    root = require_local(df.sparkSession, root, "write_ivf_index_version")
     from .pipeline import _current, _publish
 
     spark = df.sparkSession
@@ -2159,7 +2162,7 @@ def read_ivf_index_current(spark: SparkSession, root: str) -> IvfIndex:
     returned handle keeps reading its immutable version dir even if a
     recluster publishes a newer one mid-query (snapshot isolation by
     layout, same as :func:`~.pipeline.read_release`)."""
-    root = require_local(root, "read_ivf_index_current")
+    root = require_local(spark, root, "read_ivf_index_current")
     from .pipeline import _current
 
     cur = _current(spark, root)
@@ -2188,7 +2191,7 @@ def recluster_ivf_index_version(
     number BEFORE the corpus-proportional rewrite starts, so two
     overlapping reclusters cannot both pay the rebuild and then race
     the pointer."""
-    root = require_local(root, "recluster_ivf_index_version")
+    root = require_local(spark, root, "recluster_ivf_index_version")
     from .pipeline import _current, _publish
 
     cur = _current(spark, root)
@@ -2276,7 +2279,7 @@ def faiss_handoff(index_dir: str):
     with that hint when absent. Loads shard-by-shard via pyarrow (no
     Spark session needed), so peak memory is one posting shard plus
     the growing index."""
-    index_dir = require_local(index_dir, "faiss_handoff")
+    index_dir = require_local(None, index_dir, "faiss_handoff")
     try:
         import faiss  # type: ignore
     except ImportError as exc:  # pragma: no cover - env without faiss

@@ -252,19 +252,27 @@ def _first_file(spark: SparkSession, path: str) -> str | None:
     statuses = fs.globStatus(jpath)
     if statuses is None:
         return None
-    leaves: list[str] = []
+    leaves = []  # Hadoop Path objects
     for st in statuses:
         if st.isFile():
-            leaves.append(st.getPath().toString())
+            leaves.append(st.getPath())
         elif st.isDirectory():
             for child in fs.listStatus(st.getPath()):
                 if child.isFile():
-                    leaves.append(child.getPath().toString())
+                    leaves.append(child.getPath())
+    by_name = {p.toString(): p for p in leaves}
     visible = [
-        p for p in leaves
-        if not p.rsplit("/", 1)[-1].startswith((".", "_"))
+        s for s in by_name
+        if not s.rsplit("/", 1)[-1].startswith((".", "_"))
     ]
-    return min(visible) if visible else None
+    if not visible:
+        return None
+    first = by_name[min(visible)]
+    # Path.toString() is unescaped; the storage seam percent-decodes a
+    # file: URI, so a local leaf goes as its escaped URI ('a%41.csv'
+    # must not become 'aA.csv'). Hadoop takes its own string back.
+    uri = first.toUri()
+    return uri.toString() if uri.getScheme() == "file" else first.toString()
 
 
 def _first_file_local(path: str) -> str | None:

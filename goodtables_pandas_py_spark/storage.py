@@ -2,13 +2,16 @@
 deletes and partition copies — everything the versioned release and
 IVF stores and the source sniffers do outside Spark jobs.
 
-One rule picks the filesystem, from the PATH alone: a bare local path
-or a ``file://`` URI goes through Python ``os``; any other scheme
-(``hdfs://``, ``s3a://``, ...) goes through Hadoop ``FileSystem`` on
-the session's JVM gateway, and raises RuntimeError on a session that
-has none (Spark Connect). Classic and Connect sessions therefore run
-the same code on local roots, and py4j round trips happen only where
-nothing else can reach the store.
+One rule picks the filesystem, from where the path points: a
+``file://`` URI, or a plain path in a session whose default
+filesystem (``fs.defaultFS``) is local, goes through Python ``os``;
+any other scheme, and a plain path that names the default filesystem
+of a cluster (HDFS on a typical YARN deployment), goes through Hadoop
+``FileSystem`` on the session's JVM gateway, and raises RuntimeError
+on a session that has none. A session without a gateway (Spark
+Connect) reads plain paths locally. The default filesystem is looked
+up once per session, so classic and Connect sessions run the same
+code on local roots and make no py4j round trip there.
 
 Atomicity follows the backend: locally, :func:`create_exclusive` is
 ``O_EXCL`` and :func:`replace_text` is ``os.replace`` (POSIX atomic,
@@ -25,6 +28,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import weakref
+from urllib.parse import unquote, urlsplit
 
 
 def _jvm_fs(spark):
@@ -45,32 +50,66 @@ def _jvm_fs(spark):
 
 
 def _local_fs_path(path: str) -> str | None:
-    """The local-filesystem form of ``path`` if it IS local (bare path
-    or file:// URI), else None — the one backend classifier. A URI's
-    path is percent-decoded; ``?`` and ``#`` stay part of it, as in
-    the ``file:`` strings Hadoop renders for listed files."""
-    from urllib.parse import unquote, urlsplit
-
-    parsed = urlsplit(path, allow_fragments=False)
+    """The local-filesystem form of ``path`` if it is written as local
+    (plain path or file:// URI), else None. A URI's path is
+    percent-decoded."""
+    parsed = urlsplit(path)
     if not parsed.scheme:
         return path
     if parsed.scheme != "file":
         return None
-    query = f"?{parsed.query}" if parsed.query else ""
-    return unquote(parsed.path + query)
+    return unquote(parsed.path)
 
 
-def require_local(path: str, api: str) -> str:
+# session -> scheme of its fs.defaultFS; weak keys, so a stopped
+# session's entry goes with it
+_DEFAULT_SCHEME: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _default_scheme(spark) -> str:
+    """Scheme of the filesystem a plain path names in ``spark``,
+    looked up once per session. "file" without a JVM gateway, and for
+    ``spark=None`` (a reader that is Python alone)."""
+    if spark is None:
+        return "file"
+    try:
+        return _DEFAULT_SCHEME[spark]
+    except KeyError:
+        pass
+    try:
+        jvm, hconf = _jvm_fs(spark)
+    except RuntimeError:
+        scheme = "file"
+    else:
+        uri = jvm.org.apache.hadoop.fs.FileSystem.getDefaultUri(hconf)
+        scheme = uri.getScheme() or "file"
+    _DEFAULT_SCHEME[spark] = scheme
+    return scheme
+
+
+def _local(spark, path: str) -> str | None:
+    """The local path that serves ``path`` in ``spark``, None when
+    Hadoop must: the backend classifier of every function below."""
+    if not urlsplit(path).scheme and _default_scheme(spark) != "file":
+        return None  # a plain path on a cluster's default filesystem
+    return _local_fs_path(path)
+
+
+def require_local(spark, path: str, api: str) -> str:
     """``path`` as a local filesystem path, for APIs that read and
-    write through ``os`` / pyarrow directly (the IVF index layout);
-    ValueError naming the scheme otherwise, before anything is
-    written."""
-    local = _local_fs_path(path)
-    if local is None:
-        scheme = path.split("://", 1)[0]
+    write through ``os`` / pyarrow directly and hand Spark plain
+    paths (the IVF index layout); ValueError before anything is
+    written when ``path`` is on another store, or when ``spark``'s
+    plain paths name a non-local default filesystem."""
+    default = _default_scheme(spark)
+    scheme = urlsplit(path).scheme or default
+    local = _local(spark, path)
+    if local is None or default != "file":
         raise ValueError(
-            f"{api}: {path!r} is on a {scheme}:// store, but IVF "
-            "indexes are local-only (plain paths or file:// URIs)"
+            f"{api}: {path!r} is on a {scheme}:// store in a session "
+            f"whose default filesystem is {default}://, but IVF "
+            "indexes are local-only (plain paths or file:// URIs, in "
+            "a session whose default filesystem is local)"
         )
     return local
 
@@ -100,7 +139,7 @@ def _hadoop_write(fs, jpath, text: str) -> None:
 
 def read_text(spark, path: str) -> str | None:
     """A small UTF-8 file's whole content, None when it is missing."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         try:
             with open(local, encoding="utf-8") as fh:
@@ -121,7 +160,7 @@ def read_text(spark, path: str) -> str | None:
 
 def read_head(spark, path: str, n: int) -> bytes:
     """At most the first ``n`` bytes of one file."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         with open(local, "rb") as fh:
             return fh.read(n)
@@ -142,7 +181,7 @@ def read_head(spark, path: str, n: int) -> bytes:
 
 def write_text(spark, path: str, text: str) -> None:
     """Create or overwrite ``path`` (and its parent dirs) with ``text``."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
         _drop_crc(local)
@@ -158,7 +197,7 @@ def create_exclusive(spark, path: str) -> bool:
     exists; True when this call created it. ``O_EXCL`` locally;
     ``FileSystem.createNewFile`` on Hadoop, which is atomic on HDFS
     (its generic form is exists-then-create)."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
         try:
@@ -177,7 +216,7 @@ def replace_text(spark, path: str, text: str) -> None:
     ``os.replace``d over ``path`` (atomic, never absent). Hadoop
     rename does not overwrite, so there it is delete-then-rename,
     which leaves a sub-ms window with no ``path``."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         tmp = f"{local}.tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
@@ -198,7 +237,7 @@ def replace_text(spark, path: str, text: str) -> None:
 
 def mtime(spark, path: str) -> float | None:
     """Modification time (epoch seconds), None when ``path`` is missing."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         try:
             return os.path.getmtime(local)
@@ -213,7 +252,7 @@ def mtime(spark, path: str) -> float | None:
 def list_dir(spark, path: str) -> list[tuple[str, bool]]:
     """``(name, is_dir)`` of each entry of a directory, [] when it is
     missing. Local listings include Hadoop ``.crc`` sidecars."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         try:
             with os.scandir(local) as it:
@@ -232,7 +271,7 @@ def list_dir(spark, path: str) -> list[tuple[str, bool]]:
 def delete(spark, path: str, recursive: bool = False) -> None:
     """Delete a file, or a directory tree with ``recursive``; a
     missing ``path`` is not an error."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         if recursive and os.path.isdir(local):
             shutil.rmtree(local, ignore_errors=True)
@@ -254,7 +293,7 @@ def copy_tree(spark, src: str, dst: str) -> None:
     recursive delete only drops link counts), copied where the FS has
     no hardlinks; on Hadoop it is ``FileUtil.copy``, which still skips
     the expensive part — no Spark job, no shuffle, no re-encode."""
-    lsrc, ldst = _local_fs_path(src), _local_fs_path(dst)
+    lsrc, ldst = _local(spark, src), _local(spark, dst)
     if lsrc is not None and ldst is not None:
         os.makedirs(ldst, exist_ok=True)
         for name in os.listdir(lsrc):
@@ -275,7 +314,7 @@ def copy_tree(spark, src: str, dst: str) -> None:
 
 def size(spark, path: str) -> int:
     """Length of one file in bytes."""
-    local = _local_fs_path(path)
+    local = _local(spark, path)
     if local is not None:
         return os.path.getsize(local)
     _, fs, jpath = _hadoop(spark, path)

@@ -240,6 +240,25 @@ def test_read_avro_multi_file(spark, tmp_path):
     assert total == sum(fi * 10 + j for fi in range(3) for j in range(4))
 
 
+def test_read_avro_first_file_name_with_percent_escape(spark, tmp_path):
+    """The schema comes from the first file, named literally
+    'a%41.avro': its header is read from that name, not from a
+    percent-decoded 'aA.avro'."""
+    from goodtables_pandas_py_spark.sources import read_avro
+
+    d = tmp_path / "data"
+    d.mkdir()
+    recs = [
+        {"i": j, "s": f"s{j}", "x": float(j), "tags": [], "m": {},
+         "e": "R", "d": j, "ts": j * 1_000_000, "b": b"", "fx": b"xxxx"}
+        for j in range(4)
+    ]
+    (d / "a%41.avro").write_bytes(encode_avro(SCHEMA, recs, codec="null"))
+    df = read_avro(spark, str(d))
+    assert df.schema["i"].dataType.simpleString() == "bigint"
+    assert df.count() == 4
+
+
 def test_validate_package_avro(spark, tmp_path):
     import goodtables_pandas_py_spark as gt
 

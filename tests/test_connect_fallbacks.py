@@ -42,8 +42,6 @@ def test_jvm_fs_raises_without_gateway():
 def test_local_fs_path_classification():
     assert sources._local_fs_path("/tmp/x.csv") == "/tmp/x.csv"
     assert sources._local_fs_path("file:///tmp/a%20b.csv") == "/tmp/a b.csv"
-    # Hadoop renders listed names unescaped: '#' and '?' are the path
-    assert sources._local_fs_path("file:/tmp/a#1?.csv") == "/tmp/a#1?.csv"
     assert sources._local_fs_path("s3a://bucket/key.csv") is None
     assert sources._local_fs_path("hdfs://nn/x.csv") is None
 

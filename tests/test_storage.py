@@ -39,11 +39,55 @@ def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.select(*COLS).collect())
 
 
-def test_require_local_unwraps_file_uris_and_refuses_other_schemes():
-    assert storage.require_local("/tmp/ix", "f") == "/tmp/ix"
-    assert storage.require_local("file:///tmp/a%20b", "f") == "/tmp/a b"
+def test_require_local_unwraps_file_uris_and_refuses_other_schemes(spark):
+    assert storage.require_local(spark, "/tmp/ix", "f") == "/tmp/ix"
+    assert storage.require_local(spark, "file:///tmp/a%20b", "f") == (
+        "/tmp/a b"
+    )
     with pytest.raises(ValueError, match="s3a://"):
-        storage.require_local("s3a://bucket/ix", "f")
+        storage.require_local(spark, "s3a://bucket/ix", "f")
+
+
+def test_default_filesystem_looked_up_once_per_session(spark, monkeypatch):
+    """A plain path means the session's fs.defaultFS (local here); a
+    gateway-less session reads plain paths locally. The lookup is
+    cached, so later classifications make no gateway call."""
+    assert storage._default_scheme(spark) == "file"
+    assert storage._default_scheme(_NoGateway()) == "file"
+    calls = []
+    monkeypatch.setattr(
+        storage, "_jvm_fs", lambda session: calls.append(session)
+    )
+    assert storage._local(spark, "/tmp/x") == "/tmp/x"
+    assert calls == []
+
+
+def test_plain_root_on_a_cluster_default_fs_goes_through_hadoop(
+    spark, tmp_path, monkeypatch
+):
+    """Where fs.defaultFS is not local (HDFS on a YARN cluster), a
+    plain release root names that filesystem, as it does for Spark's
+    own writes: every store operation goes through Hadoop. (Hadoop's
+    real default here is local, so the root lands in ``tmp_path``;
+    its checksummed FS leaves ``.CURRENT.crc`` to show which backend
+    wrote.) A file:// URI stays local, and IVF roots are refused."""
+    monkeypatch.setattr(storage, "_default_scheme", lambda session: "hdfs")
+    root = str(tmp_path / "rel")
+    assert storage._local(spark, root) is None
+    assert storage._local(spark, f"file://{root}") == root
+
+    df = _corpus(spark)
+    pl.write_release_version(df, root)
+    assert (tmp_path / "rel" / ".CURRENT.crc").exists()
+    m2 = pl.write_release_increment(_edit_split_a(df), root)
+    assert m2["incremental"]["reused"] == ["b"]
+    got, man = pl.read_release(spark, root)
+    assert man["version"] == "v00000002"
+    assert _rows(got) == _rows(_edit_split_a(df))
+
+    for ix in (str(tmp_path / "ivf"), f"file://{tmp_path}/ivf"):
+        with pytest.raises(ValueError, match="default filesystem is hdfs"):
+            storage.require_local(spark, ix, "write_ivf_index")
 
 
 def test_mixed_session_publishes_stay_readable(spark, tmp_path):
@@ -151,6 +195,7 @@ def test_gateway_calls_only_off_local_roots(
     """An incremental publish plus readback on a local root never
     touches the JVM gateway; through the Hadoop backend it does (so
     the counter is live)."""
+    storage._default_scheme(spark)  # the once-per-session lookup
     calls = []
     real = storage._jvm_fs
 

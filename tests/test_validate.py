@@ -582,15 +582,21 @@ def test_sniff_header_directory_first_name_with_uri_characters(
     spark, tmp_path
 ):
     """The first file's name holds characters a URI parser splits on
-    ('#', '?'): the sniff still reads that file, not a truncated
-    path."""
+    ('#', '?') or decodes ('%41' is 'A'): the sniff still reads that
+    file, not a truncated path or its decoded neighbour."""
+    from goodtables_pandas_py_spark.sources import sniff_csv_header
+
     d = tmp_path / "csvs"
     d.mkdir()
     (d / "a#1?.csv").write_text("id,id\n1,2\n")
     (d / "b.csv").write_text("wrong,header\n9,9\n")
-    from goodtables_pandas_py_spark.sources import sniff_csv_header
-
     assert sniff_csv_header(spark, str(d)) == ["id", "id"]
+
+    e = tmp_path / "escapes"
+    e.mkdir()
+    (e / "a%41.csv").write_text("id,pct\n1,2\n")
+    (e / "aA.csv").write_text("wrong,header\n9,9\n")
+    assert sniff_csv_header(spark, str(e)) == ["id", "pct"]
 
 
 def test_descriptor_errors_report_not_raise(spark):
