@@ -325,11 +325,10 @@ def ngram_jaccard(
     a_tokens: Column, b_tokens: Column, k: int = 3
 ) -> Column:
     """Exact n-gram Jaccard similarity of two token arrays."""
-    sa = F.array_distinct(shingles(a_tokens, k))
-    sb = F.array_distinct(shingles(b_tokens, k))
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(F.array_union(sa, sb))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return hashed_set_jaccard(
+        F.array_distinct(shingles(a_tokens, k)),
+        F.array_distinct(shingles(b_tokens, k)),
+    )
 
 
 def hashed_shingle_sets(
@@ -360,12 +359,13 @@ def hashed_shingle_sets(
 
 
 def hashed_set_jaccard(sa: Column, sb: Column) -> Column:
-    """Exact Jaccard over two hashed DISTINCT sets (the
-    :func:`hashed_shingle_sets` payload): |∩|/|∪|, 0.0 for two empty
-    sets. THE one formula for the verify step — the batch
-    (:func:`minhash_dedup_pairs`) and streaming
-    (``streaming/dedup.py`` intra-batch) arms both use it, so their
-    dedup semantics cannot fork (r11 review)."""
+    """Exact Jaccard over two DISTINCT sets (the
+    :func:`hashed_shingle_sets` payload, or any array_distinct'd
+    arrays): |∩|/|∪|, 0.0 for two empty sets. THE one formula — the
+    batch (:func:`minhash_dedup_pairs`) and streaming
+    (``streaming/dedup.py`` intra-batch) verify arms and
+    :func:`ngram_jaccard` all use it, so their dedup semantics cannot
+    fork (r11 review)."""
     inter = F.size(F.array_intersect(sa, sb))
     union = F.size(F.array_union(sa, sb))
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -745,9 +745,10 @@ def embedding_cosine_pairs(
     aggregate/zip_with HOF — same fold order, bit-identical cosines for
     width-``dim`` vectors — and any pair involving a vector of a
     DIFFERENT length yields NULL cosine (excluded by the threshold
-    filter), exactly :func:`~.similarity.dot_fixed`'s ragged guard.
-    Omit ``dim`` for mixed-width corpora where off-width pairs must
-    still be scored (the legacy HOF path).
+    filter): the ragged gate of :func:`~.similarity.cosine`. Without
+    ``dim`` the HOF fold runs; it scores same-width pairs of ANY width,
+    while a pair of two different widths still yields NULL (zip_with
+    pads the shorter vector with nulls) and is dropped.
 
     Without ``block_size`` this is an O(n²) nested-loop self-join —
     the small-table oracle path and the per-bucket verify kernel; at
@@ -762,24 +763,12 @@ def embedding_cosine_pairs(
     result is still an exact-cosine statement about every pair it
     covers. Norms are computed once per row before the self-join
     (n norms, not n²)."""
-    from .similarity import cosine_prenormed, dot, norm_fixed
+    from .similarity import cosine, norm
 
-    if dim is not None:
-        # size-gated expanded norm (see norm_fixed) — off-width rows
-        # get NULL norm and their pairs are gated out below
-        nrm = norm_fixed(F.col("v"), dim)
-    else:
-        nrm = F.sqrt(
-            F.aggregate(
-                F.transform(F.col("v"), lambda x: x * x),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
     normed = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("n", nrm)
+    ).withColumn("n", norm(F.col("v"), dim))
     if block_size is not None:
         normed = normed.withColumn(
             # contiguous-range blocking needs numeric ids (block
@@ -822,15 +811,9 @@ def embedding_cosine_pairs(
         joined = a.join(b, "blk").where(F.col("id_a") < F.col("id_b"))
     else:
         joined = a.join(b, F.col("id_a") < F.col("id_b"))
-    denom = F.col("n_a") * F.col("n_b")
-    if dim is not None:
-        cos = cosine_prenormed(
-            F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b"), dim
-        )
-    else:
-        cos = F.when(
-            denom > 0, dot(F.col("v_a"), F.col("v_b")) / denom
-        ).otherwise(F.lit(0.0))
+    cos = cosine(
+        F.col("v_a"), F.col("v_b"), dim, norms=(F.col("n_a"), F.col("n_b"))
+    )
     return (
         joined.select("id_a", "id_b", cos.alias("cosine"))
         .where(F.col("cosine") >= threshold)
@@ -858,19 +841,16 @@ def embedding_banded_signatures(
     renamed = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).where(F.col("v").isNotNull())
-    if dim is None:
-        from .similarity import _probe_dim
+    from .similarity import _modal_dim, rp_band_signatures
 
-        d = _probe_dim(renamed, "v")
-        first = None if d is None else {"d": d}
-        if first is None:
+    if dim is None:
+        dim = _modal_dim(renamed, "v")
+        if dim is None:
             return renamed.select(
                 "id",
                 F.lit(0).alias("band"),
                 F.lit(0).cast("long").alias("sig"),
             ).limit(0)
-        dim = first["d"]
-    from .similarity import rp_band_signatures
 
     return renamed.select(
         "id",
@@ -925,14 +905,13 @@ def embedding_near_dups(
     renamed = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).where(
         F.col("v").isNotNull()
     )
-    if dim is None:
-        # probing is a FALLBACK: a malformed leading vector would pin
-        # the wrong width and null every correct signature — callers
-        # that know the build dim (streaming batch kernels, index
-        # lookups) must pass it explicitly
-        from .similarity import _probe_dim
+    from .similarity import _modal_dim, cosine, norm
 
-        dim = _probe_dim(renamed, "v")
+    if dim is None:
+        # the modal width is a FALLBACK that costs one histogram job —
+        # callers that know the build dim (streaming batch kernels,
+        # index lookups) pass it explicitly
+        dim = _modal_dim(renamed, "v")
     if dim is None:
         return renamed.select(
             F.col("id").alias("id_a"),
@@ -955,14 +934,12 @@ def embedding_near_dups(
     # per-row out of it (r11, guide §2.3/§1.2): cast float→double once
     # per row (not once per pair side) and precompute each row's norm,
     # leaving only the expanded dot + one divide per pair. Arithmetic
-    # is identical to cosine_fixed — same expansion, same fold order,
-    # same size-gate (ragged rows yield NULL) — measured 82 s → 9 s
-    # over the 1.28M-candidate uncapped sweep at sf0.1.
-    from .similarity import cosine_prenormed, norm_fixed
-
+    # is identical to the unhoisted cosine — same expansion, same fold
+    # order, same size-gate (ragged rows yield NULL) — measured
+    # 82 s → 9 s over the 1.28M-candidate uncapped sweep at sf0.1.
     vd = renamed.select(
         "id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn("nrm", norm_fixed(F.col("v"), dim))
+    ).withColumn("nrm", norm(F.col("v"), dim))
     va = vd.select(
         F.col("id").alias("id_a"),
         F.col("v").alias("v_a"),
@@ -973,8 +950,8 @@ def embedding_near_dups(
         F.col("v").alias("v_b"),
         F.col("nrm").alias("n_b"),
     )
-    cos = cosine_prenormed(
-        F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b"), dim
+    cos = cosine(
+        F.col("v_a"), F.col("v_b"), dim, norms=(F.col("n_a"), F.col("n_b"))
     )
     return (
         cands.join(va, "id_a")

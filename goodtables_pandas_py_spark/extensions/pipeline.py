@@ -772,7 +772,9 @@ def _copy_reused_partitions(
     forward into ``data_path`` file-identical."""
     for name in dirs.values():
         storage.copy_tree(
-            fs_spark, f"{old_data}/{name}", f"{data_path}/{name}"
+            fs_spark,
+            storage.child(old_data, name),
+            storage.child(data_path, name),
         )
 
 
@@ -1575,7 +1577,9 @@ def compact_release_version(
     counts = {
         key: sum(
             1
-            for f, _ in storage.list_dir(spark, f"{old_data}/{name}")
+            for f, _ in storage.list_dir(
+                spark, storage.child(old_data, name)
+            )
             if f.endswith(".parquet")
         )
         for key, name in _list_partition_dirs(

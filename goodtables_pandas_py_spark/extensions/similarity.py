@@ -3,18 +3,33 @@ top-k as the exact baseline, random-hyperplane LSH bucketing as the
 scale path (SURVEY.md §2.9; distributed top-k literature: REPOSE,
 ICDE 2021 — see PAPERS.md).
 
-Vector math (r4, all measured): ARRAY-VS-ARRAY pair joins expand the
-known dimension into explicit a[i]*b[i] codegen arithmetic
-(dot_fixed/cosine_fixed — ~3.5× on the 1.2M-pair verify join);
-many-plane LSH signatures run as one Arrow-batched numpy matmul
-(rp_band_signatures — ~10× over per-band interpreted HOF lambdas);
-LITERAL-QUERY scans keep the generic zip_with/aggregate HOF cosine —
-Catalyst folds the query-side norm, and the HOF form measured FASTER
-than the expansion there, so each call site uses what won its own
-benchmark. Top-k uses
-orderBy(...).limit(k) which Spark executes as TakeOrderedAndProject
-(per-partition heap + driver merge of k·P rows — no full sort, no
-full shuffle).
+Vector math is three functions — :func:`dot`, :func:`norm` and
+:func:`cosine` — that every scoring path shares, with one rule for
+``dim``:
+
+- ``dim=None``: the generic ``zip_with``/``aggregate`` HOF fold. Kept
+  by LITERAL-QUERY scans (Catalyst folds the query-side norm, and the
+  HOF form measured FASTER than the expansion there) and by the
+  vecindex batch window (an expanded cosine inside its fused sort
+  overflows janino, see ``vecindex.ivf_index_topk_batch``).
+- ``dim`` given: the vector width is asserted. Up to
+  ``_EXPAND_DIM_CAP`` the fold is expanded into explicit
+  ``a[0]*b[0] + a[1]*b[1] + ...`` codegen arithmetic (r4: ~3.5× on
+  the 1.2M-pair verify join), in the same left-associative order as
+  the HOF fold, so values are bit-identical; above the cap it stays
+  the HOF fold. At EVERY ``dim`` any vector whose length is not
+  ``dim`` gives NULL (the ragged gate), never a prefix-truncated
+  "plausible" value.
+- ``cosine(..., norms=(na, nb))`` takes norms the caller hoisted per
+  row (via ``norm(v, dim)``) ahead of a pair join, leaving one dot and
+  one divide per pair.
+
+Callers that must find "the" width of a column use :func:`_modal_dim`
+(ties to the smaller width). Many-plane LSH signatures run as one
+Arrow-batched numpy matmul (rp_band_signatures — ~10× over per-band
+interpreted HOF lambdas). Top-k uses orderBy(...).limit(k) which
+Spark executes as TakeOrderedAndProject (per-partition heap + driver
+merge of k·P rows — no full sort, no full shuffle).
 """
 
 from __future__ import annotations
@@ -25,111 +40,69 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
-
-
 # Janino compiles expanded expressions fine up to a few hundred terms;
-# past that, fall back to the HOF forms (correct, just interpreted)
+# past that the fold stays the HOF form (correct, just interpreted)
 _EXPAND_DIM_CAP = 256
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product with the dimension expanded at plan-build time:
-    a[0]*b[0] + a[1]*b[1] + ... runs INSIDE whole-stage codegen,
-    unlike the aggregate/zip_with HOF form whose lambdas evaluate
-    interpreted (the r4 probe measured the verify join ~50s over 1.2M
-    64-dim pairs on HOFs; expanded it's JVM arithmetic). Addition is
-    left-assoc in source order — the same sequential fold order as the
-    HOF form, so fixed-``dim`` results (and oracle hashes) are
-    unchanged.
-
-    Ragged guard (ADVICE r4): any vector whose length differs from
-    ``dim`` yields NULL — the same degradation as the HOF fold (whose
-    zip_with pads the shorter array with nulls and poisons the sum) —
-    never a silently prefix-truncated "plausible" value."""
-    if dim > _EXPAND_DIM_CAP:
-        return dot(a, b)
+def _fold(a: Column, b: Column | None, dim: int | None) -> Column:
+    """Σ a[i]·b[i] (Σ a[i]² when ``b`` is None), folded left to right:
+    the HOF ``aggregate`` from 0.0 when ``dim`` is None or above the
+    cap, else expanded at plan-build time so it runs INSIDE
+    whole-stage codegen (HOF lambdas evaluate interpreted). Same
+    sequential order both ways (0.0 + x ≡ x), so values are
+    bit-identical. Ungated: the public kernels add the gate."""
+    if dim is None or dim > _EXPAND_DIM_CAP:
+        terms = (
+            F.transform(a, lambda x: x * x)
+            if b is None
+            else F.zip_with(a, b, lambda x, y: x * y)
+        )
+        return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
+    b = a if b is None else b
     expr: Column | None = None
     for i in range(dim):
         term = a[i] * b[i]
         expr = term if expr is None else expr + term
-    if expr is None:
-        return F.lit(0.0)
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), expr)
+    return F.lit(0.0) if expr is None else expr
 
 
-def cosine_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Codegen-expanded cosine (see :func:`dot_fixed`). Vectors whose
-    length differs from ``dim`` yield NULL (ragged guard, ADVICE r4)."""
-    if dim > _EXPAND_DIM_CAP:
-        return cosine(a, b)
-
-    def _norm(v: Column) -> Column:
-        expr: Column | None = None
-        for i in range(dim):
-            term = v[i] * v[i]
-            expr = term if expr is None else expr + term
-        return F.sqrt(expr if expr is not None else F.lit(0.0))
-
-    d = _norm(a) * _norm(b)
-    raw = F.when(d > 0, dot_fixed(a, b, dim) / d).otherwise(F.lit(0.0))
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), raw)
+def _gated(expr: Column, dim: int | None, *vecs: Column) -> Column:
+    """``expr`` where every vector is ``dim`` long, else NULL; the
+    identity when ``dim`` is None. The expansion only evaluates under
+    the gate, so a short vector never hits an ANSI out-of-bounds."""
+    if dim is None:
+        return expr
+    cond = F.size(vecs[0]) == dim
+    for v in vecs[1:]:
+        cond = cond & (F.size(v) == dim)
+    return F.when(cond, expr)
 
 
-def norm_fixed(v: Column, dim: int) -> Column:
-    """Size-gated codegen-expanded L2 norm for PRE-COMPUTING per-row
-    norms ahead of a pair join (r11, guide §2.3): vectors whose length
-    differs from ``dim`` yield NULL (never an ANSI out-of-bounds —
-    the expansion only evaluates under the size gate). Above the
-    expansion cap falls back to the HOF :func:`norm` (ungated, like
-    :func:`cosine`'s fallback). Fold order matches the HOF form
-    (0.0 + x² ≡ x²), so values are bit-identical."""
-    if dim > _EXPAND_DIM_CAP:
-        return norm(v)
-    expr: Column | None = None
-    for i in range(dim):
-        term = v[i] * v[i]
-        expr = term if expr is None else expr + term
-    return F.when(
-        F.size(v) == dim,
-        F.sqrt(expr if expr is not None else F.lit(0.0)),
-    )
+def dot(a: Column, b: Column, dim: int | None = None) -> Column:
+    """Dot product; see the module docstring for ``dim``."""
+    return _gated(_fold(a, b, dim), dim, a, b)
 
 
-def cosine_prenormed(
-    va: Column, vb: Column, na: Column, nb: Column, dim: int
+def norm(v: Column, dim: int | None = None) -> Column:
+    """L2 norm; see the module docstring for ``dim``."""
+    return _gated(F.sqrt(_fold(v, None, dim)), dim, v)
+
+
+def cosine(
+    a: Column,
+    b: Column,
+    dim: int | None = None,
+    norms: tuple[Column, Column] | None = None,
 ) -> Column:
-    """:func:`cosine_fixed` with the two norms supplied by the caller
-    (computed ONCE PER ROW via :func:`norm_fixed` before the pair
-    join), leaving only the expanded dot + one divide per pair —
-    the verify-join cost is per candidate PAIR, so hoisting the casts
-    and norms out of it is the §2.3 "shuffle/compute fewer bytes"
-    move. Same expansion, fold order, zero-denominator and ragged
-    semantics as :func:`cosine_fixed`: bit-identical results."""
-    d = na * nb
-    if dim > _EXPAND_DIM_CAP:
-        return F.when(d > 0, dot(va, vb) / d).otherwise(F.lit(0.0))
-    raw = F.when(d > 0, dot_fixed(va, vb, dim) / d).otherwise(F.lit(0.0))
-    return F.when((F.size(va) == dim) & (F.size(vb) == dim), raw)
+    """Cosine similarity, 0.0 when either norm is 0; see the module
+    docstring for ``dim``. ``norms=(na, nb)`` supplies the two norms
+    (hoisted per row with :func:`norm` before a pair join)."""
+    if norms is None:
+        norms = (F.sqrt(_fold(a, None, dim)), F.sqrt(_fold(b, None, dim)))
+    d = norms[0] * norms[1]
+    raw = F.when(d > 0, _fold(a, b, dim) / d).otherwise(F.lit(0.0))
+    return _gated(raw, dim, a, b)
 
 
 def cosine_topk(
@@ -147,7 +120,7 @@ def cosine_topk(
     # literal-query scans keep the HOF cosine: Catalyst folds the
     # query-side norm to a constant, and measured throughput beats the
     # expanded form there (the expansion wins only on array-vs-array
-    # JOINS — see cosine_fixed)
+    # JOINS — see the module docstring)
     scored = df.select(
         F.col(id_col),
         cosine(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
@@ -155,27 +128,15 @@ def cosine_topk(
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
-def _probe_dim(df: DataFrame, vec_col: str):
-    """First NON-EMPTY vector's length, or None when there is none.
-    Probing an arbitrary first row let one empty/ragged vector
-    silently null every signature (order-dependent recall collapse);
-    the ragged guard then degrades only the genuinely ragged rows."""
-    row = (
-        df.where(F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0))
-        .select(F.size(F.col(vec_col)).alias("d"))
-        .first()
-    )
-    return None if row is None else int(row["d"])
-
-
 def _modal_dim(df: DataFrame, vec_col: str):
     """MODAL non-empty vector length (ties to the smaller dim), or
-    None when there is none — the statistic :func:`_centroid_rows`
-    trains on. Consumers that gate rows on "the" dimension must use
-    this, not :func:`_probe_dim`: a ragged FIRST row would otherwise
-    reclassify the modal majority as ragged, and ``.first()`` on an
-    unordered frame makes that partition-order-dependent (r10
-    review). One tiny size-histogram agg."""
+    None when there is none — the one rule for "the" width of a vector
+    column when the caller passes no ``dim``, and the statistic
+    :func:`_centroid_rows` trains on. The first row's width would let
+    one ragged leading vector reclassify the modal majority as ragged
+    (every signature and score NULL), and ``.first()`` on an unordered
+    frame makes that partition-order-dependent (r10 review). One tiny
+    size-histogram agg."""
     row = (
         df.where(F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0))
         .groupBy(F.size(F.col(vec_col)).alias("d"))
@@ -201,7 +162,7 @@ def rp_signature(
     import numpy as np
 
     if dim is None:
-        dim = _probe_dim(df, vec_col)
+        dim = _modal_dim(df, vec_col)
         if dim is None:
             raise ValueError(
                 "no non-empty vectors to probe; pass dim= explicitly"
@@ -308,7 +269,7 @@ def ann_assign(
     (VERDICT r4 §next 1; contrast the pre-r5 shape, which re-ran one
     interpreted HOF fold per plane per row on every query)."""
     if dim is None:
-        dim = _probe_dim(df, vec_col)
+        dim = _modal_dim(df, vec_col)
         if dim is None:
             raise ValueError(
                 "no non-empty vectors to probe; pass dim= explicitly"
@@ -469,6 +430,8 @@ def knn_join(
     At 100 TB with a LARGE query side, exact kNN is the wrong tool —
     use ``similarity_join`` (banded LSH) or ``ivf_topk`` partition
     pruning instead."""
+    from collections import Counter
+
     from pyspark.sql import Window
 
     if method == "loop":
@@ -502,19 +465,13 @@ def knn_join(
     if not l_rows:
         return spark.createDataFrame([], out_schema)
 
-    dim = next(
-        (len(r["lv"]) for r in l_rows if r["lv"] is not None and len(r["lv"]) > 0),
-        None,
-    )
-    valid_q = [
-        r
-        for r in l_rows
-        if r["lv"] is not None and dim is not None and len(r["lv"]) == dim
-    ]
+    # the modal width (ties to the smaller), as _modal_dim computes it
+    # in the loop twin — counted here over the rows already collected
+    widths = Counter(len(r["lv"]) for r in l_rows if r["lv"])
+    dim = min(widths, key=lambda d: (-widths[d], d)) if widths else None
+    valid_q = [r for r in l_rows if r["lv"] and len(r["lv"]) == dim]
     invalid_qids = [
-        r["lid"]
-        for r in l_rows
-        if not (r["lv"] is not None and dim is not None and len(r["lv"]) == dim)
+        r["lid"] for r in l_rows if not (r["lv"] and len(r["lv"]) == dim)
     ]
 
     parts = []
@@ -523,7 +480,7 @@ def knn_join(
         Q = np.array([r["lv"] for r in valid_q], dtype=np.float64)
         qn = np.linalg.norm(Q, axis=1)
         # zero-norm query → dot 0 / safe 1 → score 0.0, matching
-        # cosine()/cosine_fixed()'s otherwise(0.0) branch
+        # cosine()'s otherwise(0.0) branch
         QT = (Q / np.where(qn > 0, qn, 1.0)[:, None]).T  # dim × q
         bc = spark.sparkContext.broadcast((qids, QT))
         nq = len(qids)
@@ -646,15 +603,15 @@ def _knn_join_loop(
         F.col(right_id).alias("right_id"),
         F.col(vec_col).cast("array<double>").alias("rv"),
     )
-    # codegen-expanded cosine when the dim is probe-able (null-safe
-    # probe). An all-null/empty left can't be probed; the contract
-    # (null vectors score NULL, docstring) then forces every score to
-    # NULL — the bare HOF cosine() would leak its otherwise(0.0)
-    # branch here and disagree with the blocked path (found by the
-    # hypothesis blocked-vs-loop equivalence test on vecs=[None,None])
-    d = _probe_dim(l_df, "lv")
+    # gated cosine at the left side's modal width. An all-null/empty
+    # left has no width; the contract (null vectors score NULL,
+    # docstring) then forces every score to NULL — the ungated HOF
+    # cosine() would leak its otherwise(0.0) branch here and disagree
+    # with the blocked path (found by the hypothesis blocked-vs-loop
+    # equivalence test on vecs=[None,None])
+    d = _modal_dim(l_df, "lv")
     score = (
-        cosine_fixed(F.col("lv"), F.col("rv"), d)
+        cosine(F.col("lv"), F.col("rv"), d)
         if d is not None
         else F.lit(None).cast("double")
     )
@@ -721,10 +678,9 @@ def similarity_join(
     r_renamed = right.select(
         F.col(right_id).alias("right_id"), F.col(vec_col).alias("rv")
     ).where(F.col("rv").isNotNull())
-    # empty-result schema takes each id's type from its own side
-    d = _probe_dim(l_renamed, "lv")
-    first = None if d is None else {"d": d}
-    if first is None:
+    dim = _modal_dim(l_renamed, "lv")
+    if dim is None:
+        # empty-result schema takes each id's type from its own side
         return (
             l_renamed.select("left_id")
             .limit(0)
@@ -734,7 +690,6 @@ def similarity_join(
             )
             .withColumn("cosine", F.lit(0.0))
         )
-    dim = first["d"]
 
     def banded(df: DataFrame, vcol: str, out_id: str) -> DataFrame:
         # all bands from one Arrow-batched matmul (see
@@ -764,21 +719,21 @@ def similarity_join(
         .distinct()
     )
     # per-row cast + norm hoisted out of the per-pair verify (r11,
-    # guide §2.3) — bit-identical to cosine_fixed, see cosine_prenormed
+    # guide §2.3) — bit-identical to the unhoisted cosine
     l_scored = l_renamed.select(
         "left_id", F.col("lv").cast("array<double>").alias("lv")
-    ).withColumn("ln", norm_fixed(F.col("lv"), dim))
+    ).withColumn("ln", norm(F.col("lv"), dim))
     r_scored = r_renamed.select(
         "right_id", F.col("rv").cast("array<double>").alias("rv")
-    ).withColumn("rn", norm_fixed(F.col("rv"), dim))
+    ).withColumn("rn", norm(F.col("rv"), dim))
     scored = (
         cands.join(l_scored, "left_id")
         .join(r_scored, "right_id")
         .select(
             "left_id",
             "right_id",
-            cosine_prenormed(
-                F.col("lv"), F.col("rv"), F.col("ln"), F.col("rn"), dim
+            cosine(
+                F.col("lv"), F.col("rv"), dim, norms=(F.col("ln"), F.col("rn"))
             ).alias("cosine"),
         )
     )

@@ -370,8 +370,8 @@ def ivf_index_topk_batch(
     cand = scanned.join(F.broadcast(probes_df), "ivf_cid").join(
         F.broadcast(qvec_df), "__qid"
     )
-    # HOF cosine, NOT cosine_fixed: WindowGroupLimit's pre-shuffle
-    # partial sort fuses with this projection, and a dim-expanded
+    # HOF cosine (no dim), NOT the expanded one: WindowGroupLimit's
+    # pre-shuffle partial sort fuses with this projection, and a dim-expanded
     # cosine (3*dim terms) inside that generated method blows janino's
     # limit — codegen fails loudly and falls back interpreted anyway
     # (observed at dim=128). The HOF form is one clean interpreted

@@ -1932,14 +1932,14 @@ def _x3sem(spark, sf_dir):
         F.lit(0.0).alias("x"),
     )
 
-    from .extensions.similarity import cosine_prenormed, norm_fixed
+    from .extensions.similarity import cosine, norm
 
     # r12 (VERDICT r11 item 4, guide §2.3/§2.5): the two verification
     # joins were the build mass — measured at sf0.1: witnessed 7.8 s,
     # kept_bad 19.8 s of the 39 s builder. Two causes, two fixes:
-    # (a) cosine_fixed recomputed BOTH norms per candidate PAIR —
-    #     norms now hoist per ROW (norm_fixed) and the pair pays only
-    #     the expanded dot + one divide (cosine_prenormed — the same
+    # (a) the cosine recomputed BOTH norms per candidate PAIR —
+    #     norms now hoist per ROW (norm) and the pair pays only the
+    #     expanded dot + one divide (cosine(..., norms=) — the same
     #     expansion, fold order and ragged/zero semantics, the r11
     #     embedding-verify hoist);
     # (b) the join key is the CLUSTER id and nlist=2, so the whole
@@ -1959,7 +1959,7 @@ def _x3sem(spark, sf_dir):
         F.col("embedding").cast("array<double>").alias("v"),
     )
     av = audit.join(vecs, "id").withColumn(
-        "nrm", norm_fixed(F.col("v"), dim)
+        "nrm", norm(F.col("v"), dim)
     )
     salts = F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     dropped = av.where(~F.col("kept")).select(
@@ -1972,8 +1972,8 @@ def _x3sem(spark, sf_dir):
         F.col("v").alias("ov"), F.col("nrm").alias("on"),
         F.pmod(F.xxhash64("id"), F.lit(n_salt)).cast("int").alias("salt"),
     )
-    cos = cosine_prenormed(
-        F.col("dv"), F.col("ov"), F.col("dn"), F.col("on"), dim
+    cos = cosine(
+        F.col("dv"), F.col("ov"), dim, norms=(F.col("dn"), F.col("on"))
     )
     witnessed = (
         dropped.join(anyrow, ["c", "salt"])
@@ -1992,8 +1992,8 @@ def _x3sem(spark, sf_dir):
         F.col("v").alias("k2v"), F.col("nrm").alias("k2n"),
         F.pmod(F.xxhash64("id"), F.lit(n_salt)).cast("int").alias("salt"),
     )
-    kcos = cosine_prenormed(
-        F.col("kv"), F.col("k2v"), F.col("kn"), F.col("k2n"), dim
+    kcos = cosine(
+        F.col("kv"), F.col("k2v"), dim, norms=(F.col("kn"), F.col("k2n"))
     )
     kept_bad = (
         kept_a.join(kept_b, ["c", "salt"])

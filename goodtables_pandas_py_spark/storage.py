@@ -29,7 +29,7 @@ from __future__ import annotations
 import os
 import shutil
 import weakref
-from urllib.parse import unquote, urlsplit
+from urllib.parse import quote, unquote, urlsplit
 
 
 def _jvm_fs(spark):
@@ -266,6 +266,18 @@ def list_dir(spark, path: str) -> list[tuple[str, bool]]:
         (st.getPath().getName(), bool(st.isDirectory()))
         for st in fs.listStatus(jpath)
     ]
+
+
+def child(path: str, name: str) -> str:
+    """The path of the entry ``name``, as :func:`list_dir` reports it,
+    under the directory ``path``. A ``file:`` URI is percent-decoded
+    where it is served, so the name is quoted onto it: Spark writes a
+    split value ``b?c`` as the directory ``split=b%3Fc``, which must
+    not resolve to ``split=b?c``. Plain paths and Hadoop paths take
+    names as they are."""
+    if urlsplit(path).scheme == "file":
+        name = quote(name)
+    return f"{path}/{name}"
 
 
 def delete(spark, path: str, recursive: bool = False) -> None:

@@ -242,17 +242,15 @@ def embedding_dedup_batch_against_corpus(
     ``cacheutil.unpersist_scan_state(kept)`` (the foreachBatch wrapper
     does this for you)."""
     from ..extensions.dedup import embedding_banded_signatures
-    from ..extensions.similarity import cosine_fixed
-
-    from ..extensions.similarity import _probe_dim
+    from ..extensions.similarity import _modal_dim, cosine
 
     nn = batch.where(F.col(vec_col).isNotNull())
     if dim is None:
-        # probing the BATCH is a fallback: pass the corpus index's
-        # build dim explicitly — a malformed leading batch vector
-        # would otherwise null every correct signature and let
-        # near-dups of the corpus sail through
-        dim = _probe_dim(nn, vec_col)
+        # the BATCH's modal width is a fallback: pass the corpus
+        # index's build dim explicitly — a batch whose majority is
+        # off-width would otherwise null every correct signature and
+        # let near-dups of the corpus sail through
+        dim = _modal_dim(nn, vec_col)
     if dim is None:
         return batch  # nothing scorable: keep all
     new_banded = embedding_banded_signatures(
@@ -298,7 +296,7 @@ def embedding_dedup_batch_against_corpus(
     dup_of_corpus = (
         cands.join(new_v, "id")
         .join(corpus_v, "cid")
-        .where(cosine_fixed(F.col("nv"), F.col("cv"), dim) >= threshold)
+        .where(cosine(F.col("nv"), F.col("cv"), dim) >= threshold)
         .select(F.col("id").alias(id_col))
         .distinct()
     )
@@ -318,7 +316,7 @@ def embedding_dedup_batch_against_corpus(
         intra_cands
         .join(new_v.withColumnsRenamed({"id": "id_a", "nv": "v_a"}), "id_a")
         .join(new_v.withColumnsRenamed({"id": "id_b", "nv": "v_b"}), "id_b")
-        .where(cosine_fixed(F.col("v_a"), F.col("v_b"), dim) >= threshold)
+        .where(cosine(F.col("v_a"), F.col("v_b"), dim) >= threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )

@@ -759,27 +759,37 @@ def test_near_dedup_cc_chain_keeps_min(spark):
     assert cc == [1, 7]
 
 
-def test_fixed_dim_kernels_null_on_ragged(spark):
-    """dot_fixed/cosine_fixed must yield NULL for vectors whose length
-    differs from the probed dim — matching the HOF fold's degradation —
-    never a silently prefix-truncated 'plausible' value (ADVICE r4)."""
+@pytest.mark.parametrize("dim", [3, 300])
+def test_fixed_dim_kernels_null_on_ragged(spark, dim):
+    """With ``dim`` given, dot/norm/cosine (hoisted norms too) yield
+    NULL for any vector whose length differs from ``dim`` — below the
+    expansion cap (3) and above it (300) alike — never a silently
+    prefix-truncated 'plausible' value (ADVICE r4)."""
+    e = [1.0] + [0.0] * (dim - 1)
     rows = [
-        (1, [1.0, 0.0, 0.0], [1.0, 0.0, 0.0]),  # clean
-        (2, [1.0, 0.0, 0.0, 5.0], [1.0, 0.0, 0.0]),  # a too long
-        (3, [1.0, 0.0], [1.0, 0.0, 0.0]),  # a too short
+        (1, e, e),  # clean
+        (2, e + [5.0], e),  # a too long
+        (3, e[:-1], e),  # a too short
+        (4, [0.0] * dim, [1.0] * (dim - 1)),  # zero a, b too short
     ]
     df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
+    a, b = F.col("a"), F.col("b")
+    na, nb = similarity.norm(a, dim), similarity.norm(b, dim)
     got = {
-        r["id"]: (r["d"], r["c"])
+        r[0]: tuple(r[1:])
         for r in df.select(
             "id",
-            similarity.dot_fixed(F.col("a"), F.col("b"), 3).alias("d"),
-            similarity.cosine_fixed(F.col("a"), F.col("b"), 3).alias("c"),
+            similarity.dot(a, b, dim),
+            similarity.cosine(a, b, dim),
+            similarity.cosine(a, b, dim, norms=(na, nb)),
+            na,
+            nb,
         ).collect()
     }
-    assert got[1] == (1.0, 1.0)
-    assert got[2] == (None, None)
-    assert got[3] == (None, None)
+    assert got[1] == (1.0, 1.0, 1.0, 1.0, 1.0)
+    assert got[2] == (None, None, None, None, 1.0)
+    assert got[3] == (None, None, None, None, 1.0)
+    assert got[4] == (None, None, None, 0.0, None)
 
 
 def test_rp_band_signatures_ragged_rows_get_null(spark):
@@ -4142,7 +4152,8 @@ def test_r10_extension_review_fixes(spark):
       centroids argument no longer makes semantic_dedup a silent
       no-op (every row is kept, visibly unclustered).
     - the gating dim is the MODAL one, so a ragged FIRST row cannot
-      reclassify the majority as ragged.
+      reclassify the majority as ragged — in semantic_dedup_audit,
+      embedding_near_dups, similarity_join and both knn_join methods.
     - ivf_topk refuses a query whose length differs from the
       centroids' instead of ranking probes on a zip-truncated
       distance.
@@ -4166,6 +4177,51 @@ def test_r10_extension_review_fixes(spark):
     assert got[0]["cluster"] is None and got[0]["kept"]  # ragged stray
     clustered = [r for r in got.values() if r["cluster"] is not None]
     assert len(clustered) == 12  # the modal majority clustered
+
+    # the same rule for every entry that takes no dim: a 3-wide FIRST
+    # vector does not pin the width of the 4-wide majority
+    from goodtables_pandas_py_spark.extensions.dedup import (
+        embedding_near_dups,
+    )
+    from goodtables_pandas_py_spark.extensions.similarity import (
+        knn_join,
+        similarity_join,
+    )
+
+    vdf = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0]),  # 3-dim stray listed first
+            (1, [1.0, 0.0, 0.0, 0.0]),
+            (2, [1.0, 0.1, 0.0, 0.0]),
+            (3, [1.0, 0.0, 0.2, 0.0]),
+            (4, [0.1, 0.0, 0.0, 1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    true_pairs = {(1, 2), (1, 3), (2, 3)}
+    near = embedding_near_dups(vdf, threshold=0.9, max_bucket=None)
+    assert {(r["id_a"], r["id_b"]) for r in near.collect()} == true_pairs
+    sj = similarity_join(vdf, vdf, k=2).where(F.col("cosine") >= 0.9)
+    assert {(r["left_id"], r["right_id"]) for r in sj.collect()} == {
+        p for a, b in true_pairs for p in ((a, b), (b, a))
+    }
+    knn = {
+        method: sorted(
+            (r["left_id"], r["right_id"],
+             None if r["cosine"] is None else round(r["cosine"], 9))
+            for r in knn_join(vdf, vdf, k=2, method=method).collect()
+        )
+        for method in ("blocked", "loop")
+    }
+    assert knn["blocked"] == knn["loop"]
+    assert [(q, r) for q, r, _ in knn["loop"]] == [
+        (0, 1), (0, 2), (1, 2), (1, 3), (2, 1), (2, 3),
+        (3, 1), (3, 2), (4, 1), (4, 2),
+    ]
+    # the stray scores nothing; every modal-width pair is scored
+    assert [c is None for q, _, c in knn["loop"]] == [
+        q == 0 for q, _, _ in knn["loop"]
+    ]
 
     # centroid-dim mismatch: keeps everything VISIBLY (null cluster)
     audit2 = semantic_dedup_audit(

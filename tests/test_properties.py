@@ -10,7 +10,7 @@ import datetime as dt
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, given, seed, settings, strategies as st
 from pyspark.sql import functions as F
 
 from goodtables_pandas_py_spark.parsers import parse_field
@@ -353,7 +353,7 @@ def test_pair_components_matches_union_find(spark, edges):
     ),
     st.integers(min_value=1, max_value=4),
 )
-@pytest.mark.slow
+@seed(13)
 def test_knn_join_blocked_matches_loop_oracle(spark, vecs, k):
     """The blocked-matmul exact kNN must agree with the legacy
     cross-join+window form on ANY random vector table — including

@@ -130,6 +130,31 @@ def test_hadoop_written_root_takes_a_local_increment(
     assert _rows(got) == _rows(_edit_split_a(df))
 
 
+def test_file_uri_root_keeps_escaped_split_dirs(spark, tmp_path):
+    """Spark writes split value ``b?c`` as the directory
+    ``split=b%3Fc``. On a ``file://`` root the listed name is quoted
+    onto the URI, so the percent-decoding local backend reaches that
+    directory, not ``split=b?c``: an increment reusing it and a
+    compaction counting its files read back every row."""
+    root = f"file://{tmp_path}/rel"
+    v1 = [(1, "t1", "a"), (2, "t2", "b?c"), (3, "t3", "d")]
+    pl.write_release_version(spark.createDataFrame(v1, SCHEMA), root)
+    v2 = [(1, "t1!", "a"), (2, "t2", "b?c"), (3, "t3", "d")]
+    m2 = pl.write_release_increment(spark.createDataFrame(v2, SCHEMA), root)
+    assert m2["incremental"]["reused"] == ["b?c", "d"]
+    assert _rows(pl.read_release(spark, root)[0]) == sorted(v2)
+    data = tmp_path / "rel" / "versions" / "v00000002" / "data.parquet"
+    assert sorted(p.name for p in data.glob("split=*")) == [
+        "split=a", "split=b%3Fc", "split=d",
+    ]
+
+    v3 = v2 + [(4, "t4", "b?c")]
+    pl.write_release_append(spark.createDataFrame(v3[3:], SCHEMA), root)
+    m4 = pl.compact_release_version(spark, root)
+    assert m4["incremental"]["rewritten"] == ["b?c"]
+    assert _rows(pl.read_release(spark, root)[0]) == sorted(v3)
+
+
 @pytest.mark.parametrize("backend", ["local", "hadoop"])
 def test_release_round_trip(spark, tmp_path, monkeypatch, backend):
     """Every store operation on one root, through one backend: full

@@ -86,7 +86,6 @@ def test_takedown_replay_is_noop_on_both_roots(spark, tmp_path):
     )
 
 
-@pytest.mark.slow
 def test_takedown_crash_between_halves_completes_by_replay(
     spark, tmp_path
 ):
