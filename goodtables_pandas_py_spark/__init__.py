@@ -62,6 +62,27 @@ def parse_table(df, schema, resource: str = ""):
     return tv.parsed, tv.errors
 
 
+def _default_driver_mem(cpus: int) -> str:
+    """The driver heap ``get_spark`` asks for when
+    ``SPARK_GRAFT_DRIVER_MEM`` is unset: ~1.5g per core, at least 4g,
+    and never more than half of physical memory.
+
+    Local mode runs every task inside the driver JVM, whose DEFAULT
+    heap is ~1g — 32 concurrent hash-aggregate tasks OOM there long
+    before a 128 GiB machine is near full (a 10× scale probe: minhash
+    on 100k docs died in the signature aggregate). The half-memory cap
+    keeps the 32-core default (48g) from overcommitting a small host,
+    where the kernel kills the JVM instead. Only effective for the
+    process's FIRST session; a real cluster sets executor memory
+    itself."""
+    import os
+
+    mib = max(4, (3 * cpus) // 2) * 1024
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    mib = min(mib, phys // (2 << 20))
+    return f"{mib // 1024}g" if mib % 1024 == 0 else f"{mib}m"
+
+
 def get_spark(
     app_name: str = "goodtables-spark",
     master: str | None = None,
@@ -83,15 +104,8 @@ def get_spark(
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # local mode runs every task inside the driver JVM, whose DEFAULT
-    # heap is ~1g — 32 concurrent hash-aggregate tasks OOM there long
-    # before the machine (128 GiB) is near full (found by a 10× scale
-    # probe in r4: minhash on 100k docs died in the signature
-    # aggregate). Budget ~1.5g per core. Only effective for the
-    # process's FIRST session; a real cluster sets executor memory
-    # itself.
-    mem = os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM", f"{max(4, (3 * int(cpus)) // 2)}g"
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(
+        int(cpus)
     )
     builder = (
         SparkSession.builder.appName(app_name)

@@ -11,7 +11,7 @@ Design for the 100 TB corpus / small eval set asymmetry:
   ``broadcast()`` — the join never shuffles the corpus;
 - the CORPUS side is one explode of per-doc distinct n-grams: the
   scan-side cost is the same shingle machinery the MinHash pipeline
-  uses (``text.shingles`` — JVM transform/slice, whole-stage
+  uses (``dedup._doc_shingles`` — JVM transform/slice, whole-stage
   codegen, no UDF);
 - the match aggregate is a map-side-combinable count per
   (corpus doc, eval doc): shuffle rows = matched n-grams only, which
@@ -19,7 +19,9 @@ Design for the 100 TB corpus / small eval set asymmetry:
   where contamination exists.
 
 ``contaminated_ids`` is the drop-set convenience for composing with
-an anti-join (same pattern as ``dedup.near_dedup``).
+an anti-join (same pattern as ``dedup.near_dedup``). The fuzzy scan
+(:func:`near_contamination_scan`) verifies its MinHash candidates
+through dedup's shared verify join and shingle-set builder.
 """
 
 from __future__ import annotations
@@ -27,7 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..cacheutil import attach_persisted, get_persisted
-from .text import normalize_text, shingles, whitespace_tokens
+from .dedup import (
+    _doc_shingles,
+    _jaccard,
+    _verified_pairs,
+    banded_signatures,
+    hashed_shingle_sets,
+)
 
 
 def ngram_sets(
@@ -45,10 +53,11 @@ def ngram_sets(
     within one (corpus doc, eval doc) comparison (P ≈ s²·2⁻⁶⁵), and
     the oracle's exact string-side recompute (x7_contamination) would
     fail loudly on any flip."""
-    toks = whitespace_tokens(normalize_text(F.col(text_col)))
     return df.select(
         F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(shingles(toks, ngram))).alias("g"),
+        F.explode(
+            F.array_distinct(_doc_shingles(F.col(text_col), ngram))
+        ).alias("g"),
     ).select("id", F.xxhash64(F.col("g")).alias("g"))
 
 
@@ -126,19 +135,6 @@ def contaminated_ids(
     )
 
 
-def _shingle_set(
-    df: DataFrame, id_col: str, text_col: str, shingle_k: int
-) -> DataFrame:
-    """(id, s) rows: the distinct word-shingle array per document —
-    the exact-verify side of the fuzzy scan (same shingle machinery
-    as the MinHash pipeline, JVM-side)."""
-    toks = whitespace_tokens(normalize_text(F.col(text_col)))
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles(toks, shingle_k)).alias("s"),
-    )
-
-
 def near_contamination_scan(
     corpus: DataFrame,
     eval_df: DataFrame,
@@ -172,18 +168,17 @@ def near_contamination_scan(
     is the banding guarantee at (num_hashes, num_bands) — the same
     S-curve as ``minhash_dedup_pairs``, whose hash family this
     shares."""
-    from .dedup import banded_signatures
-
     ev_banded = banded_signatures(
         eval_df, eval_id_col, eval_text_col, num_hashes, num_bands,
         shingle_k,
-    ).withColumnRenamed("id", "eval_id")
+    ).withColumnRenamed("id", "id_b")
     co_banded = banded_signatures(
         corpus, id_col, text_col, num_hashes, num_bands, shingle_k
-    ).withColumnRenamed("id", "corpus_id")
+    ).withColumnRenamed("id", "id_a")
+    # (id_a, id_b) = (corpus doc, eval doc): the verify kernel's names
     cands = (
         co_banded.join(F.broadcast(ev_banded), ["band", "bh"])
-        .select("corpus_id", "eval_id")
+        .select("id_a", "id_b")
         .distinct()
     )
     # the candidate set is bounded by corpus docs sharing a band with
@@ -200,26 +195,18 @@ def near_contamination_scan(
     maybe_broadcast = (
         F.broadcast if n_cands <= max_broadcast_candidates else (lambda x: x)
     )
-    co_sets = _shingle_set(corpus, id_col, text_col, shingle_k)
-    co_sets = co_sets.join(
-        maybe_broadcast(
-            cands.select(F.col("corpus_id").alias("id")).distinct()
-        ),
+    co_sets = hashed_shingle_sets(corpus, id_col, text_col, shingle_k).join(
+        maybe_broadcast(cands.select(F.col("id_a").alias("id")).distinct()),
         "id",
         "left_semi",
-    ).withColumnsRenamed({"id": "corpus_id", "s": "cs"})
-    ev_sets = _shingle_set(
-        eval_df, eval_id_col, eval_text_col, shingle_k
-    ).withColumnsRenamed({"id": "eval_id", "s": "es"})
-    inter = F.size(F.array_intersect(F.col("cs"), F.col("es")))
-    union = F.size("cs") + F.size("es") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    out = (
-        co_sets.join(maybe_broadcast(cands), "corpus_id")
-        .join(F.broadcast(ev_sets), "eval_id")
-        .select("corpus_id", "eval_id", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
     )
+    ev_sets = hashed_shingle_sets(
+        eval_df, eval_id_col, eval_text_col, shingle_k
+    )
+    out = _verified_pairs(
+        maybe_broadcast(cands), co_sets, F.broadcast(ev_sets),
+        _jaccard(), F.col("jaccard") >= threshold,
+    ).toDF("corpus_id", "eval_id", "jaccard")
     # the persisted candidate frame outlives this builder (the lazy
     # result consumes it in both verify joins) — hand its lifetime to
     # the caller instead of leaking it until session GC (ADVICE r9):

@@ -12,6 +12,13 @@ pipeline (SURVEY.md §2.9), all shuffle-conscious:
 - simhash:  64-bit sign-sum fingerprint via aggregate() lambda —
             JVM-side; near-dups = equal 16-bit chunk buckets (Hamming
             LSH).
+- embedding: random-hyperplane band signatures (similarity.py) →
+            the same bucket pairing → exact cosine verify.
+
+Every LSH family here, the streaming batch kernels
+(streaming/dedup.py) and fuzzy decontamination (decontam.py) pair
+buckets with ``_bucket_pairs`` and verify with ``_verified_pairs``:
+one candidate-and-verify path, whatever the signature and score.
 
 MinHash math (public): P[minhash_i(A)=minhash_i(B)] = J(A,B); banding
 (b bands × r rows) matches pairs with J ≈ (1/b)^(1/r) threshold.
@@ -19,11 +26,21 @@ MinHash math (public): P[minhash_i(A)=minhash_i(B)] = J(A,B); banding
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cacheutil import attach_persisted, get_persisted
 from .text import normalize_text, shingles, whitespace_tokens
+
+
+def _doc_shingles(text: Column, k: int) -> Column:
+    """The k-word shingles of a text column: normalize → whitespace
+    tokens → shingles. The one shingling rule of every dedup signature
+    (MinHash, SimHash) and verify set, and of decontamination's
+    n-grams, so an index and its lookups always shingle alike."""
+    return shingles(whitespace_tokens(normalize_text(text)), k)
+
 
 # --- X1: exact dedup ------------------------------------------------------
 
@@ -93,8 +110,7 @@ def minhash_signature(
     O(shingles × hashes) interpreted ops. Fine for ad-hoc use; the
     scale path is ``minhash_signatures`` below (explode + codegen'd
     wide min-aggregate), which is what the candidate pipeline uses."""
-    toks = whitespace_tokens(normalize_text(text))
-    sh = shingles(toks, shingle_k)
+    sh = _doc_shingles(text, shingle_k)
     sig = F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda h: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, h))),
@@ -119,9 +135,7 @@ def minhash_signatures(
     documents table)."""
     sh = df.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            shingles(whitespace_tokens(normalize_text(F.col(text_col))), shingle_k)
-        ).alias("s"),
+        F.explode(_doc_shingles(F.col(text_col), shingle_k)).alias("s"),
     )
     aggs = [
         F.min(F.xxhash64(F.col("s"), F.lit(h))).alias(f"h{h}")
@@ -163,7 +177,7 @@ def banded_signatures(
 ) -> DataFrame:
     """The persistable LSH index side: one (``id``, ``band``, ``bh``)
     row per document per band — exactly the projection
-    :func:`minhash_candidates` self-joins, exposed so a corpus can
+    :func:`minhash_candidates` pairs, exposed so a corpus can
     build it ONCE and serve many lookups (the MinHash analogue of
     similarity.ann_assign). At 100 TB: write it with
     ``sources.write_bucketed(banded, t, ["band", "bh"])`` and every
@@ -215,7 +229,7 @@ def minhash_candidates(
     (count only — map-side combinable, shuffles (band, hash, n)
     triples) → semi-join banded rows to the ELIGIBLE buckets (2 ≤ n ≤
     ``max_bucket``; the eligible set is duplicate buckets only, so AQE
-    broadcasts it) → collect_list + within-bucket self-pairing over
+    broadcasts it) → within-bucket pairing (:func:`_bucket_pairs`) over
     those rows alone.
 
     Skew posture (r4): sizes are counted BEFORE any list is built, so
@@ -243,48 +257,14 @@ def minhash_candidates(
         df, id_col, text_col, num_hashes, num_bands, shingle_k
     )
     if persist_banded:
-        from pyspark import StorageLevel
-
         banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    buckets = (
-        cap_buckets(banded, ["band", "bh"], max_bucket)
-        .groupBy("band", "bh")
-        .agg(F.collect_list("id").alias("ids"))
+    # a persisted banded frame's lifetime goes to the caller (cacheutil
+    # contract, r12): a caller that materializes the result per rep can
+    # release the cache between reps instead of re-reading rep 1's fill
+    return attach_persisted(
+        _bucket_pairs(banded, ["band", "bh"], max_bucket),
+        *([banded] if persist_banded else []),
     )
-    # pair generation: sort the bucket's ids once, then pair each
-    # element only with the SLICE AFTER it — materializes exactly the
-    # n(n-1)/2 kept pairs (the previous full n x n struct array built
-    # ~50 MB per capped bucket row before filtering half away)
-    sorted_ids = F.array_sort(F.col("ids"))
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(F.transform(
-                    sorted_ids,
-                    lambda a, i: F.transform(
-                        F.slice(
-                            sorted_ids, i + 2,
-                            F.greatest(
-                                F.size(sorted_ids) - i - 1, F.lit(0)
-                            ),
-                        ),
-                        lambda b: F.struct(
-                            a.alias("id_a"), b.alias("id_b")
-                        ),
-                    ),
-                ))
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
-        .distinct()
-    )
-    if persist_banded:
-        # hand the persisted banded frame's lifetime to the caller
-        # (cacheutil contract, r12): a bench/driver that materializes
-        # the result per rep can release the cache between reps instead
-        # of re-reading rep 1's fill
-        return attach_persisted(pairs, banded)
-    return pairs
 
 
 def cap_buckets(
@@ -321,6 +301,106 @@ def cap_buckets(
     return df.join(eligible, keys)
 
 
+# --- the LSH candidate-and-verify kernels (see the module docstring) -----
+
+
+def _bucket_pairs(
+    banded: DataFrame, keys: list[str], max_bucket: int | None
+) -> DataFrame:
+    """The distinct (``id_a``, ``id_b``) pairs, ``id_a < id_b``, of
+    ``banded`` rows (``id`` plus the bucket ``keys``) that share a
+    bucket surviving :func:`cap_buckets`.
+
+    One collect_list per capped bucket, sorted and de-duplicated (an
+    id repeated inside a bucket never pairs with itself), then each
+    element is paired only with the SLICE AFTER it — exactly the
+    n(n-1)/2 kept pairs, never an n × n array or a bucket self-join.
+    The dedup.candidates layer measures this form."""
+    buckets = (
+        cap_buckets(banded, keys, max_bucket)
+        .groupBy(*keys)
+        .agg(F.collect_list("id").alias("ids"))
+    )
+    ids = F.array_sort(F.array_distinct(F.col("ids")))
+    # a slice that starts past the end is empty, so the last id pairs
+    # with nothing and no length clamp is needed
+    pairs = F.flatten(F.transform(
+        ids,
+        lambda a, i: F.transform(
+            F.slice(ids, i + 2, F.size(ids)),
+            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
+        ),
+    ))
+    return (
+        buckets.select(F.explode(pairs).alias("p"))
+        .select("p.id_a", "p.id_b")
+        .distinct()
+    )
+
+
+def _verified_pairs(
+    cands: DataFrame,
+    payload_a: DataFrame,
+    payload_b: DataFrame,
+    score: Column,
+    keep: Column,
+) -> DataFrame:
+    """Exact verify of candidate pairs: join each side's per-row
+    payload (``id`` plus payload columns; side a's columns get the
+    suffix ``_a`` and join on ``id_a``, side b's ``_b`` on ``id_b``),
+    compute ``score`` — an aliased Column over the suffixed payload —
+    and keep the (``id_a``, ``id_b``, score) rows where ``keep`` holds.
+
+    Payloads are built once per ROW before the join (hashed shingle
+    sets, vectors with their hoisted norm, fingerprints), so the pair
+    side pays one set intersection, dot product or xor per pair."""
+
+    def side(payload: DataFrame, s: str) -> DataFrame:
+        return payload.select(
+            *[F.col(c).alias(f"{c}_{s}") for c in payload.columns]
+        )
+
+    return (
+        cands.join(side(payload_a, "a"), "id_a")
+        .join(side(payload_b, "b"), "id_b")
+        .select("id_a", "id_b", score)
+        .where(keep)
+    )
+
+
+def _jaccard() -> Column:
+    """The text families' verify score over two :func:`hashed_shingle_sets`
+    payloads."""
+    return hashed_set_jaccard(F.col("s_a"), F.col("s_b")).alias("jaccard")
+
+
+def _vector_payload(
+    df: DataFrame, id_col: str, vec_col: str, dim: int
+) -> DataFrame:
+    """(``id``, ``v``, ``n``) per non-null vector: the embedding verify
+    payload, cast to double ONCE per row with its norm hoisted out of
+    the pair join, leaving one expanded dot and one divide per pair
+    (measured 82 s → 9 s over the 1.28M-candidate uncapped
+    embedding_near_dups sweep at sf0.1). Same arithmetic and ragged
+    gate as the unhoisted cosine."""
+    from .similarity import norm
+
+    return df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"),
+    ).withColumn("n", norm(F.col("v"), dim))
+
+
+def _cosine(dim: int) -> Column:
+    """The embedding families' verify score over two
+    :func:`_vector_payload` payloads (ragged rows score NULL)."""
+    from .similarity import cosine
+
+    return cosine(
+        F.col("v_a"), F.col("v_b"), dim, norms=(F.col("n_a"), F.col("n_b"))
+    ).alias("cosine")
+
+
 def ngram_jaccard(
     a_tokens: Column, b_tokens: Column, k: int = 3
 ) -> Column:
@@ -341,18 +421,14 @@ def hashed_shingle_sets(
     payload: (``id``, ``s``: array<long>), one row per document. The
     candidate join ships 8 B/shingle and intersects longs; Jaccard is
     unchanged absent a 64-bit collision within one pair's sets
-    (P ≈ s²·2⁻⁶⁵ per pair). Shared by :func:`minhash_dedup_pairs` and
-    the streaming batch kernel (streaming/dedup.py) so the two verify
-    representations cannot drift."""
+    (P ≈ s²·2⁻⁶⁵ per pair). The one shingle-set builder: every text
+    verify (:func:`minhash_dedup_pairs`, the streaming batch kernel,
+    ``decontam.near_contamination_scan``) and the registry's set sizes
+    build their sets here, so the representations cannot drift."""
     return df.select(
         F.col(id_col).alias("id"),
         F.transform(
-            F.array_distinct(
-                shingles(
-                    whitespace_tokens(normalize_text(F.col(text_col))),
-                    shingle_k,
-                )
-            ),
+            F.array_distinct(_doc_shingles(F.col(text_col), shingle_k)),
             lambda sh: F.xxhash64(sh),
         ).alias("s"),
     )
@@ -361,11 +437,10 @@ def hashed_shingle_sets(
 def hashed_set_jaccard(sa: Column, sb: Column) -> Column:
     """Exact Jaccard over two DISTINCT sets (the
     :func:`hashed_shingle_sets` payload, or any array_distinct'd
-    arrays): |∩|/|∪|, 0.0 for two empty sets. THE one formula — the
-    batch (:func:`minhash_dedup_pairs`) and streaming
-    (``streaming/dedup.py`` intra-batch) verify arms and
-    :func:`ngram_jaccard` all use it, so their dedup semantics cannot
-    fork (r11 review)."""
+    arrays): |∩|/|∪|, 0.0 for two empty sets. THE one formula — every
+    text verify (through ``_jaccard``: batch, streaming and fuzzy
+    decontam) and :func:`ngram_jaccard` use it, so their dedup
+    semantics cannot fork (r11 review)."""
     inter = F.size(F.array_intersect(sa, sb))
     union = F.size(F.array_union(sa, sb))
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -423,15 +498,9 @@ def minhash_dedup_pairs(
     )
     sets = hashed_shingle_sets(df, id_col, text_col, shingle_k)
     if persist_sets:
-        from pyspark import StorageLevel
-
         sets = sets.persist(StorageLevel.MEMORY_AND_DISK)
-    jac = hashed_set_jaccard(F.col("s_a"), F.col("s_b"))
-    out = (
-        cands.join(sets.withColumnsRenamed({"id": "id_a", "s": "s_a"}), "id_a")
-        .join(sets.withColumnsRenamed({"id": "id_b", "s": "s_b"}), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+    out = _verified_pairs(
+        cands, sets, sets, _jaccard(), F.col("jaccard") >= threshold
     )
     return attach_persisted(
         out,
@@ -597,8 +666,7 @@ def simhash64(text: Column, shingle_k: int = 2) -> Column:
     64-long vote array through the shingle array (no Python, no
     explode). ANSI-safe packing: two 32-bit halves built with
     acc*2+bit (max 2^32, no long overflow) then OR-shifted together."""
-    toks = whitespace_tokens(normalize_text(text))
-    feats = shingles(toks, shingle_k)
+    feats = _doc_shingles(text, shingle_k)
     bits = F.sequence(F.lit(0), F.lit(63))
     votes = F.aggregate(
         feats,
@@ -636,28 +704,24 @@ def simhash_fingerprints(
     packing. Shuffle volume: docs × 64 longs after partial agg."""
     sh = df.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            shingles(whitespace_tokens(normalize_text(F.col(text_col))), shingle_k)
-        ).alias("s"),
+        F.explode(_doc_shingles(F.col(text_col), shingle_k)).alias("s"),
     ).select("id", F.xxhash64(F.col("s")).alias("h"))
     aggs = [
         F.sum(F.getbit(F.col("h"), F.lit(b)) * 2 - 1).alias(f"v{b}")
         for b in range(64)
     ]
     votes = sh.groupBy("id").agg(*aggs)
-    lo = sum(
-        (F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0)) for b in range(32)),
-        start=F.lit(0).cast("long"),
-    )
-    hi = sum(
-        (
-            F.when(F.col(f"v{b + 32}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            for b in range(32)
-        ),
-        start=F.lit(0).cast("long"),
-    )
+
+    def half(first: int) -> Column:
+        # 32 votes packed with literal weights: max 2^32, no overflow
+        return sum(
+            (F.when(F.col(f"v{first + b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
+             for b in range(32)),
+            start=F.lit(0).cast("long"),
+        ).cast("long")
+
     return votes.select(
-        "id", F.shiftleft(hi.cast("long"), 32).bitwiseOR(lo.cast("long")).alias("fp")
+        "id", F.shiftleft(half(32), 32).bitwiseOR(half(0)).alias("fp")
     )
 
 
@@ -682,7 +746,7 @@ def simhash_candidates(
     differing bits can straddle all four chunks), so larger values
     raise rather than silently missing qualifying pairs.
 
-    ``max_bucket`` guards the bucket self-join against hot-chunk n²
+    ``max_bucket`` guards the bucket pairing against hot-chunk n²
     explosion (see :func:`cap_buckets`); pass None for the exact
     pigeonhole-completeness harness."""
     if max_hamming > 3:
@@ -694,34 +758,19 @@ def simhash_candidates(
     fp = simhash_fingerprints(df, id_col, text_col, shingle_k)
     chunks = fp.select(
         "id",
-        "fp",
-        F.explode(
+        F.posexplode(
             F.array(
                 *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("fp"), c * 16)
-                        .bitwiseAND(0xFFFF)
-                        .alias("val"),
-                    )
+                    F.shiftright(F.col("fp"), c * 16).bitwiseAND(0xFFFF)
                     for c in range(4)
                 ]
             )
-        ).alias("c"),
-    ).select("id", "fp", "c.chunk", "c.val")
-    chunks = cap_buckets(chunks, ["chunk", "val"], max_bucket)
-    a = chunks.select(
-        F.col("id").alias("id_a"), F.col("fp").alias("fp_a"), "chunk", "val"
+        ).alias("chunk", "val"),
     )
-    b = chunks.select(
-        F.col("id").alias("id_b"), F.col("fp").alias("fp_b"), "chunk", "val"
-    )
-    return (
-        a.join(b, ["chunk", "val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming64(F.col("fp_a"), F.col("fp_b")).alias("hamming"))
-        .distinct()
-        .where(F.col("hamming") <= max_hamming)
+    return _verified_pairs(
+        _bucket_pairs(chunks, ["chunk", "val"], max_bucket), fp, fp,
+        hamming64(F.col("fp_a"), F.col("fp_b")).alias("hamming"),
+        F.col("hamming") <= max_hamming,
     )
 
 
@@ -763,7 +812,7 @@ def embedding_cosine_pairs(
     result is still an exact-cosine statement about every pair it
     covers. Norms are computed once per row before the self-join
     (n norms, not n²)."""
-    from .similarity import cosine, norm
+    from .similarity import norm
 
     normed = df.select(
         F.col(id_col).alias("id"),
@@ -795,27 +844,17 @@ def embedding_cosine_pairs(
                 ) / F.lit(int(block_size))
             ),
         )
-    a = normed.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("v_a"),
-        F.col("n").alias("n_a"),
-        *([F.col("blk")] if block_size is not None else []),
-    )
-    b = normed.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("v_b"),
-        F.col("n").alias("n_b"),
-        *([F.col("blk")] if block_size is not None else []),
+    blk = ["blk"] if block_size is not None else []
+    a, b = (
+        normed.select(*[F.col(c).alias(f"{c}_{s}") for c in ("id", "v", "n")], *blk)
+        for s in "ab"
     )
     if block_size is not None:
         joined = a.join(b, "blk").where(F.col("id_a") < F.col("id_b"))
     else:
         joined = a.join(b, F.col("id_a") < F.col("id_b"))
-    cos = cosine(
-        F.col("v_a"), F.col("v_b"), dim, norms=(F.col("n_a"), F.col("n_b"))
-    )
     return (
-        joined.select("id_a", "id_b", cos.alias("cosine"))
+        joined.select("id_a", "id_b", _cosine(dim))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -831,7 +870,7 @@ def embedding_banded_signatures(
 ) -> DataFrame:
     """The persistable random-hyperplane LSH index side: one
     (``id``, ``band``, ``sig``) row per non-null vector per band —
-    exactly the projection :func:`embedding_near_dups` self-joins,
+    exactly the projection :func:`embedding_near_dups` pairs,
     exposed (mirroring the text-side :func:`banded_signatures`) so a
     vector corpus builds its index ONCE. At 100 TB write it with
     ``sources.write_bucketed(ex, t, ["band", "sig"])`` and each
@@ -891,7 +930,7 @@ def embedding_near_dups(
     many bands agree.
 
     ``max_bucket`` caps per-(band, sig) bucket size before the
-    candidate self-join (hot-bucket n² guard, :func:`cap_buckets`);
+    candidate pairing (hot-bucket n² guard, :func:`cap_buckets`);
     None disables it for exact-recall harnesses.
 
     Signatures for ALL bands come from one Arrow-batched matmul
@@ -905,7 +944,7 @@ def embedding_near_dups(
     renamed = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).where(
         F.col("v").isNotNull()
     )
-    from .similarity import _modal_dim, cosine, norm
+    from .similarity import _modal_dim
 
     if dim is None:
         # the modal width is a FALLBACK that costs one histogram job —
@@ -921,43 +960,10 @@ def embedding_near_dups(
     ex = embedding_banded_signatures(
         df, id_col, vec_col, num_bands, planes_per_band, seed, dim=dim
     )
-    ex = cap_buckets(ex, ["band", "sig"], max_bucket)
-    a = ex.select(F.col("id").alias("id_a"), "band", "sig")
-    b = ex.select(F.col("id").alias("id_b"), "band", "sig")
-    cands = (
-        a.join(b, ["band", "sig"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # Verify-join cost is per CANDIDATE PAIR, so hoist everything
-    # per-row out of it (r11, guide §2.3/§1.2): cast float→double once
-    # per row (not once per pair side) and precompute each row's norm,
-    # leaving only the expanded dot + one divide per pair. Arithmetic
-    # is identical to the unhoisted cosine — same expansion, same fold
-    # order, same size-gate (ragged rows yield NULL) — measured
-    # 82 s → 9 s over the 1.28M-candidate uncapped sweep at sf0.1.
-    vd = renamed.select(
-        "id", F.col("v").cast("array<double>").alias("v")
-    ).withColumn("nrm", norm(F.col("v"), dim))
-    va = vd.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("v_a"),
-        F.col("nrm").alias("n_a"),
-    )
-    vb = vd.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("v_b"),
-        F.col("nrm").alias("n_b"),
-    )
-    cos = cosine(
-        F.col("v_a"), F.col("v_b"), dim, norms=(F.col("n_a"), F.col("n_b"))
-    )
-    return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+    vd = _vector_payload(df, id_col, vec_col, dim)
+    return _verified_pairs(
+        _bucket_pairs(ex, ["band", "sig"], max_bucket), vd, vd,
+        _cosine(dim), F.col("cosine") >= threshold,
     )
 
 

@@ -587,8 +587,23 @@ class ReleaseConflictError(RuntimeError):
 
 
 def _current(fs_spark, root: str) -> str | None:
-    """The version CURRENT points at, None when nothing is published."""
-    text = storage.read_text(fs_spark, f"{root}/CURRENT")
+    """The version CURRENT points at, None when nothing is published.
+
+    On a non-local root the pointer swap is delete-then-rename
+    (:func:`storage.replace_text`), so a read can fall in the window
+    with no CURRENT; a miss there is re-read a few times, 50 ms apart,
+    before it counts as "nothing published". A local swap is
+    ``os.replace``, never absent, so a local miss is final at once."""
+    import time
+
+    path = f"{root}/CURRENT"
+    text = storage.read_text(fs_spark, path)
+    if text is None and storage._local(fs_spark, root) is None:
+        for _ in range(3):
+            time.sleep(0.05)
+            text = storage.read_text(fs_spark, path)
+            if text is not None:
+                break
     return text.strip() if text is not None else None
 
 

@@ -158,7 +158,10 @@ def rp_signature(
     bits of <v, r_i> packed into a long. Hyperplanes are deterministic
     (numpy RandomState(seed)) and folded into the plan as literals —
     broadcast-free, no fitting step (contrast MLlib's
-    BucketedRandomProjectionLSH which must be fit)."""
+    BucketedRandomProjectionLSH which must be fit). A vector that is
+    null or not ``dim`` long gets a NULL signature, as in
+    :func:`rp_band_signatures` (its dots are NULL, and packing them as
+    0 bits would put every ragged row in bucket 0)."""
     import numpy as np
 
     if dim is None:
@@ -174,7 +177,7 @@ def rp_signature(
         r = F.array(*[F.lit(float(x)) for x in planes[i]])
         bit = F.when(dot(F.col(vec_col).cast("array<double>"), r) > 0, 1).otherwise(0)
         sig = sig.bitwiseOR(F.shiftleft(bit.cast("long"), i))
-    return sig
+    return F.when(F.size(F.col(vec_col)) == dim, sig)
 
 
 def rp_band_signatures(

@@ -2625,7 +2625,7 @@ def _x7_contam(spark, sf_dir):
     # with the duplicated serial filter vs 1.6 s with the barrier;
     # plan diff shows the shingle expr inside the pre-exchange
     # Filter).
-    sizes = xdec._shingle_set(d, "doc_id", "text", 3).select(
+    sizes = xdedup.hashed_shingle_sets(d, "doc_id", "text", 3).select(
         F.col("id").alias("corpus_id"),
         (
             F.size("s") + F.monotonically_increasing_id() * F.lit(0)

@@ -626,6 +626,47 @@ def test_cap_buckets_drops_hot_buckets(spark):
     assert dedup.cap_buckets(df, ["bh"], None).count() == len(rows)
 
 
+def test_bucket_pairs_match_brute_force_pairing(spark):
+    """The one LSH pairing kernel against a Python all-pairs-per-bucket
+    reference: buckets of size 1 (no pair), 2, max_bucket and
+    max_bucket + 1 (dropped whole by the cap), an id repeated inside
+    one bucket (never paired with itself), a pair shared by two
+    buckets (emitted once), and max_bucket=None (no cap at all)."""
+    from collections import defaultdict
+
+    cap = 4
+    buckets = {
+        (0, "one"): [9],
+        (0, "two"): [1, 2],
+        (0, "full"): [3, 0, 2, 1],
+        (0, "over"): [4, 5, 6, 7, 8],
+        (1, "two"): [3, 3],
+        (1, "full"): [8, 5, 6, 9],
+    }
+    rows = [(i, band, bh) for (band, bh), ids in buckets.items() for i in ids]
+    df = spark.createDataFrame(rows, "id long, band int, bh string")
+
+    def brute(max_bucket):
+        by = defaultdict(list)
+        for i, band, bh in rows:
+            by[(band, bh)].append(i)
+        return {
+            (a, b)
+            for ids in by.values()
+            if max_bucket is None or 2 <= len(ids) <= max_bucket
+            for a in ids for b in ids if a < b
+        }
+
+    for max_bucket in (cap, None):
+        got = [
+            (r["id_a"], r["id_b"])
+            for r in dedup._bucket_pairs(df, ["band", "bh"], max_bucket).collect()
+        ]
+        assert len(got) == len(set(got))
+        assert set(got) == brute(max_bucket), max_bucket
+    assert (4, 5) not in brute(cap) and (4, 5) in brute(None)
+
+
 def test_minhash_candidates_hot_bucket_capped(spark):
     """200 identical docs form one hot bucket per band; with
     max_bucket=50 no candidate pair may come out of them, while a
@@ -662,13 +703,16 @@ def test_similarity_join_bucket_cap(spark):
 def test_rp_band_signatures_match_per_band_form(spark):
     """The Arrow-batched all-bands matmul must be bit-for-bit identical
     to the per-band Column-algebra rp_signature (same seeds, same
-    packing) — the LSH bucketing contract across both code paths."""
+    packing) — the LSH bucketing contract across both code paths.
+    Ragged rows (2 and 5 wide) get NULL from both forms, never a
+    shared bucket-0 signature."""
     import random
 
     random.seed(7)
     rows = [
         (i, [random.uniform(-1, 1) for _ in range(16)]) for i in range(50)
     ]
+    rows += [(50, [0.5, -0.5]), (51, [0.1, 0.2, 0.3, 0.4, 0.5])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {
         r["vec_id"]: r["sigs"]
@@ -690,7 +734,9 @@ def test_rp_band_signatures_match_per_band_form(spark):
             ).collect()
         }
         for vid, s in per_band.items():
-            assert got[vid][b] == s, (vid, b, got[vid][b], s)
+            want = None if got[vid] is None else got[vid][b]
+            assert want == s, (vid, b, want, s)
+    assert got[50] is None and got[51] is None
 
 
 def test_pair_components_labels_min_reachable(spark):

@@ -305,9 +305,11 @@ _BOUNDED_NESTED_LOOP_BASELINES: set[str] = set()
 
 
 def _registry_names():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    # this checkout's package, so a copy's suite plans its own code
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from goodtables_pandas_py_spark.queries import QUERIES
 
     return sorted(QUERIES)
@@ -345,9 +347,15 @@ def test_embedding_near_dups_join_is_not_cartesian(spark):
 
 
 def test_incremental_dedup_batch_plans_are_equi_join_only(spark):
-    """The per-batch incremental-dedup kernels (text + embedding) obey
-    the registry guard: equi-joins only, no nested loop — asserted on
-    the PUBLIC batch functions the foreachBatch handlers wrap."""
+    """The per-batch incremental-dedup kernels (text + embedding) and
+    the fuzzy decontamination scan, which share the LSH pairing and
+    verify kernels, obey the registry guard: equi-joins only, no
+    nested loop — asserted on the PUBLIC batch functions the
+    foreachBatch handlers wrap."""
+    from goodtables_pandas_py_spark.cacheutil import unpersist_scan_state
+    from goodtables_pandas_py_spark.extensions.decontam import (
+        near_contamination_scan,
+    )
     from goodtables_pandas_py_spark.extensions.dedup import (
         banded_signatures,
         embedding_banded_signatures,
@@ -379,6 +387,14 @@ def test_incremental_dedup_batch_plans_are_equi_join_only(spark):
     )
     assert "CartesianProduct" not in eplan, eplan
     assert "BroadcastNestedLoopJoin" not in eplan, eplan
+
+    scan = near_contamination_scan(
+        corpus, docs.where(F.col("doc_id") % 7 == 0), threshold=0.5
+    )
+    cplan = _final_plan(scan)
+    unpersist_scan_state(scan)
+    assert "CartesianProduct" not in cplan, cplan
+    assert "BroadcastNestedLoopJoin" not in cplan, cplan
 
 
 def test_zorder_key_matches_python_reference(spark):

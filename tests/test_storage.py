@@ -238,3 +238,29 @@ def test_gateway_calls_only_off_local_roots(
     pl.write_release_increment(_edit_split_a(df), root, keep_versions=3)
     assert pl.read_release(spark, root)[0].count() == 10
     assert (len(calls) == 0) == (backend == "local")
+
+
+def test_current_rereads_a_pointer_missing_mid_swap(monkeypatch, tmp_path):
+    """A non-local pointer swap is delete-then-rename, so a CURRENT read
+    can miss on a live release: it is re-read (a bounded number of
+    times) before it counts as unpublished. A local swap is
+    os.replace, so a local miss is final after one read."""
+    reads = []
+
+    def misses_once(spark, path):
+        reads.append(path)
+        return None if len(reads) == 1 else "v00000002\n"
+
+    monkeypatch.setattr(storage, "read_text", misses_once)
+    assert pl._current(None, "hdfs://nn/rel") == "v00000002"
+    assert reads == ["hdfs://nn/rel/CURRENT"] * 2
+
+    reads.clear()
+    monkeypatch.setattr(
+        storage, "read_text", lambda spark, path: reads.append(path)
+    )
+    assert pl._current(None, "hdfs://nn/rel") is None
+    assert len(reads) == 4
+    reads.clear()
+    assert pl._current(None, str(tmp_path / "rel")) is None
+    assert len(reads) == 1

@@ -622,6 +622,61 @@ def test_embedding_corpus_dedup_pins_index_dim(spark):
     assert 1 in ids                # ragged row passes through
 
 
+def test_batch_kernels_with_empty_corpus_keep_what_the_batch_path_keeps(
+    spark,
+):
+    """Against an empty corpus only the intra-batch arm can drop, and
+    it runs the batch operators' own pairing and verify kernels: the
+    text kernel keeps exactly near_dedup(batch, policy="greedy"), the
+    embedding kernel exactly the rows embedding_near_dups' greedy drop
+    (every id_b) leaves."""
+    from goodtables_pandas_py_spark.cacheutil import unpersist_scan_state
+    from goodtables_pandas_py_spark.extensions.dedup import (
+        banded_signatures,
+        embedding_banded_signatures,
+        embedding_near_dups,
+        near_dedup,
+    )
+    from goodtables_pandas_py_spark.streaming.dedup import (
+        dedup_batch_against_corpus,
+        embedding_dedup_batch_against_corpus,
+    )
+
+    from tests.conftest import SF_DIR
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    none = docs.limit(0)
+    got = dedup_batch_against_corpus(
+        docs, none, banded_signatures(none), threshold=0.5
+    )
+    want = near_dedup(docs, threshold=0.5, policy="greedy")
+    ids = [r["doc_id"] for r in got.select("doc_id").collect()]
+    unpersist_scan_state(got)
+    assert len(ids) < docs.count()  # the arm really drops something
+    assert sorted(ids) == sorted(
+        r["doc_id"] for r in want.select("doc_id").collect()
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    bands = dict(num_bands=16, planes_per_band=4)
+    none = emb.limit(0)
+    got = embedding_dedup_batch_against_corpus(
+        emb, none, embedding_banded_signatures(none, **bands),
+        threshold=0.45, **bands,
+    )
+    drop = {
+        r["id_b"]
+        for r in embedding_near_dups(emb, threshold=0.45, **bands).collect()
+    }
+    assert drop
+    kept = [r["vec_id"] for r in got.select("vec_id").collect()]
+    unpersist_scan_state(got)
+    assert sorted(kept) == sorted(
+        r["vec_id"] for r in emb.select("vec_id").collect()
+        if r["vec_id"] not in drop
+    )
+
+
 def test_chunk_text_runs_on_stream(spark, tmp_path):
     """chunk_text is stateless map-only Column algebra (sequence +
     slice + posexplode), so the SAME call chunks documents at

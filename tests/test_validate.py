@@ -2228,3 +2228,26 @@ def test_package_with_more_tables_than_pool_workers(spark):
     finally:
         for v in alone.values():
             v.unpersist()
+
+
+def test_default_driver_heap_is_capped_at_half_of_memory(monkeypatch):
+    """get_spark's default heap is ~1.5g per core (at least 4g) but
+    never more than half of physical memory: the 32-core default (48g)
+    must not overcommit a 15 GiB host. The bench's 4 cores keep 6g."""
+    import os
+
+    from goodtables_pandas_py_spark import _default_driver_mem
+
+    def host(gib: float) -> None:
+        pages = {"SC_PAGE_SIZE": 4096,
+                 "SC_PHYS_PAGES": int(gib * (1 << 30)) // 4096}
+        monkeypatch.setattr(os, "sysconf", lambda name: pages[name])
+
+    host(15)
+    assert _default_driver_mem(4) == "6g"
+    assert _default_driver_mem(32) == "7680m"
+    host(128)
+    assert _default_driver_mem(32) == "48g"
+    assert _default_driver_mem(1) == "4g"
+    host(4)
+    assert _default_driver_mem(1) == "2g"

@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-REPO = "/root/repo"
+# the checkout this script lives in, so a copy measures its own code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 TABLES = [
