@@ -19,6 +19,8 @@ Every LSH family here, the streaming batch kernels
 (streaming/dedup.py) and fuzzy decontamination (decontam.py) pair
 buckets with ``_bucket_pairs`` and verify with ``_verified_pairs``:
 one candidate-and-verify path, whatever the signature and score.
+SimHash's payload is one long, so it rides through the pairing
+inside the id and is scored there, with no verify join.
 
 MinHash math (public): P[minhash_i(A)=minhash_i(B)] = J(A,B); banding
 (b bands × r rows) matches pairs with J ≈ (1/b)^(1/r) threshold.
@@ -309,31 +311,34 @@ def _bucket_pairs(
 ) -> DataFrame:
     """The distinct (``id_a``, ``id_b``) pairs, ``id_a < id_b``, of
     ``banded`` rows (``id`` plus the bucket ``keys``) that share a
-    bucket surviving :func:`cap_buckets`.
+    bucket surviving :func:`cap_buckets`. ``id`` may be any orderable
+    value whose first field is the row id (a struct carrying a small
+    verify payload, as :func:`simhash_candidates` does).
 
     One collect_list per capped bucket, sorted and de-duplicated (an
-    id repeated inside a bucket never pairs with itself), then each
-    element is paired only with the SLICE AFTER it — exactly the
-    n(n-1)/2 kept pairs, never an n × n array or a bucket self-join.
-    The dedup.candidates layer measures this form."""
+    id repeated inside a bucket never pairs with itself); each id is
+    then exploded with the SLICE AFTER it, so the n(n-1)/2 pairs leave
+    the bucket one row at a time. No bucket builds its pairs as one
+    array (an uncapped hot bucket of n ids would need an n²/2-element
+    row) and there is no bucket self-join (measured 1.6x slower than
+    this form on minhash_candidates). The dedup.candidates layer
+    measures this form."""
     buckets = (
         cap_buckets(banded, keys, max_bucket)
         .groupBy(*keys)
-        .agg(F.collect_list("id").alias("ids"))
+        .agg(
+            F.array_sort(F.array_distinct(F.collect_list("id"))).alias("ids")
+        )
     )
-    ids = F.array_sort(F.array_distinct(F.col("ids")))
     # a slice that starts past the end is empty, so the last id pairs
     # with nothing and no length clamp is needed
-    pairs = F.flatten(F.transform(
-        ids,
-        lambda a, i: F.transform(
-            F.slice(ids, i + 2, F.size(ids)),
-            lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-        ),
-    ))
     return (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select("p.id_a", "p.id_b")
+        buckets.select("ids", F.posexplode("ids").alias("i", "id_a"))
+        .select(
+            "id_a",
+            F.explode(F.slice("ids", F.col("i") + 2, F.size("ids")))
+            .alias("id_b"),
+        )
         .distinct()
     )
 
@@ -352,8 +357,8 @@ def _verified_pairs(
     and keep the (``id_a``, ``id_b``, score) rows where ``keep`` holds.
 
     Payloads are built once per ROW before the join (hashed shingle
-    sets, vectors with their hoisted norm, fingerprints), so the pair
-    side pays one set intersection, dot product or xor per pair."""
+    sets, vectors with their hoisted norm), so the pair side pays one
+    set intersection or dot product per pair."""
 
     def side(payload: DataFrame, s: str) -> DataFrame:
         return payload.select(
@@ -756,8 +761,11 @@ def simhash_candidates(
             "chunk and be silently missed"
         )
     fp = simhash_fingerprints(df, id_col, text_col, shingle_k)
+    # the fingerprint rides through the pairing inside the id (a struct
+    # ordered by id first): fp is computed once and needs no verify
+    # join (joining it back to both sides doubled the uncapped cost)
     chunks = fp.select(
-        "id",
+        F.struct("id", "fp").alias("id"),
         F.posexplode(
             F.array(
                 *[
@@ -767,10 +775,14 @@ def simhash_candidates(
             )
         ).alias("chunk", "val"),
     )
-    return _verified_pairs(
-        _bucket_pairs(chunks, ["chunk", "val"], max_bucket), fp, fp,
-        hamming64(F.col("fp_a"), F.col("fp_b")).alias("hamming"),
-        F.col("hamming") <= max_hamming,
+    return (
+        _bucket_pairs(chunks, ["chunk", "val"], max_bucket)
+        .select(
+            F.col("id_a.id").alias("id_a"),
+            F.col("id_b.id").alias("id_b"),
+            hamming64(F.col("id_a.fp"), F.col("id_b.fp")).alias("hamming"),
+        )
+        .where(F.col("hamming") <= max_hamming)
     )
 
 

@@ -147,14 +147,22 @@ def read_text(spark, path: str) -> str | None:
         except FileNotFoundError:
             return None
     jvm, fs, jpath = _hadoop(spark, path)
-    if not fs.exists(jpath):
+    try:
+        stream = fs.open(jpath)
+    except Exception as e:
+        # no exists() probe first: a file deleted between the probe and
+        # the open (a pointer swap's delete-then-rename) would raise
+        # here anyway, as py4j's wrapped java.io.FileNotFoundException
+        java = getattr(e, "java_exception", None)
+        if java is None or (
+            java.getClass().getName() != "java.io.FileNotFoundException"
+        ):
+            raise
         return None
     # copied JVM-side: a Python bytearray buffer would NOT round-trip
     # through py4j (Java fills a copy)
     sink = jvm.java.io.ByteArrayOutputStream()
-    jvm.org.apache.hadoop.io.IOUtils.copyBytes(
-        fs.open(jpath), sink, 4096, True
-    )
+    jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, sink, 4096, True)
     return bytes(sink.toByteArray()).decode("utf-8")
 
 

@@ -207,6 +207,7 @@ def dedup_batch_against_corpus(
         ),
         lambda df: hashed_shingle_sets(df, id_col, text_col, shingle_k),
         _jaccard(), F.col("jaccard") >= threshold,
+        # the shingle sets re-run normalize→shingle→hash per consumer
         max_bucket, persist_payload=True,
     )
 
@@ -292,6 +293,9 @@ def embedding_dedup_batch_against_corpus(
         ),
         lambda df: _vector_payload(df, id_col, vec_col, dim),
         _cosine(dim), F.col("cosine") >= threshold,
+        # a cast + norm over the (persisted) micro-batch is cheaper than
+        # a cache fill: persisting it measured 6.2 s → 13.1 s median for
+        # a 3k-vector batch against a 3k-vector corpus (4-core host)
         max_bucket, persist_payload=False,
     )
 

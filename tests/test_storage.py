@@ -240,11 +240,15 @@ def test_gateway_calls_only_off_local_roots(
     assert (len(calls) == 0) == (backend == "local")
 
 
-def test_current_rereads_a_pointer_missing_mid_swap(monkeypatch, tmp_path):
+def test_current_rereads_a_pointer_missing_mid_swap(
+    spark, monkeypatch, tmp_path
+):
     """A non-local pointer swap is delete-then-rename, so a CURRENT read
     can miss on a live release: it is re-read (a bounded number of
     times) before it counts as unpublished. A local swap is
-    os.replace, so a local miss is final after one read."""
+    os.replace, so a local miss is final after one read. Through the
+    Hadoop backend the delete may land as the file is opened: that
+    open's FileNotFoundException is a miss too."""
     reads = []
 
     def misses_once(spark, path):
@@ -264,3 +268,25 @@ def test_current_rereads_a_pointer_missing_mid_swap(monkeypatch, tmp_path):
     reads.clear()
     assert pl._current(None, str(tmp_path / "rel")) is None
     assert len(reads) == 1
+
+    monkeypatch.undo()
+    root = tmp_path / "swap"
+    root.mkdir()
+    (root / "CURRENT").write_text("v00000002\n")
+    _force_hadoop(monkeypatch)
+    real, opens = storage._hadoop, []
+
+    def vanishing_once(session, path):
+        jvm, fs, jpath = real(session, path)
+        gone = jvm.org.apache.hadoop.fs.Path(f"{path}.gone")
+
+        class _Fs:  # the first open finds the pointer deleted
+            def open(self, p):
+                opens.append(p)
+                return fs.open(gone if len(opens) == 1 else p)
+
+        return jvm, _Fs(), jpath
+
+    monkeypatch.setattr(storage, "_hadoop", vanishing_once)
+    assert pl._current(spark, str(root)) == "v00000002"
+    assert len(opens) == 2
