@@ -1031,7 +1031,7 @@ def semantic_dedup_audit(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .similarity import _modal_dim, ivf_assign
+    from .similarity import _modal_dim, _unit_rows, ivf_assign
 
     if keep not in ("far", "min_id"):
         raise ValueError(f"keep must be 'far' or 'min_id', got {keep!r}")
@@ -1109,9 +1109,7 @@ def semantic_dedup_audit(
 
     spark = df.sparkSession
     C = np.asarray(cents, dtype=np.float64)
-    cn = np.linalg.norm(C, axis=1)
-    Cn = C / np.where(cn > 0, cn, 1.0)[:, None]  # unit centroids
-    bc = spark.sparkContext.broadcast(Cn)
+    bc = spark.sparkContext.broadcast(_unit_rows(C))  # unit centroids
     thr = float(threshold)
     keep_far = keep == "far"
 
@@ -1140,8 +1138,7 @@ def semantic_dedup_audit(
         n = len(pdf)
         cid = int(pdf["cid"].iloc[0])
         V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(V, axis=1)
-        Vn = V / np.where(norms > 0, norms, 1.0)[:, None]
+        Vn = _unit_rows(V)
         Cn_b = bc.value
         ccos = Vn @ Cn_b[cid] if cid < len(Cn_b) else np.zeros(n)
         # float32 for the n×n similarity block: halves the kernel's

@@ -27,12 +27,23 @@ Vector math is three functions — :func:`dot`, :func:`norm` and
 Callers that must find "the" width of a column use :func:`_modal_dim`
 (ties to the smaller width). Many-plane LSH signatures run as one
 Arrow-batched numpy matmul (rp_band_signatures — ~10× over per-band
-interpreted HOF lambdas). Top-k uses orderBy(...).limit(k) which
-Spark executes as TakeOrderedAndProject (per-partition heap + driver
-merge of k·P rows — no full sort, no full shuffle).
+interpreted HOF lambdas).
+
+Every cosine top-k here and in ``vecindex`` is one pipeline: probe →
+candidates → score → :func:`_topk`. The probe is the only per-index
+part (none, RP buckets, IVF centroids, persisted IVF lists; IVF
+probes go through :func:`_probe_cids`). A literal query is scored by
+:func:`_exact_topk`; a set of queries by the numpy block scorer
+:func:`_block_topk`. :func:`_topk` owns the tie rule (cosine desc,
+NULL last, id asc) and the ``k >= 1`` check (ValueError, raised
+before any job): one query's top-k plans as TakeOrderedAndProject
+(per-partition heap + driver merge of k·P rows — no full sort, no
+full shuffle), a top-k per left row as a partial WindowGroupLimit.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -105,6 +116,46 @@ def cosine(
     return _gated(raw, dim, a, b)
 
 
+def _check_k(k: int) -> None:
+    """The one ``k`` rule of every top-k: ValueError unless k >= 1.
+    Entry points that run a job before :func:`_topk` call it first."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+
+
+def _topk(
+    scored: DataFrame, k: int, id_col: str, by: list[str] | None = None
+) -> DataFrame:
+    """The best ``k`` rows of ``scored`` by its ``cosine`` column —
+    overall, or per group of ``by`` — under the one tie rule: cosine
+    desc, NULL last, then ``id_col`` asc. Without ``by`` it is
+    ``orderBy(...).limit(k)``, which plans as TakeOrderedAndProject;
+    with ``by`` it is :func:`~.splits.top_k_per_group`'s row_number
+    window, which plans as a partial WindowGroupLimit before the
+    shuffle."""
+    _check_k(k)
+    if by is None:
+        return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+    from .splits import top_k_per_group
+
+    return top_k_per_group(scored, by, "cosine", k, tiebreak=[id_col])
+
+
+def _exact_topk(
+    df: DataFrame, query: list[float], k: int, id_col: str, vec: Column
+) -> DataFrame:
+    """Score every row of ``df`` (already probe-filtered) against the
+    literal ``query`` and keep the top k — the step every single-query
+    top-k ends in. The query is a folded literal array, so the scan is
+    codegen'd, and the cosine stays the HOF form: Catalyst folds the
+    query-side norm to a constant, and measured throughput beats the
+    expanded form there (the expansion wins only on array-vs-array
+    JOINS — see the module docstring)."""
+    q = F.array(*[F.lit(float(x)) for x in query])
+    scored = df.select(F.col(id_col), cosine(vec, q).alias("cosine"))
+    return _topk(scored, k, id_col)
+
+
 def cosine_topk(
     df: DataFrame,
     query: list[float],
@@ -112,20 +163,57 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact brute-force top-k by cosine to a literal query vector.
-    One scan; the query is a folded literal array so the comparison is
-    codegen'd; TakeOrderedAndProject bounds driver traffic to k rows.
-    Ties broken by id for determinism."""
-    q = F.array(*[F.lit(float(x)) for x in query])
-    # literal-query scans keep the HOF cosine: Catalyst folds the
-    # query-side norm to a constant, and measured throughput beats the
-    # expanded form there (the expansion wins only on array-vs-array
-    # JOINS — see the module docstring)
-    scored = df.select(
-        F.col(id_col),
-        cosine(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
+    """Exact brute-force top-k by cosine to a literal query vector:
+    :func:`_exact_topk` over the whole frame (no probe)."""
+    return _exact_topk(
+        df, query, k, id_col, F.col(vec_col).cast("array<double>")
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows of ``m`` scaled to unit L2 norm; a zero row stays zero —
+    it scores 0.0, like :func:`cosine`'s zero-norm branch. The one
+    zero-norm rule of every numpy scoring site."""
+    n = np.linalg.norm(m, axis=1)
+    return m / np.where(n > 0, n, 1.0)[:, None]
+
+
+def _block_topk(
+    q: np.ndarray,
+    ids: np.ndarray,
+    rows: np.ndarray,
+    k: int,
+    self_pairs: tuple | None = None,
+):
+    """Each query's local top-k over one block of candidates — the
+    numpy scorer of :func:`knn_join` and the distributed IVF serve.
+    ``q`` holds UNIT query rows; ``rows`` the candidate vectors in
+    ascending ``ids`` order. ``self_pairs=(query rows, candidate
+    rows)`` marks pairs that never match (a row and its own id).
+
+    Returns (query row, candidate id, cosine) arrays with exactly
+    min(k, scorable) rows per query, the best under cosine desc, id
+    asc; the global :func:`_topk` window over every block's output
+    is then exact. Selection: ``np.partition`` finds each query's
+    k-th score, everything above it is kept, and only queries with
+    ties AT that score cut the tied run by position (= by id). That
+    measured as fast as the argpartition superset and 3–5× faster
+    than a stable argsort per query (CHANGES.md)."""
+    s = q @ _unit_rows(rows).T  # nq × n
+    if self_pairs is not None:
+        s[self_pairs] = -np.inf
+    top = min(k, s.shape[1])
+    kth = -np.partition(-s, top - 1, axis=1)[:, top - 1 : top]
+    keep = s >= kth
+    tied = np.nonzero(keep.sum(axis=1) > top)[0]
+    if tied.size:
+        sub, t = s[tied], kth[tied]
+        gt, eq = sub > t, sub == t
+        room = top - gt.sum(axis=1, keepdims=True)
+        keep[tied] = gt | (eq & (np.cumsum(eq, axis=1) <= room))
+    keep &= s > -np.inf
+    qi, ci = np.nonzero(keep)
+    return qi, ids[ci], s[qi, ci]
 
 
 def _modal_dim(df: DataFrame, vec_col: str):
@@ -380,17 +468,13 @@ def ann_topk(
         bucket_filter = (
             F.bit_count(F.col(sig_col).bitwiseXOR(F.lit(qsig))) <= probe_hamming
         )
-    q = F.array(*[F.lit(float(x)) for x in query])
-    scored = (
-        sigged
-        .where(bucket_filter)
-        .select(
-            F.col(id_col),
-            # literal query: HOF form (see cosine_topk note)
-            cosine(F.col(vec_col).cast("array<double>"), q).alias("cosine"),
-        )
+    return _exact_topk(
+        sigged.where(bucket_filter),
+        query,
+        k,
+        id_col,
+        F.col(vec_col).cast("array<double>"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
 
 def knn_join(
@@ -408,23 +492,24 @@ def knn_join(
     approximates. Output columns ``(left_id, right_id, cosine)``;
     ties broken by right id ascending for determinism; right rows
     with null/ragged vectors score NULL and sort last (they pad the
-    top-k only when fewer than k scorable rows exist).
+    top-k only when fewer than k scorable rows exist), and a left row
+    whose vector is null or not the left side's modal width scores
+    NULL against every right row (its top-k is the k smallest right
+    ids).
 
     ``method="blocked"`` (default, the scale path): the query side is
     collected to the driver (it is the SMALL side — bounded by
     ``max_queries``; q×dim doubles, ~50 MB at 100k×64) and shipped
     once per executor as a numpy matrix via a Spark broadcast. One
-    ``mapInPandas`` pass over the item side computes each Arrow
-    batch's cosine block as a single BLAS matmul (batch×dim @
-    dim×q) and keeps an exact per-partition top-k per query — batch
-    rows are pre-sorted by id so a stable argsort realizes the
-    (cosine desc, id asc) total order, making the per-partition
-    selection exact, and the global merge over P×q×k candidate rows
-    is one small window. Work is O(n·q) FLOPs — inherent to exact
-    kNN — but fully distributed, vectorized, and shuffle-light
-    (candidates only, never n×q pairs). This replaces the r4
-    broadcast-nested-loop baseline (VERDICT r4 §wrong 2): exact kNN
-    no longer needs a bounded left side or a plan-guard exemption.
+    ``mapInPandas`` pass over the item side scores each Arrow batch
+    with :func:`_block_topk` (one BLAS matmul, batch rows sorted by
+    id) and emits each query's local top-k, plus the k+1 smallest ids
+    of the partition's null-scoring rows as NULL pads; the global
+    :func:`_topk` window (a partial WindowGroupLimit before its
+    shuffle) makes the result exact. Work is O(n·q) FLOPs — inherent
+    to exact kNN — but fully distributed, vectorized, and
+    shuffle-light (candidates only, never n×q pairs). This replaces
+    the r4 broadcast-nested-loop baseline (VERDICT r4 §wrong 2).
 
     ``method="loop"``: the legacy one-cross-join + window form
     (broadcast nested loop) — kept as an independent oracle twin for
@@ -433,24 +518,21 @@ def knn_join(
     At 100 TB with a LARGE query side, exact kNN is the wrong tool —
     use ``similarity_join`` (banded LSH) or ``ivf_topk`` partition
     pruning instead."""
+    import heapq
     from collections import Counter
 
-    from pyspark.sql import Window
-
+    _check_k(k)
     if method == "loop":
         return _knn_join_loop(left, right, k, left_id, right_id, vec_col)
 
     spark = right.sparkSession
-    lt = left.schema[left_id].dataType
-    rt = right.schema[right_id].dataType
     out_schema = T.StructType(
         [
-            T.StructField("left_id", lt),
-            T.StructField("right_id", rt),
+            T.StructField("left_id", left.schema[left_id].dataType),
+            T.StructField("right_id", right.schema[right_id].dataType),
             T.StructField("cosine", T.DoubleType()),
         ]
     )
-
     l_rows = (
         left.select(
             F.col(left_id).alias("lid"),
@@ -472,118 +554,66 @@ def knn_join(
     # in the loop twin — counted here over the rows already collected
     widths = Counter(len(r["lv"]) for r in l_rows if r["lv"])
     dim = min(widths, key=lambda d: (-widths[d], d)) if widths else None
-    valid_q = [r for r in l_rows if r["lv"] and len(r["lv"]) == dim]
-    invalid_qids = [
-        r["lid"] for r in l_rows if not (r["lv"] and len(r["lv"]) == dim)
-    ]
-
-    parts = []
-    if valid_q:
-        qids = np.array([r["lid"] for r in valid_q])
-        Q = np.array([r["lv"] for r in valid_q], dtype=np.float64)
-        qn = np.linalg.norm(Q, axis=1)
-        # zero-norm query → dot 0 / safe 1 → score 0.0, matching
-        # cosine()'s otherwise(0.0) branch
-        QT = (Q / np.where(qn > 0, qn, 1.0)[:, None]).T  # dim × q
-        bc = spark.sparkContext.broadcast((qids, QT))
-        nq = len(qids)
-        kk = k
-
-        def _scan(batches):
-            qids_b, QT_b = bc.value
-            qpos = {v: j for j, v in enumerate(qids_b.tolist())}
-            cand_s: list[np.ndarray] = []
-            cand_i: list[np.ndarray] = []
-            inv_ids: list = []
-            for pdf in batches:
-                rid_raw = pdf.iloc[:, 0].values
-                vec_raw = pdf.iloc[:, 1].values
-                ok = np.array(
-                    [v is not None and len(v) == QT_b.shape[0] for v in vec_raw]
-                )
-                bad = rid_raw[~ok]
-                if bad.size:
-                    inv_ids.extend(bad.tolist())
-                    inv_ids = sorted(inv_ids)[: kk + 1]
-                if not ok.any():
-                    continue
-                rid = rid_raw[ok]
-                order = np.argsort(rid, kind="stable")
-                rid = rid[order]
-                V = np.stack(vec_raw[ok][order]).astype(np.float64)
-                vn = np.linalg.norm(V, axis=1)
-                S = (V / np.where(vn > 0, vn, 1.0)[:, None]) @ QT_b
-                # self-exclusion: a row never matches its own id
-                for i in np.nonzero(np.isin(rid, qids_b))[0]:
-                    j = qpos.get(rid[i])
-                    if j is not None:
-                        S[i, j] = -np.inf
-                take = min(kk, S.shape[0])
-                # rows are id-ascending, so a STABLE argsort on -S is
-                # exactly the (cosine desc, id asc) total order
-                top = np.argsort(-S, axis=0, kind="stable")[:take]
-                cand_s.append(np.take_along_axis(S, top, axis=0))
-                cand_i.append(rid[top])
-            out_l, out_r, out_c = [], [], []
-            if cand_s:
-                SS = np.concatenate(cand_s, axis=0)
-                II = np.concatenate(cand_i, axis=0)
-                sel = np.lexsort((II, -SS), axis=0)[: min(kk, SS.shape[0])]
-                SSk = np.take_along_axis(SS, sel, axis=0)
-                IIk = np.take_along_axis(II, sel, axis=0)
-                for j in range(nq):
-                    keep = SSk[:, j] != -np.inf
-                    n_keep = int(keep.sum())
-                    out_l.extend([qids_b[j]] * n_keep)
-                    out_r.extend(IIk[keep, j].tolist())
-                    out_c.extend(SSk[keep, j].tolist())
-            # null-scoring right rows: ship the k+1 smallest ids so the
-            # global window can pad short top-k lists (sorts last)
-            for j in range(nq):
-                pad = [v for v in inv_ids if v != qids_b[j]][:kk]
-                out_l.extend([qids_b[j]] * len(pad))
-                out_r.extend(pad)
-                out_c.extend([None] * len(pad))
-            if out_l:
-                yield pd.DataFrame(
-                    {"left_id": out_l, "right_id": out_r, "cosine": out_c}
-                )
-
-        cand = right.select(
-            F.col(right_id), F.col(vec_col).cast("array<double>")
-        ).mapInPandas(_scan, out_schema)
-        w = Window.partitionBy("left_id").orderBy(
-            F.desc_nulls_last("cosine"), F.asc("right_id")
+    good = [r for r in l_rows if r["lv"] and len(r["lv"]) == dim]
+    qids = np.array([r["lid"] for r in good])
+    q = _unit_rows(
+        np.array([r["lv"] for r in good], dtype=np.float64).reshape(
+            len(good), dim or 0
         )
-        parts.append(
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .drop("rank")
-        )
+    )
+    bad_qids = [r["lid"] for r in l_rows if not (r["lv"] and len(r["lv"]) == dim)]
+    bc = spark.sparkContext.broadcast((qids, q, bad_qids))
 
-    if invalid_qids:
-        # an unscorable query vector scores NULL against every right
-        # row → its top-k is the k smallest right ids (excluding self)
-        pool = [
-            r[0]
-            for r in right.select(F.col(right_id))
-            .orderBy(F.col(right_id))
-            .limit(k + 1)
-            .collect()
-        ]
-        rows = [
-            (lid, rid, None)
-            for lid in invalid_qids
+    def _scan(batches):
+        qids_b, q_b, bad_b = bc.value
+        qpos = {v: j for j, v in enumerate(qids_b.tolist())}
+        # k+1 smallest ids of the null-scoring rows (pads for the
+        # scorable queries) and of all rows (the unscorable queries'
+        # whole answer); one of them may be the query itself
+        null_pool: list = []
+        all_pool: list = []
+        for pdf in batches:
+            rid = pdf.iloc[:, 0].values
+            vec = pdf.iloc[:, 1].values
+            ok = np.array([v is not None and len(v) == dim for v in vec], bool)
+            null_pool = heapq.nsmallest(k + 1, [*null_pool, *rid[~ok].tolist()])
+            if bad_b:
+                all_pool = heapq.nsmallest(k + 1, [*all_pool, *rid.tolist()])
+            if not (ok.any() and len(qids_b)):
+                continue
+            order = np.argsort(rid[ok], kind="stable")
+            ids = rid[ok][order]
+            # a row never matches its own id
+            hit = np.nonzero(np.isin(ids, qids_b))[0]
+            qi, rr, sc = _block_topk(
+                q_b,
+                ids,
+                np.stack(vec[ok][order]).astype(np.float64),
+                k,
+                ([qpos[ids[c]] for c in hit], hit),
+            )
+            yield pd.DataFrame(
+                {"left_id": qids_b[qi], "right_id": rr, "cosine": sc}
+            )
+        pads = [
+            (lid, rid)
+            for lids, pool in ((qids_b.tolist(), null_pool), (bad_b, all_pool))
+            for lid in lids
             for rid in [p for p in pool if p != lid][:k]
         ]
-        parts.append(spark.createDataFrame(rows, out_schema))
+        if pads:
+            yield pd.DataFrame(
+                {
+                    "left_id": [p[0] for p in pads],
+                    "right_id": [p[1] for p in pads],
+                    "cosine": [None] * len(pads),
+                }
+            )
 
-    if not parts:
-        return spark.createDataFrame([], out_schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    cand = right.select(
+        F.col(right_id), F.col(vec_col).cast("array<double>")
+    ).mapInPandas(_scan, out_schema)
+    return _topk(cand, k, "right_id", by=["left_id"])
 
 
 def _knn_join_loop(
@@ -596,8 +626,6 @@ def _knn_join_loop(
 ) -> DataFrame:
     """Legacy exact form: one broadcast cross join + window. Quadratic
     row expansion — bounded-input oracle twin only (see knn_join)."""
-    from pyspark.sql import Window
-
     l_df = left.select(
         F.col(left_id).alias("left_id"),
         F.col(vec_col).cast("array<double>").alias("lv"),
@@ -622,14 +650,7 @@ def _knn_join_loop(
         l_df.join(F.broadcast(r_df), F.col("left_id") != F.col("right_id"))
         .select("left_id", "right_id", score.alias("cosine"))
     )
-    w = Window.partitionBy("left_id").orderBy(
-        F.col("cosine").desc(), F.col("right_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk(scored, k, "right_id", by=["left_id"])
 
 
 def similarity_join(
@@ -668,8 +689,7 @@ def similarity_join(
     cross join — dedup candidate id pairs BEFORE joining vectors back,
     so the exact cosine runs once per pair regardless of how many
     bands agree."""
-    from pyspark.sql import Window
-
+    _check_k(k)
     # null vectors are similar to nothing: drop them up front — they
     # would otherwise hash to the all-zero signature (every sign test
     # falls through to 0), collide with bucket 0, and ride a null
@@ -740,14 +760,7 @@ def similarity_join(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("left_id").orderBy(
-        F.col("cosine").desc(), F.col("right_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk(scored, k, "right_id", by=["left_id"])
 
 
 # --- IVF (inverted-file) ANN ----------------------------------------------
@@ -979,8 +992,7 @@ def _assign_cids(vec: Column, centroids: list[list[float]]) -> Column:
             V = np.stack(
                 [np.asarray(arrs[i], dtype=np.float64) for i in good]
             )
-            n = np.linalg.norm(V, axis=1)
-            Vn = V / np.where(n > 0, n, 1.0)[:, None]
+            Vn = _unit_rows(V)
             # argmin ||v_n - c||² = argmin(c² - 2·v_n·c); first argmin
             # = lowest cid, matching the struct-min tiebreak
             cids = np.argmin(c2[None, :] - 2.0 * (Vn @ C.T), axis=1)
@@ -1077,6 +1089,7 @@ def ivf_topk(
     column (a pre-assigned table), the assignment expression is reused
     as-is and this function launches no training jobs at all (asserted
     in test_extensions)."""
+    _check_k(k)
     if centroids is None:
         assigned, cents = ivf_assign(df, vec_col, nlist, refine)
     else:
@@ -1085,30 +1098,39 @@ def ivf_topk(
             assigned = df
         else:
             assigned = _with_assigned_cid(df, vec_col, cents)
-    # probe in the same normalized space the lists were built in
+    probes = _probe_cids(query, cents, nprobe)
+    return _exact_topk(
+        assigned.where(F.col("ivf_cid").isin(probes)),
+        query,
+        k,
+        id_col,
+        F.col(vec_col).cast("array<double>"),
+    )
+
+
+def _probe_cids(
+    query: list[float], cents: list[list[float]], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` inverted lists nearest ``query``, by squared L2
+    distance in the normalized space the lists were built in, ties to
+    the lower cid — the one driver-side IVF probe (``ivf_topk`` and
+    the persisted-index serves). A query whose width is not the
+    centroids' raises ValueError: ``zip`` would silently truncate the
+    distance and rank probes on garbage, and the HOF cosine would
+    null-pad every corpus vector — k arbitrary rows with NULL scores
+    instead of an error."""
     if cents and len(query) != len(cents[0]):
-        # zip() below would silently TRUNCATE the distance to the
-        # shorter of the two and rank probes on garbage, and the HOF
-        # cosine then null-pads every corpus vector — k arbitrary rows
-        # with null scores instead of an error (r10 review fix)
         raise ValueError(
-            f"ivf_topk: query has {len(query)} dims but the centroids "
-            f"have {len(cents[0])} — wrong index for this query"
+            f"query has {len(query)} dims but the centroids have "
+            f"{len(cents[0])} — wrong index for this query"
         )
-    qn = sum(x * x for x in query) ** 0.5
+    qn = math.sqrt(sum(x * x for x in query))
     qv = [x / qn for x in query] if qn > 0 else list(query)
-    qd = [
+    dists = [
         (sum((q - c) ** 2 for q, c in zip(qv, cent)), cid)
         for cid, cent in enumerate(cents)
     ]
-    probes = [cid for _, cid in sorted(qd)[:nprobe]]
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    scored = assigned.where(F.col("ivf_cid").isin(probes)).select(
-        F.col(id_col),
-        # literal query: HOF form (see cosine_topk note)
-        cosine(F.col(vec_col).cast("array<double>"), qlit).alias("cosine"),
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
+    return [cid for _, cid in sorted(dists)[:nprobe]]
 
 
 # --- storage quantization -------------------------------------------------

@@ -40,11 +40,17 @@ import math
 import os
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..storage import copy_tree, require_local
 from .similarity import (
+    _block_topk,
+    _check_k,
+    _exact_topk,
+    _probe_cids,
+    _topk,
+    _unit_rows,
     _with_assigned_cid,
     cosine,
     dequantize_embedding,
@@ -234,16 +240,16 @@ def read_ivf_index(spark: SparkSession, index_dir: str) -> IvfIndex:
     return IvfIndex(postings, cents, manifest)
 
 
-def _probe_cids(
-    query: list[float], cents: list[list[float]], nprobe: int
-) -> list[int]:
-    qn = math.sqrt(sum(x * x for x in query))
-    qv = [x / qn for x in query] if qn > 0 else list(query)
-    dists = [
-        (sum((q - c) ** 2 for q, c in zip(qv, cent)), cid)
-        for cid, cent in enumerate(cents)
-    ]
-    return [cid for _, cid in sorted(dists)[:nprobe]]
+def _posting_vec(index: IvfIndex) -> Column:
+    """The posting vector as array<double>, dequantized on a quantized
+    index. Widened BEFORE any cosine: norm() on a float array squares
+    in float32 (x*x is a float×float multiply), a ~1e-8 cosine wobble
+    vs the double path, and a float32 matmul on the distributed path
+    diverges from the collect path the same way (r9, caught by the
+    quantized parity test)."""
+    if index.manifest["quantized"]:
+        return dequantize_embedding(F.col("qvec")).cast("array<double>")
+    return F.col("vec").cast("array<double>")
 
 
 def ivf_index_topk(
@@ -252,29 +258,23 @@ def ivf_index_topk(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """Serve a top-k query from a persisted index: probe selection is
-    driver-side over the bounded centroid matrix; the scan carries
-    ``ivf_cid IN (probes)`` which Spark applies as a PARTITION filter
-    on the hive layout (only the probed directories are listed/read —
-    plan-asserted in tests), then exact cosine + TakeOrdered over the
-    surviving lists. ``nprobe >= nlist`` degrades gracefully to exact
-    search over the whole index (used as the parity oracle in
-    tests)."""
+    """Serve a top-k query from a persisted index: probe selection
+    (:func:`~.similarity._probe_cids`) is driver-side over the bounded
+    centroid matrix; the scan carries ``ivf_cid IN (probes)`` which
+    Spark applies as a PARTITION filter on the hive layout (only the
+    probed directories are listed/read — plan-asserted in tests), then
+    exact cosine + TakeOrdered over the surviving lists. ``nprobe >=
+    nlist`` degrades gracefully to exact search over the whole index
+    (used as the parity oracle in tests). A query whose width is not
+    the index's raises ValueError."""
     probes = _probe_cids(query, index.centroids, nprobe)
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    scanned = index.postings.where(F.col("ivf_cid").isin(probes))
-    if index.manifest["quantized"]:
-        # widen BEFORE the cosine fold: norm() on a float array
-        # squares in float32 (x*x is a float×float multiply), a
-        # ~1e-8 cosine wobble vs the double path (r9, caught by the
-        # distributed-path quantized parity test)
-        vec = dequantize_embedding(F.col("qvec")).cast("array<double>")
-    else:
-        vec = F.col("vec").cast("array<double>")
-    scored = scanned.select(
-        F.col("id"), cosine(vec, qlit).alias("cosine")
+    return _exact_topk(
+        index.postings.where(F.col("ivf_cid").isin(probes)),
+        query,
+        k,
+        "id",
+        _posting_vec(index),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col("id")).limit(k)
 
 
 def ivf_index_topk_batch(
@@ -298,18 +298,21 @@ def ivf_index_topk_batch(
     ``ivf_cid``. Query vectors travel in a SECOND small broadcast
     keyed by query id, so the per-probe table stays (cid, qid) pairs
     instead of duplicating a vector per probe. Per-query top-k is
-    :func:`~..splits.top_k_per_group` (rank window, id tiebreak).
+    :func:`~.similarity._topk` (rank window, id tiebreak).
 
     Work is Σ_q Σ_{cid∈probes(q)} |list_cid| candidate scores — never
     queries × index. ``max_queries`` bounds the driver collect and
     the broadcasts (qids + q×dim doubles; ~10 MB at the 10k default
     with dim 128); shard bigger query sets into calls, or use
     ``similarity.knn_join`` when the query side is itself
-    table-sized. Returns (``id_col``, id, cosine), k rows per query;
-    queries whose vector is NULL/ragged against the index dim rank
-    nothing (NULL cosine sorts last) and can return < k rows."""
-    from .splits import top_k_per_group
+    table-sized. Returns (``id_col``, id, cosine), min(k, probed
+    rows) rows per query. A query whose vector is NULL or not the
+    index's ``dim`` wide is dropped at probe selection and ranks
+    nothing, as on :func:`ivf_index_topk_batch_distributed`; ValueError
+    when no query is left."""
+    from pyspark.sql import types as T
 
+    _check_k(k)
     spark = index.postings.sparkSession
     rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
     if len(rows) > max_queries:
@@ -322,32 +325,28 @@ def ivf_index_topk_batch(
         )
     if not rows:
         raise ValueError("ivf_index_topk_batch: empty query set")
-    probe_pairs = []  # (cid, qid)
-    qvecs = []  # (qid, vec)
-    for r in rows:
-        vec = r[vec_col]
-        qid = r[id_col]
-        if vec is None:
-            continue
-        vec = [float(x) for x in vec]
-        qvecs.append((qid, vec))
-        for cid in _probe_cids(vec, index.centroids, nprobe):
-            probe_pairs.append((cid, qid))
+    dim = int(index.manifest["dim"])
+    qvecs = [
+        (r[id_col], [float(x) for x in r[vec_col]])
+        for r in rows
+        if r[vec_col] is not None and len(r[vec_col]) == dim
+    ]
     if not qvecs:
         raise ValueError(
-            "ivf_index_topk_batch: every query vector is NULL"
+            f"ivf_index_topk_batch: no query vector is {dim} wide"
         )
-    union_cids = sorted({cid for cid, _ in probe_pairs})
-
-    from pyspark.sql import types as T
-
-    qid_field = queries.schema[id_col]
+    probe_pairs = [
+        (cid, qid)
+        for qid, vec in qvecs
+        for cid in _probe_cids(vec, index.centroids, nprobe)
+    ]
+    qid_type = queries.schema[id_col].dataType
     probes_df = spark.createDataFrame(
         probe_pairs,
         T.StructType(
             [
                 T.StructField("ivf_cid", T.IntegerType(), False),
-                T.StructField("__qid", qid_field.dataType, True),
+                T.StructField("__qid", qid_type, True),
             ]
         ),
     )
@@ -355,20 +354,16 @@ def ivf_index_topk_batch(
         qvecs,
         T.StructType(
             [
-                T.StructField("__qid", qid_field.dataType, True),
-                T.StructField(
-                    "__qvec", T.ArrayType(T.DoubleType()), False
-                ),
+                T.StructField("__qid", qid_type, True),
+                T.StructField("__qvec", T.ArrayType(T.DoubleType()), False),
             ]
         ),
     )
-    scanned = index.postings.where(F.col("ivf_cid").isin(union_cids))
-    if index.manifest["quantized"]:
-        vec = dequantize_embedding(F.col("qvec")).cast("array<double>")
-    else:
-        vec = F.col("vec").cast("array<double>")
-    cand = scanned.join(F.broadcast(probes_df), "ivf_cid").join(
-        F.broadcast(qvec_df), "__qid"
+    union_cids = sorted({cid for cid, _ in probe_pairs})
+    cand = (
+        index.postings.where(F.col("ivf_cid").isin(union_cids))
+        .join(F.broadcast(probes_df), "ivf_cid")
+        .join(F.broadcast(qvec_df), "__qid")
     )
     # HOF cosine (no dim), NOT the expanded one: WindowGroupLimit's
     # pre-shuffle partial sort fuses with this projection, and a dim-expanded
@@ -380,11 +375,9 @@ def ivf_index_topk_batch(
     scored = cand.select(
         F.col("__qid").alias(id_col),
         F.col("id"),
-        cosine(vec, F.col("__qvec")).alias("cosine"),
+        cosine(_posting_vec(index), F.col("__qvec")).alias("cosine"),
     )
-    return top_k_per_group(
-        scored, [id_col], "cosine", k, tiebreak=["id"]
-    )
+    return _topk(scored, k, "id", by=[id_col])
 
 
 def ivf_index_topk_batch_distributed(
@@ -407,29 +400,27 @@ def ivf_index_topk_batch_distributed(
     Arrow batch of queries computes its ``nprobe`` nearest centroids
     with one BLAS distance matmul + stable argsort (ties broken by
     cid ascending — the exact ``sorted((dist, cid))`` order of
-    :func:`_probe_cids`), emitting ONE row per query — the vector as
-    a packed float64 blob plus its probed-cid array, exploded
-    JVM-side into (qid, blob, ivf_cid) probe rows that hash-equi-join
-    the postings on ``ivf_cid`` (r10: the previous one-row-per-probe
-    Python emit built q×nprobe boxed float lists, which dominated the
-    serve at production nprobe — see BASELINE.md
-    §nlist-saturation). Per-query
-    top-k is the same rank window as the collect path, so results
+    :func:`~.similarity._probe_cids`), emitting ONE row per query —
+    the unit vector as a packed float64 blob plus its probed-cid
+    array, exploded JVM-side into (qid, blob, ivf_cid) probe rows
+    that hash-equi-join the postings on ``ivf_cid`` (r10: the
+    previous one-row-per-probe Python emit built q×nprobe boxed float
+    lists, which dominated the serve at production nprobe — see
+    BASELINE.md §nlist-saturation). Per-query top-k is the same
+    :func:`~.similarity._topk` window as the collect path, so results
     are row-identical at any query count (parity-asserted in tests).
 
     Work is still Σ_q Σ_{cid∈probes(q)} |list_cid| candidate scores —
     but scored as ONE BLAS matmul PER LIST, not per candidate row:
     probe rows and posting rows COGROUP on ``ivf_cid``
-    (applyInPandas), each group computes the |Q_cid| × |list_cid|
-    cosine matrix with numpy and emits only its LOCAL top-k per query
-    (stable argsort over id-sorted postings — cosine desc, id-asc
-    ties, the exact order of the collect path's rank window), and the
-    global window then ranks q × nprobe × k partial rows instead of
-    the full candidate set. The row-at-a-time HOF cosine the collect
-    path uses is the right price at its bounded candidate volume;
-    at 100k+ queries the candidate count reaches 10^8-10^9 and the
-    interpreted per-row fold becomes THE bottleneck — this is the
-    knn_join blocked-matmul design applied to the persisted index.
+    (applyInPandas), each group scores its |Q_cid| × |list_cid| block
+    with :func:`~.similarity._block_topk` — the knn_join kernel — and
+    emits only its LOCAL top-k per query, and the global window then
+    ranks q × nprobe × k partial rows instead of the full candidate
+    set. The row-at-a-time HOF cosine the collect path uses is the
+    right price at its bounded candidate volume; at 100k+ queries the
+    candidate count reaches 10^8-10^9 and the interpreted per-row fold
+    becomes THE bottleneck.
 
     What changes at 100 TB scale: no driver memory in the picture
     (query vectors never leave the cluster), candidates never shuffle
@@ -442,23 +433,20 @@ def ivf_index_topk_batch_distributed(
     table-sized EXACT search use ``similarity.knn_join``. The
     cogroup's parallelism is bounded by nlist keys; AQE's skew split
     handles a hot list. NULL/ragged query vectors rank nothing (they
-    are dropped at probe selection, matching the collect path); an
+    are dropped at probe selection, as on the collect path); an
     empty query frame returns an empty result instead of the collect
     path's ValueError (there is nothing to collect here)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .splits import top_k_per_group
-
     dim = int(index.manifest["dim"])
-    nlist = len(index.centroids)
-    nprobe = min(nprobe, nlist)
+    nprobe = min(nprobe, len(index.centroids))
     cents = np.asarray(index.centroids, dtype=np.float64)
     cents_sq = (cents * cents).sum(axis=1)
 
     qid_type = queries.schema[id_col].dataType
-    # ONE row per query out of Python: the vector as a packed
+    # ONE row per query out of Python: the unit vector as a packed
     # float64 blob plus the nprobe probed cids as an array. The
     # (query × nprobe) duplication happens JVM-side via explode —
     # at production nprobe (nlist/5 at constant recall fraction,
@@ -485,109 +473,58 @@ def ivf_index_topk_batch_distributed(
             ]
             if not raw:
                 continue
-            q = np.asarray([v for _, v in raw], dtype=np.float64)
-            norms = np.sqrt((q * q).sum(axis=1, keepdims=True))
-            qn = np.where(norms > 0, q / np.where(norms == 0, 1, norms), q)
+            qn = _unit_rows(np.asarray([v for _, v in raw], dtype=np.float64))
             # squared L2 to every centroid in one matmul; stable
             # argsort breaks distance ties by cid ascending — the
             # exact sorted((dist, cid)) order of _probe_cids
             d = qn @ cents.T
             d = (qn * qn).sum(axis=1, keepdims=True) + cents_sq - 2.0 * d
             order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-            order = order.astype("int32")
             yield pd.DataFrame(
                 {
                     id_col: [qid for qid, _ in raw],
-                    "__qvec": [q[i].tobytes() for i in range(len(raw))],
-                    "__cids": list(order),
+                    "__qvec": [row.tobytes() for row in qn],
+                    "__cids": list(order.astype("int32")),
                 }
             )
 
     probes = (
         queries.select(id_col, vec_col)
         .mapInPandas(probe_batches, probe_schema)
-        .select(
-            id_col, "__qvec", F.explode("__cids").alias("ivf_cid")
-        )
+        .select(id_col, "__qvec", F.explode("__cids").alias("ivf_cid"))
     )
-    if index.manifest["quantized"]:
-        # cast to double BEFORE Arrow: dequantize yields array<float>,
-        # and a float32 matmul would diverge from the collect path's
-        # per-element double fold at ~1e-8 (caught by the quantized
-        # parity test)
-        pvec = dequantize_embedding(F.col("qvec")).cast("array<double>")
-    else:
-        pvec = F.col("vec").cast("array<double>")
     posts = index.postings.select(
-        "ivf_cid", "id", pvec.alias("__pvec")
+        "ivf_cid", "id", _posting_vec(index).alias("__pvec")
     )
-    id_type = posts.schema["id"].dataType
     out_schema = T.StructType(
         [
             T.StructField(id_col, qid_type, True),
-            T.StructField("id", id_type, True),
+            T.StructField("id", posts.schema["id"].dataType, True),
             T.StructField("cosine", T.DoubleType(), True),
         ]
     )
 
     def score_list(_key, probe_pdf, post_pdf):
-        post_pdf = post_pdf[
-            post_pdf["__pvec"].map(
-                lambda v: v is not None and len(v) == dim
-            )
-        ]
         if probe_pdf.empty or post_pdf.empty:
-            return pd.DataFrame(
-                {id_col: [], "id": [], "cosine": []}
-            )
-        # id-ASCENDING posting order: stable selections below then
-        # break cosine ties by id asc — the collect path's exact order
-        post_pdf = post_pdf.sort_values("id", kind="stable")
-        p = np.stack(
-            post_pdf["__pvec"].map(np.asarray).to_numpy()
-        ).astype(np.float64, copy=False)
+            return pd.DataFrame({id_col: [], "id": [], "cosine": []})
+        post_pdf = post_pdf[
+            post_pdf["__pvec"].map(lambda v: v is not None and len(v) == dim)
+        ].sort_values("id", kind="stable")
         # decode the packed float64 blobs in one frombuffer — no
         # per-element boxing on the hot side of the cogroup
         q = np.frombuffer(
             b"".join(probe_pdf["__qvec"]), dtype=np.float64
         ).reshape(-1, dim)
-        pn = np.sqrt((p * p).sum(axis=1))
-        qn = np.sqrt((q * q).sum(axis=1))
-        denom = qn[:, None] * pn[None, :]
-        s = q @ p.T
-        s = np.where(denom > 0, s / np.where(denom == 0, 1, denom), 0.0)
-        nq, ncand = s.shape
-        top = min(k, ncand)
-        if ncand <= top:
-            mask = np.ones_like(s, dtype=bool)
-        else:
-            # O(ncand) selection instead of a full per-row argsort
-            # (the sort was the kernel's dominant cost at list sizes
-            # in the thousands): argpartition finds each row's k-th
-            # value, and EVERY candidate >= that threshold is emitted
-            # — a small superset of top-k that includes all boundary
-            # ties, so the global rank window (cosine desc, id asc)
-            # still picks the exact winners. Dedup-style corpora make
-            # boundary ties common (scaled replicas share cosines),
-            # so tie-pathological rows (huge plateaus, e.g. all-equal
-            # scores) fall back to an exact stable sort of just that
-            # row to bound the emitted superset.
-            part = np.argpartition(-s, top - 1, axis=1)[:, :top]
-            thr = np.take_along_axis(s, part, axis=1).min(axis=1)
-            mask = s >= thr[:, None]
-            counts = mask.sum(axis=1)
-            for i in np.nonzero(counts > top + 64)[0]:
-                order = np.argsort(-s[i], kind="stable")[:top]
-                mask[i, :] = False
-                mask[i, order] = True
-        rows, cols = np.nonzero(mask)
-        ids = post_pdf["id"].to_numpy()
+        qi, ids, sc = _block_topk(
+            q,
+            post_pdf["id"].to_numpy(),
+            np.stack(post_pdf["__pvec"].map(np.asarray).to_numpy()).astype(
+                np.float64, copy=False
+            ),
+            k,
+        )
         return pd.DataFrame(
-            {
-                id_col: probe_pdf[id_col].to_numpy()[rows],
-                "id": ids[cols],
-                "cosine": s[rows, cols],
-            }
+            {id_col: probe_pdf[id_col].to_numpy()[qi], "id": ids, "cosine": sc}
         )
 
     partial = (
@@ -595,9 +532,7 @@ def ivf_index_topk_batch_distributed(
         .cogroup(posts.groupBy("ivf_cid"))
         .applyInPandas(score_list, out_schema)
     )
-    return top_k_per_group(
-        partial, [id_col], "cosine", k, tiebreak=["id"]
-    )
+    return _topk(partial, k, "id", by=[id_col])
 
 
 def _derived_manifest(
@@ -878,7 +813,6 @@ def split_ivf_hot_lists(
     ``split`` audit block mapping each split cid to its new cids."""
     index_dir = require_local(spark, index_dir, "split_ivf_hot_lists")
     out_dir = require_local(spark, out_dir, "split_ivf_hot_lists")
-    import math as _math
 
     if os.path.normpath(out_dir) == os.path.normpath(index_dir):
         raise ValueError(
@@ -932,7 +866,7 @@ def split_ivf_hot_lists(
 
     def _fit_one(cid: int):
         k_sub = max(
-            2, _math.ceil(sizes[cid] / (target_factor * mean))
+            2, math.ceil(sizes[cid] / (target_factor * mean))
         )
         pruned = idx.postings.where(F.col("ivf_cid") == cid)
         return cid, _centroid_rows(
@@ -2328,13 +2262,11 @@ def faiss_handoff(index_dir: str):
                     for v in batch.column(names.index("vec")).to_pylist()
                 ]
             )
-        norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
         ids = batch.column(names.index("id")).to_numpy().astype(np.int64)
         cids = batch.column(names.index("ivf_cid")).to_numpy().astype(np.int64)
         index.add_core(
             len(ids),
-            faiss.swig_ptr(np.ascontiguousarray(vecs / norms)),
+            faiss.swig_ptr(np.ascontiguousarray(_unit_rows(vecs))),
             faiss.swig_ptr(ids),
             faiss.swig_ptr(cids),
         )

@@ -46,3 +46,24 @@ def sf_dir() -> str:
 
 def load(spark, sf_dir: str, name: str):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+@pytest.fixture(scope="session")
+def topk_data(spark, tmp_path_factory):
+    """(corpus, queries, index) of ``tests/_topk_entries.py``, built once
+    for the top-k behaviour and plan tests."""
+    from ._topk_entries import build
+
+    return build(spark, str(tmp_path_factory.mktemp("topk") / "idx"))
+
+
+@pytest.fixture(scope="session")
+def topk_frames(topk_data):
+    """{entry point: its top-K frame} over ``topk_data``, the literal
+    query being query 1000's vector; built once (knn_join and
+    ivf_index_topk_batch collect their queries while building)."""
+    from ._topk_entries import K, PER_LEFT, SINGLE, call
+
+    _, queries, _ = topk_data
+    q = [float(x) for x in queries.where("query_id = 1000").first()[1]]
+    return {name: call(name, *topk_data, q, K) for name in SINGLE + PER_LEFT}

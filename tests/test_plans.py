@@ -6,8 +6,12 @@ regression would be invisible at test scale but fatal in production."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
+
+from ._topk_entries import PER_LEFT, SINGLE
 
 SF = "/root/testdata/sf0.001"
 
@@ -198,15 +202,26 @@ def test_sample_query_reads_cache_with_partial_top_k(spark, tmp_path):
     assert any("Exchange" in line for line in lines[:partial[0]]), plan
 
 
-def test_topk_uses_take_ordered_not_full_sort(spark):
-    """orderBy().limit(k) must plan as TakeOrderedAndProject (bounded
-    driver traffic), never a global sort."""
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = e.select("vec_id", F.size("embedding").alias("d")).orderBy(
-        F.col("d").desc()
-    ).limit(5)
-    plan = _initial_plan(q)
-    assert "TakeOrderedAndProject" in plan, plan
+@pytest.mark.parametrize("name", SINGLE + PER_LEFT)
+def test_topk_uses_take_ordered_not_full_sort(topk_frames, name):
+    """Every cosine top-k entry point of the library cuts its top-k
+    without a global sort: one query's top-k plans as exactly one
+    TakeOrderedAndProject (per-partition heap + driver merge of k·P
+    rows) and no Window; a top-k per left row plans its row_number
+    window with a partial WindowGroupLimit ahead of the shuffle."""
+    plan = _initial_plan(topk_frames[name])
+    nodes = [
+        re.match(r"[\s:+\-]*(?:\*\(\d+\)\s*)?(\w*)", line).group(1)
+        for line in plan.splitlines()
+    ]
+    if name in SINGLE:
+        assert nodes.count("TakeOrderedAndProject") == 1, plan
+        assert "Window" not in nodes and "Sort" not in nodes, plan
+    else:
+        assert any(
+            n == "WindowGroupLimit" and line.rstrip().endswith("Partial")
+            for n, line in zip(nodes, plan.splitlines())
+        ), plan
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):

@@ -10,7 +10,7 @@ import datetime as dt
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, seed, settings, strategies as st
+from hypothesis import HealthCheck, example, given, seed, settings, strategies as st
 from pyspark.sql import functions as F
 
 from goodtables_pandas_py_spark.parsers import parse_field
@@ -352,6 +352,21 @@ def test_pair_components_matches_union_find(spark, edges):
         max_size=14,
     ),
     st.integers(min_value=1, max_value=4),
+)
+# power-of-two copies of one vector (exact cosine ties on every path),
+# a NULL, a ragged and a zero-norm row
+@example(
+    vecs=[
+        [1.0, 2.0, 0.0, -1.0],
+        [2.0, 4.0, 0.0, -2.0],
+        None,
+        [0.5, 1.0, 0.0, -0.5],
+        [1.0, 1.0, 1.0],
+        [0.0, 0.0, 0.0, 0.0],
+        [-1.0, 0.5, 2.0, 0.25],
+        [4.0, 8.0, 0.0, -4.0],
+    ],
+    k=2,
 )
 @seed(13)
 def test_knn_join_blocked_matches_loop_oracle(spark, vecs, k):

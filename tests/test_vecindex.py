@@ -413,8 +413,12 @@ def test_distributed_batch_topk_matches_collect_path(
             F.col("query_id") % 5 == 1, F.slice("embedding", 1, 3)
         ).otherwise(F.col("embedding")),
     )
-    got = ivf_index_topk_batch_distributed(idx, dirty, k=3, nprobe=2)
-    qids = {r["query_id"] for r in got.select("query_id").collect()}
+    # NULL and ragged (3 of 64 wide) queries rank nothing on BOTH paths
+    got = snap(ivf_index_topk_batch_distributed(idx, dirty, k=3, nprobe=2))
+    assert got == snap(
+        ivf_index_topk_batch(idx, dirty, k=3, nprobe=2, max_queries=100_000)
+    )
+    qids = {r[0] for r in got}
     assert all(q % 5 not in (0, 1) for q in qids)
     assert qids, "valid queries must still rank"
 
@@ -422,6 +426,21 @@ def test_distributed_batch_topk_matches_collect_path(
         idx, queries.limit(0), k=3
     )
     assert empty.count() == 0
+
+
+def test_wrong_width_query_raises(spark, emb, index_dir):
+    """A query whose width is not the index's is refused by the one
+    IVF probe, on the persisted index as on ivf_topk — not truncated
+    into k rows of NULL cosines."""
+    from goodtables_pandas_py_spark.extensions.similarity import ivf_topk
+
+    d, _ = index_dir
+    idx = read_ivf_index(spark, d)
+    q = _query_vec(emb)[:3]
+    with pytest.raises(ValueError, match="3 dims but the centroids have 64"):
+        ivf_index_topk(idx, q, k=3)
+    with pytest.raises(ValueError, match="3 dims but the centroids have 64"):
+        ivf_topk(emb, q, k=3, centroids=idx.centroids)
 
 
 def test_distributed_batch_topk_plan_has_no_collect_or_nested_loop(
