@@ -35,10 +35,11 @@ part (none, RP buckets, IVF centroids, persisted IVF lists; IVF
 probes go through :func:`_probe_cids`). A literal query is scored by
 :func:`_exact_topk`; a set of queries by the numpy block scorer
 :func:`_block_topk`. :func:`_topk` owns the tie rule (cosine desc,
-NULL last, id asc) and the ``k >= 1`` check (ValueError, raised
-before any job): one query's top-k plans as TakeOrderedAndProject
-(per-partition heap + driver merge of k·P rows — no full sort, no
-full shuffle), a top-k per left row as a partial WindowGroupLimit.
+NULL last, id asc; a NaN score reads and ranks as NULL) and the
+``k >= 1`` check (ValueError, raised before any job): one query's
+top-k plans as TakeOrderedAndProject (per-partition heap + driver
+merge of k·P rows — no full sort, no full shuffle), a top-k per left
+row as a partial WindowGroupLimit.
 """
 
 from __future__ import annotations
@@ -128,12 +129,16 @@ def _topk(
 ) -> DataFrame:
     """The best ``k`` rows of ``scored`` by its ``cosine`` column —
     overall, or per group of ``by`` — under the one tie rule: cosine
-    desc, NULL last, then ``id_col`` asc. Without ``by`` it is
-    ``orderBy(...).limit(k)``, which plans as TakeOrderedAndProject;
-    with ``by`` it is :func:`~.splits.top_k_per_group`'s row_number
-    window, which plans as a partial WindowGroupLimit before the
-    shuffle."""
+    desc, NULL last, then ``id_col`` asc. A NaN score (a NaN or inf
+    vector element) reads and ranks as NULL, as it leaves Arrow from
+    the numpy scorer; Spark alone would rank it above every cosine.
+    Without ``by`` it is ``orderBy(...).limit(k)``, which plans as
+    TakeOrderedAndProject; with ``by`` it is
+    :func:`~.splits.top_k_per_group`'s row_number window, which plans
+    as a partial WindowGroupLimit before the shuffle."""
     _check_k(k)
+    c = F.col("cosine")
+    scored = scored.withColumn("cosine", F.when(~F.isnan(c), c))
     if by is None:
         return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
     from .splits import top_k_per_group
@@ -178,6 +183,10 @@ def _unit_rows(m: np.ndarray) -> np.ndarray:
     return m / np.where(n > 0, n, 1.0)[:, None]
 
 
+# the rank of a NaN score: below every cosine, above an excluded pair
+_NAN_RANK = -2.0
+
+
 def _block_topk(
     q: np.ndarray,
     ids: np.ndarray,
@@ -194,12 +203,19 @@ def _block_topk(
     Returns (query row, candidate id, cosine) arrays with exactly
     min(k, scorable) rows per query, the best under cosine desc, id
     asc; the global :func:`_topk` window over every block's output
-    is then exact. Selection: ``np.partition`` finds each query's
-    k-th score, everything above it is kept, and only queries with
-    ties AT that score cut the tied run by position (= by id). That
-    measured as fast as the argpartition superset and 3–5× faster
-    than a stable argsort per query (CHANGES.md)."""
-    s = q @ _unit_rows(rows).T  # nq × n
+    is then exact. A NaN score (a NaN or inf element on either side)
+    ranks as :func:`_topk` ranks it, as NULL: after every cosine, by
+    id; it leaves Arrow as NULL. Selection: ``np.partition`` finds
+    each query's k-th score, everything above it is kept, and only
+    queries with ties AT that score cut the tied run by position
+    (= by id). That measured as fast as the argpartition superset and
+    3–5× faster than a stable argsort per query (CHANGES.md)."""
+    r = _unit_rows(rows)
+    s = q @ r.T  # nq × n
+    # unit rows hold no inf, so only a NaN input makes a NaN score
+    nan = np.isnan(s) if np.isnan(q).any() or np.isnan(r).any() else None
+    if nan is not None:
+        s[nan] = _NAN_RANK
     if self_pairs is not None:
         s[self_pairs] = -np.inf
     top = min(k, s.shape[1])
@@ -213,7 +229,21 @@ def _block_topk(
         keep[tied] = gt | (eq & (np.cumsum(eq, axis=1) <= room))
     keep &= s > -np.inf
     qi, ci = np.nonzero(keep)
-    return qi, ids[ci], s[qi, ci]
+    sc = s[qi, ci]
+    if nan is not None:
+        sc[nan[qi, ci]] = np.nan
+    return qi, ids[ci], sc
+
+
+def _merge_topk(qi: np.ndarray, ids: np.ndarray, sc: np.ndarray, k: int):
+    """Each query's best k of several :func:`_block_topk` outputs
+    (concatenated), under the same order: cosine desc, NaN as NULL,
+    id asc."""
+    o = np.lexsort((ids, -np.where(np.isnan(sc), _NAN_RANK, sc), qi))
+    sq = qi[o]
+    # a row's rank in its query: its distance from the query's first row
+    o = o[np.arange(len(o)) - np.searchsorted(sq, sq) < k]
+    return qi[o], ids[o], sc[o]
 
 
 def _modal_dim(df: DataFrame, vec_col: str):
@@ -503,11 +533,13 @@ def knn_join(
     once per executor as a numpy matrix via a Spark broadcast. One
     ``mapInPandas`` pass over the item side scores each Arrow batch
     with :func:`_block_topk` (one BLAS matmul, batch rows sorted by
-    id) and emits each query's local top-k, plus the k+1 smallest ids
-    of the partition's null-scoring rows as NULL pads; the global
-    :func:`_topk` window (a partial WindowGroupLimit before its
-    shuffle) makes the result exact. Work is O(n·q) FLOPs — inherent
-    to exact kNN — but fully distributed, vectorized, and
+    id), merges the batches' answers with :func:`_merge_topk`, and
+    emits each query's top-k in the partition — at most k rows per
+    query per partition, however many batches it spans — plus the
+    k+1 smallest ids of the partition's null-scoring rows as NULL
+    pads; the global :func:`_topk` window (a partial WindowGroupLimit
+    before its shuffle) makes the result exact. Work is O(n·q) FLOPs
+    — inherent to exact kNN — but fully distributed, vectorized, and
     shuffle-light (candidates only, never n×q pairs). This replaces
     the r4 broadcast-nested-loop baseline (VERDICT r4 §wrong 2).
 
@@ -572,6 +604,7 @@ def knn_join(
         # whole answer); one of them may be the query itself
         null_pool: list = []
         all_pool: list = []
+        best = None  # the partition's top-k per query so far
         for pdf in batches:
             rid = pdf.iloc[:, 0].values
             vec = pdf.iloc[:, 1].values
@@ -585,13 +618,18 @@ def knn_join(
             ids = rid[ok][order]
             # a row never matches its own id
             hit = np.nonzero(np.isin(ids, qids_b))[0]
-            qi, rr, sc = _block_topk(
+            got = _block_topk(
                 q_b,
                 ids,
                 np.stack(vec[ok][order]).astype(np.float64),
                 k,
                 ([qpos[ids[c]] for c in hit], hit),
             )
+            if best is not None:
+                got = _merge_topk(*map(np.concatenate, zip(best, got)), k)
+            best = got
+        if best is not None:
+            qi, rr, sc = best
             yield pd.DataFrame(
                 {"left_id": qids_b[qi], "right_id": rr, "cosine": sc}
             )

@@ -84,13 +84,28 @@ def _per_left(df, left, right):
     }
 
 
-def test_per_left_entries_agree_exactly(topk_frames, exact):
+@pytest.fixture
+def arrow_batch(spark):
+    """Set the Arrow batch size (rows) of the session for one test."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    yield lambda n: spark.conf.set(key, str(n))
+    spark.conf.set(key, old)
+
+
+def test_per_left_entries_agree_exactly(
+    topk_data, topk_frames, exact, arrow_batch
+):
     """Per left row, knn_join blocked, its loop twin, and both batch
     serves at nprobe = nlist return the same ids and cosines (to 1e-9:
     numpy and Spark sum in different orders), and so does cosine_topk
     per query. NULL and ragged query rows: knn_join scores them NULL
     against every row (the k smallest ids), both batch serves drop
-    them. similarity_join finds most of the exact answer."""
+    them. similarity_join finds most of the exact answer. knn_join
+    answers the same when a partition spans several Arrow batches:
+    the scan merges their top-k, ties across batches included (the
+    tied run 0, 40, 41, 42 lands in different batches of three
+    rows)."""
     def run(name, left="left_id", right="right_id"):
         return _per_left(topk_frames[name], left, right)
 
@@ -106,3 +121,44 @@ def test_per_left_entries_agree_exactly(topk_frames, exact):
     approx = run("similarity_join")
     found = sum(len(set(approx.get(q, [])) & set(blocked[q])) for q in exact)
     assert found >= 6, found
+    corpus, queries, _ = topk_data
+    arrow_batch(3)
+    left = queries.withColumnRenamed("query_id", "vec_id")
+    got = xs.knn_join(left, corpus, k=K)
+    assert _per_left(got, "left_id", "right_id") == blocked
+
+
+def test_nan_score_ranks_as_null_and_keeps_the_block(
+    spark, tmp_path, arrow_batch
+):
+    """A vector with a NaN or inf element scores NaN, and a NaN score
+    reads and ranks as NULL: after every cosine, by id. The numpy
+    block scorer keeps a block with fewer than k other candidates
+    whole (a NaN k-th score once emptied it). One partition and one
+    IVF list; two-row Arrow batches give knn_join blocks of fewer
+    than k candidates. The Spark-scored entries share _topk's NaN
+    rule; cosine_topk stands for them."""
+    nan, inf = float("nan"), float("inf")
+    corpus = spark.createDataFrame(
+        [
+            (0, [nan, 1.0, 0.0]),
+            (1, [1.0, 0.0, 0.0]),
+            (2, [3.0, 4.0, 0.0]),
+            (3, [inf, 0.0, 1.0]),
+            (4, [0.0, 1.0, 0.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    queries = spark.createDataFrame(
+        [(100, [1.0, 0.0, 0.0])], "query_id long, embedding array<double>"
+    )
+    idx = str(tmp_path / "idx")
+    xv.write_ivf_index(corpus, idx, centroids=[[1.0, 0.0, 0.0]])
+    index = xv.read_ivf_index(spark, idx)
+    want = [(1, 1.0), (2, 0.6), (4, 0.0), (0, None)]
+    arrow_batch(2)
+    entries = ("cosine_topk", "knn_join", "ivf_index_topk_batch_distributed")
+    for name in entries:
+        got = call(name, corpus, queries, index, [1.0, 0.0, 0.0], 4)
+        rows = [tuple(r)[-2:] for r in got.collect()]
+        assert sorted(rows, key=lambda r: _tie_rule(r[::-1])) == want, name
